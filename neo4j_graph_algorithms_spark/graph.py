@@ -231,6 +231,7 @@ class Graph:
     edges: DataFrame  # (src: long, dst: long, weight: double)
     _cached: list[DataFrame] = field(default_factory=list, repr=False)
     _id_type: str | None = field(default=None, repr=False, compare=False)
+    _node_count: int | None = field(default=None, repr=False, compare=False)
 
     @classmethod
     def from_edges(
@@ -326,7 +327,12 @@ class Graph:
         return self._id_type
 
     def node_count(self) -> int:
-        return self.nodes.count()
+        """Memoized like `id_type`: kernels chained on one snapshot
+        (WCC, the triangle broadcast decision, PageRank) share one
+        count job."""
+        if self._node_count is None:
+            self._node_count = self.nodes.count()
+        return self._node_count
 
     def edge_count(self) -> int:
         return self.edges.count()

@@ -17,15 +17,20 @@ wedge-close plan:
    power-law graphs; ``by_degree=False`` keeps the cheaper low-id ->
    high-id orientation, which skips the degree join but lets a hub's
    wedge fan-out grow with its degree squared)
-2. wedges = oriented ⨝ oriented on (e1.dst == e2.src) → (a<b<c) paths
+2. wedges = oriented ⨝ oriented on (e1.dst == e2.src) → (a, b, c) paths
 3. close each wedge against the oriented edge set on (a, c)
 
-Per-vertex counts explode the 3 corners of each triangle; the local
-clustering coefficient is ``C(v) = 2·T(v) / (deg(v)·(deg(v)−1))``
-with C=0 when deg<2 (`TriangleCountBase.java:106-115`), and
-``averageClusteringCoefficient = mean(C)``
-(`TriangleCountQueue.java:71-81`; formula fixture
-`tests/.../impl/ClusteringCoefficientWikiTest.java:38-58`).
+`triangle_count` runs with AQE off and persists the oriented set once
+(the wedge join reads it twice, the close once). Per-vertex counts
+explode the 3 corners of each closed wedge into one groupBy, and one
+aggregate over the persisted per-node frame gives
+``triangleCount = ΣT(v)/3`` and the mean of the local clustering
+coefficient ``C(v) = 2·T(v) / (deg(v)·(deg(v)−1))``, C=0 when deg<2
+(`TriangleCountBase.java:106-115`; ``averageClusteringCoefficient``
+`TriangleCountQueue.java:71-81`; formula fixture
+`tests/.../impl/ClusteringCoefficientWikiTest.java:38-58`). AQE off
+gives up its runtime skew-join split; the degree orientation is the
+structural skew guard, as in every iterative kernel here.
 
 `triangle_stream` emits the (a, b, c) triples themselves —
 `algo.triangle.stream` (`impl/TriangleStream.java:95-160`).
@@ -39,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, degrees, undirect
+from ..plans.checkpointing import adaptive_disabled
 
 
 _BROADCAST_DEGREE_MAX_NODES = 5_000_000
@@ -52,8 +58,8 @@ def _oriented(
     Ids are int-compressed when they fit int32 (shared Heavy-vs-Huge
     analogue, cached per snapshot via graph.id_type): the wedge
     self-join and the left_semi close are the two big shuffles of the
-    plan, and both move a third fewer bytes on int tuples.
-    `triangle_stream` casts the emitted triples back to long."""
+    plan, and both move a third fewer bytes on int tuples. Both callers
+    cast the ids they emit back to long."""
     edges = graph.edges
     if graph.id_type() == "int":
         edges = edges.select(
@@ -97,26 +103,22 @@ def _oriented(
     return ori.select("src", "dst"), deg
 
 
+def _close_wedges(ori: DataFrame) -> DataFrame:
+    """(a, b, c) for every oriented wedge a→b→c closed by the edge a→c."""
+    e1 = ori.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    e2 = ori.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    e3 = ori.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    return e1.join(e2, "b").join(e3, ["a", "c"], "left_semi")
+
+
 def triangle_stream(
-    graph: Graph, by_degree: bool = True, _oriented_deg=None,
-    broadcast_degrees: bool | None = None,
+    graph: Graph, by_degree: bool = True, broadcast_degrees: bool | None = None
 ) -> DataFrame:
     """All triangles as (a, b, c) rows, each unordered triple once,
     corners sorted ascending (deterministic; ref TriangleStream emits
     node-id ordered triples from the u<s<t scan)."""
-    ori, _ = (
-        _oriented_deg if _oriented_deg is not None
-        else _oriented(graph, by_degree, broadcast_degrees)
-    )
-    e1 = ori.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = ori.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = ori.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    wedges = e1.join(e2, "b")
-    tri = wedges.join(e3, ["a", "c"], "left_semi").select(
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("c").cast("long").alias("c"),
-    )
+    ori, _ = _oriented(graph, by_degree, broadcast_degrees)
+    tri = _close_wedges(ori).select(*(F.col(c).cast("long").alias(c) for c in "abc"))
     if by_degree:
         # degree orientation breaks id order inside triples — restore it
         tri = tri.select(
@@ -135,46 +137,42 @@ def triangle_count(
     surface of `algo.triangleCount` + coefficient write-back
     (`algo/.../TriangleProc.java:58-298`)."""
     t0 = time.time()
-    # one orientation pass: the (oriented, degree) pair feeds both the
-    # wedge-close plan and the coefficient denominator — the undirected
-    # doubling + degree agg is computed once, not once per consumer
-    ori_deg = _oriented(graph, by_degree, broadcast_degrees)
-    tri = triangle_stream(graph, by_degree=by_degree, _oriented_deg=ori_deg).persist()
-    total = tri.count()
-
-    corners = (
-        tri.select(F.col("a").alias("id"))
-        .unionByName(tri.select(F.col("b").alias("id")))
-        .unionByName(tri.select(F.col("c").alias("id")))
-    )
-    per_node_t = corners.groupBy("id").agg(F.count("*").alias("triangles"))
-
-    # deg may carry int-compressed ids — back to long for the node join
-    deg = ori_deg[1].select(F.col("id").cast("long").alias("id"), "degree")
-    per_node = (
-        graph.nodes.select("id")
-        .join(per_node_t, "id", "left")
-        .join(deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"),
-            F.col("degree"),
+    with adaptive_disabled(graph.edges.sparkSession):
+        ori, deg = _oriented(graph, by_degree, broadcast_degrees)
+        ori = ori.persist()
+        per_node_t = (
+            _close_wedges(ori)
+            .select(F.explode(F.array("a", "b", "c")).alias("id"))
+            .groupBy("id")
+            .count()
+            .select(F.col("id").cast("long").alias("id"), F.col("count").alias("triangles"))
         )
-        .withColumn(
-            "coefficient",
-            F.when(
-                F.coalesce(F.col("degree"), F.lit(0)) >= 2,
-                2.0 * F.col("triangles") / (F.col("degree") * (F.col("degree") - 1)),
-            ).otherwise(F.lit(0.0)),
+        # deg may carry int-compressed ids — back to long for the node join
+        deg = deg.select(F.col("id").cast("long").alias("id"), "degree")
+        per_node = (
+            graph.nodes.select("id")
+            .join(per_node_t, "id", "left")
+            .join(deg, "id", "left")
+            .select(
+                "id",
+                F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"),
+                F.col("degree"),
+            )
+            .withColumn(
+                "coefficient",
+                F.when(
+                    F.coalesce(F.col("degree"), F.lit(0)) >= 2,
+                    2.0 * F.col("triangles") / (F.col("degree") * (F.col("degree") - 1)),
+                ).otherwise(F.lit(0.0)),
+            )
+            .drop("degree")
+            .persist()
         )
-        .drop("degree")
-    )
-    per_node = per_node.persist()
-    avg = per_node.agg(F.avg("coefficient")).collect()[0][0] or 0.0
+        corners, avg = per_node.agg(F.sum("triangles"), F.avg("coefficient")).collect()[0]
+        ori.unpersist()
     stats = {
-        "triangleCount": total,
-        "averageClusteringCoefficient": float(avg),
+        "triangleCount": (corners or 0) // 3,
+        "averageClusteringCoefficient": float(avg or 0.0),
         "computeMillis": int((time.time() - t0) * 1000),
     }
-    tri.unpersist()
     return per_node, stats

@@ -41,7 +41,7 @@ def sessionize(
     """(user_id, session_id, n_events, first_ts, last_ts [, sum_value]):
     one row per (user, session), session boundaries wherever the gap
     between consecutive events exceeds ``gap_minutes``."""
-    gap_us = int(gap_minutes * 60) * 1_000_000
+    gap_us = int(round(gap_minutes * 60 * 1_000_000))
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
     # NTZ columns can't feed unix_micros directly; the cast
     # reinterprets in the session timezone (pinned UTC in

@@ -125,6 +125,7 @@ def test_triangles_match_numpy_oracle(spark, rg):
     per_node, stats = triangle_count(g)
     assert stats["triangleCount"] == exp_total
     got = {r["id"]: r["triangles"] for r in per_node.collect()}
+    assert stats["triangleCount"] * 3 == sum(got.values())
     for i in range(N):
         assert got[i] == exp_per[i], (i, got[i], exp_per[i])
 

@@ -172,6 +172,17 @@ def test_betweenness_layers_checkpointed_once(spark, monkeypatch):
 # ------------------------------------------------------------- id-type cache
 
 
+def test_graph_node_count_memoized(spark, count_jobs):
+    g = Graph.from_edges(
+        spark.createDataFrame([(1, 2, 1.0), (2, 3, 1.0)], "src long, dst long, weight double")
+    )
+    first, jobs_first = count_jobs(g.node_count)
+    second, jobs_second = count_jobs(g.node_count)
+    assert first == second == 3
+    assert jobs_first >= 1
+    assert jobs_second == 0  # memoized on the snapshot
+
+
 def test_graph_id_type_cached_and_bounded(spark):
     small = Graph.from_edges(
         spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, weight double")

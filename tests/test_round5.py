@@ -219,6 +219,29 @@ def test_sessionize_hand_fixture(spark):
     }
 
 
+def test_sessionize_sub_second_gap(spark):
+    """A 1.5 s gap threshold is not truncated to whole seconds: a 1.6 s
+    gap starts a new session, a 1.4 s gap does not."""
+    from datetime import datetime, timedelta
+
+    from neo4j_graph_algorithms_spark.pipeline.sessionize import sessionize
+
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (1, 10, t0, 1.0),
+        (2, 10, t0 + timedelta(seconds=1.4), 2.0),  # same session
+        (3, 10, t0 + timedelta(seconds=3.0), 4.0),  # +1.6 s -> new session
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp_ntz, value double"
+    )
+    out = {
+        r.session_id: (r.n_events, r.sum_value)
+        for r in sessionize(ev, gap_minutes=1.5 / 60).collect()
+    }
+    assert out == {1: (2, 3.0), 2: (1, 4.0)}
+
+
 # ----------------------------------------------- wcc pointer-jump knob
 
 

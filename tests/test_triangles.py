@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+import random
 
 import pytest
 
@@ -84,3 +85,68 @@ def test_directed_duplicate_edges_collapse(spark):
     g = Graph.from_edge_list(spark, edges, n_nodes=3)
     _, stats = triangle_count(g)
     assert stats["triangleCount"] == 1
+
+
+def test_triangle_count_job_budget(spark, count_jobs):
+    """At small inputs the cost is Spark jobs, not rows: the count plus
+    collecting its per-node frame stays within 10 jobs on a snapshot
+    whose id type and node count earlier kernels have already memoized."""
+    rnd = random.Random(29)
+    edges = {(rnd.randrange(80), rnd.randrange(80)) for _ in range(400)}
+    g = Graph.from_edge_list(spark, [e for e in edges if e[0] != e[1]]).cache()
+    g.id_type()
+    g.node_count()
+
+    def run():
+        per_node, stats = triangle_count(g)
+        return per_node.collect(), stats
+
+    (rows, stats), jobs = count_jobs(run)
+    assert stats["triangleCount"] > 0
+    assert stats["triangleCount"] * 3 == sum(r["triangles"] for r in rows)
+    assert jobs <= 10, jobs
+
+
+_PLANS = pytest.mark.parametrize(
+    "by_degree,broadcast_degrees",
+    [(True, True), (True, False), (False, True), (False, False)],
+)
+
+
+@_PLANS
+@pytest.mark.parametrize(
+    "edges,n_nodes",
+    [([], 5), ([], 1), ([(0, 0), (1, 1), (2, 2)], 3)],
+    ids=["no_edges", "single_node", "self_loops_only"],
+)
+def test_triangle_count_degenerate_inputs(spark, edges, n_nodes, by_degree, broadcast_degrees):
+    g = Graph.from_edge_list(spark, edges, n_nodes=n_nodes)
+    per_node, stats = triangle_count(
+        g, by_degree=by_degree, broadcast_degrees=broadcast_degrees
+    )
+    rows = per_node.collect()
+    assert sorted(r["id"] for r in rows) == list(range(n_nodes))
+    assert all(r["triangles"] == 0 and r["coefficient"] == 0.0 for r in rows)
+    assert stats["triangleCount"] == 0
+    assert stats["averageClusteringCoefficient"] == 0.0
+
+
+@_PLANS
+def test_triangle_count_giant_hub(spark, by_degree, broadcast_degrees):
+    """Hub 0 with 200 leaves; leaves 1–20 are paired by 10 disjoint
+    leaf–leaf edges, each closing one triangle with the hub."""
+    leaves = 200
+    edges = [(0, v) for v in range(1, leaves + 1)]
+    edges += [(v, v + 1) for v in range(1, 21, 2)]
+    g = Graph.from_edge_list(spark, edges, n_nodes=leaves + 1)
+    per_node, stats = triangle_count(
+        g, by_degree=by_degree, broadcast_degrees=broadcast_degrees
+    )
+    got = {r["id"]: (r["triangles"], r["coefficient"]) for r in per_node.collect()}
+    assert got[0][0] == 10
+    assert got[0][1] == pytest.approx(20 / (leaves * (leaves - 1)))
+    for v in range(1, 21):
+        assert got[v] == (1, pytest.approx(1.0))
+    for v in range(21, leaves + 1):
+        assert got[v] == (0, 0.0)
+    assert stats["triangleCount"] == 10
