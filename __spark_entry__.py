@@ -737,7 +737,7 @@ verdict AS (
          WHEN lang_pred NOT IN ({langs_in}) THEN 'wrong_language'
     END AS reject_reason
   FROM feat)
-SELECT id, n_chars, n_tokens,
+SELECT id, CAST(n_chars AS INT) AS n_chars, CAST(n_tokens AS INT) AS n_tokens,
        ROUND(alpha_ratio, {ROUND}) AS alpha_ratio,
        ROUND(digit_ratio, {ROUND}) AS digit_ratio,
        ROUND(punct_ratio, {ROUND}) AS punct_ratio,
@@ -1594,9 +1594,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return tree.orderBy("src", "dst")
 
     def q_events_hourly(spark, sf):
+        # date_trunc returns a session-zone timestamp even for the
+        # zone-less `ts` column; cast back so `hour` keeps the input's
+        # wall-clock (NTZ) type, as the oracle's TIMESTAMP does
         ev = _read(spark, sf, "events")
         return ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour"),
+            F.date_trunc("hour", F.col("ts")).cast("timestamp_ntz").alias("hour"),
             "event_type",
         ).agg(
             F.count("*").alias("n_events"),
@@ -1627,22 +1630,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_dedup_pairs": q_ngram_dedup_pairs,
         "ngram_dup_clusters": q_ngram_dup_clusters,
         "filter_corpus": q_filter_corpus,
-        "minhash_dedup_pairs": q_minhash_dedup_pairs,
-        "simhash_pairs": q_simhash_pairs,
-        "ann_lsh_topk": q_ann_lsh_topk,
         "sssp_hops12": q_sssp_hops12,
         "apsp_hops4": q_apsp_hops4,
         "neighborhood_exact": q_neighborhood_exact,
-        "neighborhood_hll": q_neighborhood_hll,
         "kcore45": q_kcore45,
-        "random_walks64": q_random_walks64,
         "node_jaccard": q_node_jaccard,
         "node_overlap": q_node_overlap,
         "graph_summary": q_graph_summary,
         "doc_sample_10pct": q_doc_sample_10pct,
         "doc_sample_stratified": q_doc_sample_stratified,
         "louvain": q_louvain,
-        "louvain_multilevel": q_louvain_multilevel,
         "tfidf_top3": q_tfidf_top3,
         "repeated_ngrams": q_repeated_ngrams,
         "user_sessions": q_user_sessions,
@@ -1660,6 +1657,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mst64": q_mst64,
         "embedding_dup_pairs": q_embedding_dup_pairs,
         "events_hourly": q_events_hourly,
+        # rows-only queries last: the correctness gate checks only the
+        # first 50 queries, and every oracle-backed query must be in them
+        "minhash_dedup_pairs": q_minhash_dedup_pairs,
+        "simhash_pairs": q_simhash_pairs,
+        "ann_lsh_topk": q_ann_lsh_topk,
+        "neighborhood_hll": q_neighborhood_hll,
+        "random_walks64": q_random_walks64,
+        "louvain_multilevel": q_louvain_multilevel,
     }
 
 
@@ -1709,11 +1714,11 @@ SELECT (SELECT count(*) FROM tri) AS triangle_count,
 SELECT sha256(text) AS text_sha256, count(*) AS n_docs
 FROM documents GROUP BY sha256(text)""",
         "token_counts": r"""
-SELECT doc_id, len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens
+SELECT doc_id, CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tokens
 FROM documents""",
         "quality_scores": f"""
 SELECT doc_id,
-       len(text) AS n_chars,
+       CAST(len(text) AS INT) AS n_chars,
        ROUND(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0 / len(text), {ROUND}) AS alpha_ratio,
        ROUND(len(regexp_replace(text, '[^0-9]', '', 'g')) * 1.0 / len(text), {ROUND}) AS digit_ratio,
        ROUND(len(regexp_replace(text, '[^ ]', '', 'g')) * 1.0 / len(text), {ROUND}) AS space_ratio
@@ -1733,7 +1738,7 @@ pairs AS (
          list_dot_product(q.qv, e.v) /
          (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim
   FROM q CROSS JOIN emb e WHERE e.vec_id >= 5)
-SELECT query_id, neighbor_id, ROUND(sim, 4) AS sim, rank FROM (
+SELECT query_id, neighbor_id, ROUND(sim, 4) AS sim, CAST(rank AS INT) AS rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
   FROM pairs) WHERE rank <= 3""",
         "ngram_dup_clusters": _sql_ngram_clusters_unrolled(8),
@@ -1830,7 +1835,7 @@ FROM rk WHERE rank <= 3""",
         "repeated_ngrams": """
 WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
            FROM documents),
-idx AS (SELECT i FROM generate_series(1, 8192) s(i)),
+idx AS (SELECT unnest(generate_series(1, (SELECT max(len(w)) FROM t))) AS i),
 g AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS ngram
       FROM t JOIN idx ON i <= len(w) - 2),
 d AS (SELECT ngram, count(*) AS df FROM g GROUP BY ngram)
@@ -1843,8 +1848,8 @@ f AS (SELECT user_id, event_id, ts, value, e,
                   THEN 1 ELSE 0 END AS ns
       FROM o WINDOW w AS (PARTITION BY user_id ORDER BY e, event_id)),
 s AS (SELECT user_id, ts, value,
-             sum(ns) OVER (PARTITION BY user_id ORDER BY e, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
+             CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY e, event_id
+                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
       FROM f)
 SELECT user_id, session_id, count(*) AS n_events,
        min(ts) AS first_ts, max(ts) AS last_ts,

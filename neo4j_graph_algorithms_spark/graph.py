@@ -21,8 +21,6 @@ and each GraphLoader feature maps to a declarative transformation
   (`GraphLoader.java:552-555`)
 - `asUndirected(true)`           -> union with reversed edges
   (`GraphLoader.java:136-139`)
-- `withSort(true)`               -> `sortWithinPartitions` before CSR build
-  (`AdjacencyMatrix.java:307-321`)
 - `Degrees`                      -> cached groupBy count
   (`api/Degrees.java:29-32`)
 
@@ -35,7 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 SRC, DST, WEIGHT = "src", "dst", "weight"
@@ -126,25 +124,6 @@ def orient(edges: DataFrame, by_degree: DataFrame | None = None) -> DataFrame:
     )
 
 
-def sort_adjacency(
-    edges: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
-    """Standalone `withSort(true)` analogue (ref `GraphLoader.java:131-134`,
-    `AdjacencyMatrix.sortAll:307-321`; Huge always sorts,
-    `HugeGraphImpl.java:51`): co-locate each source's adjacency in one
-    partition and sort it by (src, dst).
-
-    What the sort buys on Spark is what it buys the reference: binary-
-    search `exists` probes and merge-intersections become possible on
-    the materialized layout (parquet written from this frame also
-    delta-encodes dst runs better — the Huge back-end's vlong/delta
-    trick for free), and a CSR build (`plans/partitioning.py`) can scan
-    each group contiguously without re-sorting.
-    """
-    n = num_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    return edges.repartition(n, SRC).sortWithinPartitions(SRC, DST)
-
-
 def degrees(edges: DataFrame, direction: str = "out") -> DataFrame:
     """(id, degree) — ref `api/Degrees.java`, O(1) array read in Java,
     a cached pre-aggregation here (broadcastable when small)."""
@@ -158,6 +137,56 @@ def degrees(edges: DataFrame, direction: str = "out") -> DataFrame:
         )
         return both.groupBy("id").agg(F.count("*").alias("degree"))
     return edges.groupBy(F.col(key).alias("id")).agg(F.count("*").alias("degree"))
+
+
+def distributed_rank(
+    df: DataFrame, col: str = "id", n_buckets: int | None = None
+) -> DataFrame:
+    """(col, _rank): zero-based global rank ordered by `col` over DISTINCT
+    values, with no single-reducer window. Two-level scan:
+
+    1. range-shuffle rows into ordered buckets (`repartitionByRange` —
+       bucket i's values all precede bucket i+1's);
+    2. within-bucket `row_number` (parallel across buckets);
+    3. per-bucket counts -> exclusive bases (n_buckets rows, the only
+       global window) broadcast-joined back.
+
+    This is the IdMapping-scale replacement for `row_number() over
+    (order by col)`: identical output, O(rows/bucket) per task.
+    """
+    spark = df.sparkSession
+    n_buckets = n_buckets or spark.sparkContext.defaultParallelism * 4
+    bucketed = (
+        df.select(col)
+        .repartitionByRange(n_buckets, F.col(col))
+        .withColumn("_bkt", F.spark_partition_id())
+    )
+    w_in = Window.partitionBy("_bkt").orderBy(col)
+    # localCheckpoint (not persist): the two consumers below read the
+    # materialized RDD, and its blocks are released by the context
+    # cleaner once the caller drops the result — a bare persist() here
+    # leaked a cached frame per densify_ids/source-numbering call
+    ranked = bucketed.withColumn("_r_in", F.row_number().over(w_in) - 1).localCheckpoint(
+        eager=True
+    )
+    bases = (
+        ranked.groupBy("_bkt")
+        .agg(F.count("*").alias("_cnt"))
+        .withColumn(
+            "_base",
+            F.coalesce(
+                F.sum("_cnt").over(
+                    Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ),
+        )
+        .select("_bkt", "_base")
+    )
+    return (
+        ranked.join(F.broadcast(bases), "_bkt")
+        .select(F.col(col), (F.col("_r_in") + F.col("_base")).cast("long").alias("_rank"))
+    )
 
 
 def densify_ids(
@@ -174,14 +203,12 @@ def densify_ids(
     graphIds` array).
 
     Scale note: the rank is a *distributed two-level scan*
-    (`plans/partitioning.distributed_rank`): range-bucketed parallel
-    windows + broadcast bucket bases — never a single global window, so
-    the mapping build has no one-reducer bottleneck at 10^12 ids. (The
+    (`distributed_rank`): range-bucketed parallel windows + broadcast
+    bucket bases — never a single global window, so the mapping build
+    has no one-reducer bottleneck at 10^12 ids. (The
     hot ingest path in `sources/link_extract.py` skips ranking entirely
     and hashes.)
     """
-    from .plans.partitioning import distributed_rank
-
     ids = edges.select(F.col(SRC).alias(id_col)).unionByName(edges.select(F.col(DST).alias(id_col)))
     if nodes is not None:
         ids = ids.unionByName(nodes.select(F.col(id_col)))

@@ -99,10 +99,7 @@ def core_decomposition(
     sym.count()
     sym_by_node.count()
 
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
+    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
     start_it = 1
     cur = None
     changed = None

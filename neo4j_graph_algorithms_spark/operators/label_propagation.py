@@ -128,10 +128,7 @@ def label_propagation(
         nw = nodes.select(F.col("id").cast(id_t).alias("id"), F.lit(1.0).alias("nw"))
     nw = nw.persist()
 
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
+    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
     start_it = 1
     labels = None
     if resume and checkpoint_dir:

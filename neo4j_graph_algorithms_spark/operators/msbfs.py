@@ -54,7 +54,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import Graph, undirect
+from ..graph import Graph, distributed_rank, undirect
 from ..plans.checkpointing import adaptive_disabled, check_termination, truncate_plan
 
 # fold the pending lazy result frames into one checkpoint once the list
@@ -71,9 +71,9 @@ def _number_sources(src_nodes: DataFrame) -> DataFrame:
     `spark.range`), batch/bit derive ARITHMETICALLY from the id
     (`batch = (id-min) div 64`, `bit = (id-min) mod 64`) — a pure
     projection, no shuffle at all. Sparse ids fall back to the
-    distributed two-level rank scan (`plans/partitioning.
-    distributed_rank`) — parallel bucket windows + broadcast bases,
-    never a global single-partition window.
+    distributed two-level rank scan (`graph.distributed_rank`) —
+    parallel bucket windows + broadcast bases, never a global
+    single-partition window.
     """
     stats = src_nodes.agg(
         F.min("id").alias("mn"), F.max("id").alias("mx"), F.count("*").alias("n")
@@ -87,8 +87,6 @@ def _number_sources(src_nodes: DataFrame) -> DataFrame:
             F.floor(off / 64).cast("int").alias("batch"),
             F.pmod(off, F.lit(64)).cast("int").alias("bit"),
         )
-    from ..plans.partitioning import distributed_rank
-
     return distributed_rank(src_nodes.select("id"), "id").select(
         "id",
         F.floor(F.col("_rank") / 64).cast("int").alias("batch"),

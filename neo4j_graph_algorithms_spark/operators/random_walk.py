@@ -102,10 +102,7 @@ def random_walks(
     )
     adj.count()
 
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
+    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
     start_step = 1
     steps: list[DataFrame] | None = None
     if resume and checkpoint_dir:

@@ -123,10 +123,7 @@ def wcc(
     sym = sym.repartition(n_parts, "src").persist()
     sym.count()
 
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
+    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
     start_it = 1
     comp = None
     if resume and checkpoint_dir:

@@ -161,7 +161,7 @@ def adaptive_disabled(spark: SparkSession):
     whose per-superstep shapes are identical and already sized
     (measured ~40% per-superstep win on the PageRank loop). Skew is
     handled structurally in the kernels (salting / two-phase agg /
-    degree-budget partitioning), not by runtime re-planning."""
+    degree orientation), not by runtime re-planning."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -194,12 +194,10 @@ class IterationCache:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
-        collect_partition_metrics: bool = False,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self.collect_partition_metrics = collect_partition_metrics
         self._prev: DataFrame | None = None
         self.history: list[dict] = []
         if checkpoint_dir:
@@ -217,8 +215,7 @@ class IterationCache:
             path = os.path.join(self.checkpoint_dir, f"step_{superstep:06d}")
             df.write.mode("overwrite").parquet(os.path.join(path, "state"))
             out = self.spark.read.parquet(os.path.join(path, "state"))
-            if self.collect_partition_metrics:
-                meta["partitions"] = partition_metrics(out, value_col)
+            meta["partitions"] = partition_metrics(out, value_col)
             with open(os.path.join(path, "meta.json"), "w") as f:
                 json.dump(meta, f)
             # marker file written last => checkpoint is complete

@@ -2,9 +2,12 @@
 
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same sf directory, then
-compares row count, column names, and order-insensitive values
-(columns sorted by name, rows sorted, floats compared exactly — both
-sides round in-query, so any mismatch is a real bug).
+compares column names, each column's Arrow type (the Spark frame's
+Arrow schema against DuckDB's Arrow result, so e.g. a DuckDB HUGEINT
+surfacing as ``decimal128(38, 0)`` fails against Spark's ``int64``
+even when the values compare equal), row count, and order-insensitive
+values (columns sorted by name, rows sorted, floats compared exactly —
+both sides round in-query, so any mismatch is a real bug).
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
@@ -15,6 +18,7 @@ import math
 import sys
 
 import duckdb
+from pyspark.sql.pandas.types import to_arrow_schema
 
 sys.path.insert(0, "/root/repo")
 
@@ -70,6 +74,7 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            stypes = {f.name: str(f.type) for f in to_arrow_schema(sdf.schema)}
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {exc}")
@@ -79,17 +84,24 @@ def main() -> int:
             print(f"SKIP {name}: rows-only ({len(srows)} rows)")
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            tbl = con.execute(oracles[name]).arrow()
+            ocols = tbl.column_names
+            otypes = {f.name: str(f.type) for f in tbl.schema}
+            orows = list(zip(*(c.to_pylist() for c in tbl.columns)))
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {exc}")
             failures.append(name)
             continue
         sn, scs = normalize(srows, scols)
         on, ocs = normalize(orows, ocols)
+        type_diffs = {
+            c: (stypes[c], otypes.get(c)) for c in scs if stypes[c] != otypes.get(c)
+        }
         if scs != ocs:
             print(f"FAIL {name}: columns spark={scs} duck={ocs}")
+            failures.append(name)
+        elif type_diffs:
+            print(f"FAIL {name}: arrow types (spark, duck) differ: {type_diffs}")
             failures.append(name)
         elif len(sn) != len(on):
             print(f"FAIL {name}: rowcount spark={len(sn)} duck={len(on)}")

@@ -34,11 +34,11 @@ def _numpy_pagerank(n, edges, damping=0.85, iterations=40):
     return rank
 
 
-def _run_fixture(spark, names, edges, expected, plan="dataframe", **kw):
+def _run_fixture(spark, names, edges, expected, **kw):
     g = Graph.from_edge_list(
         spark, FX.name_edges_to_ids(edges, names=names), n_nodes=len(names)
     )
-    ranks, stats = pagerank(g, damping=0.85, max_iterations=40, plan=plan, **kw)
+    ranks, stats = pagerank(g, damping=0.85, max_iterations=40, **kw)
     got = {r["id"]: r["rank"] for r in ranks.collect()}
     for i, name in enumerate(names):
         assert got[i] == pytest.approx(expected[name], abs=1e-2), (
@@ -60,20 +60,6 @@ def test_pagerank_wiki_dangling_fixture(spark):
     # dangling-node law: sinks with no in-edges keep exactly 1-d
     for name in "ghijk":
         assert got[FX.PAGERANK_WIKI_NODES.index(name)] == pytest.approx(0.15, abs=1e-12)
-
-
-def test_pagerank_csr_plan_matches_dataframe_plan(spark):
-    """Plan differential: pure-DataFrame vs CSR/pandas-UDF gather-scatter."""
-    names, edges = FX.PAGERANK_WIKI_NODES, FX.PAGERANK_WIKI_EDGES
-    g = Graph.from_edge_list(
-        spark, FX.name_edges_to_ids(edges, names=names), n_nodes=len(names)
-    )
-    r1, _ = pagerank(g, max_iterations=15, plan="dataframe")
-    r2, _ = pagerank(g, max_iterations=15, plan="csr", num_partitions=3)
-    d1 = {r["id"]: r["rank"] for r in r1.collect()}
-    d2 = {r["id"]: r["rank"] for r in r2.collect()}
-    for i in d1:
-        assert d1[i] == pytest.approx(d2[i], abs=1e-9)
 
 
 def test_pagerank_salted_matches_plain(spark):

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from neo4j_graph_algorithms_spark.graph import Graph, densify_ids, sort_adjacency
+from neo4j_graph_algorithms_spark.graph import Graph, densify_ids, distributed_rank
 from neo4j_graph_algorithms_spark.operators.betweenness import betweenness
 from neo4j_graph_algorithms_spark.operators.mst import mst
 from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
@@ -28,7 +28,6 @@ from neo4j_graph_algorithms_spark.plans.checkpointing import (
     check_termination,
     request_termination,
 )
-from neo4j_graph_algorithms_spark.plans.partitioning import distributed_rank
 
 
 # ------------------------------------------------------------------ MinHash
@@ -279,24 +278,6 @@ def test_mst_isolated_start_node_returns_empty_tree(spark):
     forest, fstats = mst(g)
     assert forest.count() == 2
     assert fstats["effectiveNodeCount"] == 3  # 2 edges + 1 component
-
-
-def test_sort_adjacency_groups_and_orders(spark):
-    import random
-
-    rng = random.Random(5)
-    rows = [(rng.randrange(20), rng.randrange(20), 1.0) for _ in range(200)]
-    df = spark.createDataFrame(rows, "src long, dst long, weight double")
-    sorted_df = sort_adjacency(df, num_partitions=4)
-    parts = sorted_df.rdd.glom().collect()
-    seen_src = set()
-    for part in parts:
-        local = [(r["src"], r["dst"]) for r in part]
-        assert local == sorted(local)  # sorted within the partition
-        srcs = {s for s, _ in local}
-        assert not (srcs & seen_src)  # each src entirely in one partition
-        seen_src |= srcs
-    assert sorted_df.count() == 200
 
 
 def test_delta_stepping_rejects_nonpositive_delta(spark):

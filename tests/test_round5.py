@@ -103,6 +103,26 @@ def test_node_similarity_auto_cap_engages_on_hub(spark):
     assert all(a < 4 and b < 4 for a, b in got)
 
 
+def test_node_similarity_cap_logs_dropped_hub(spark, caplog):
+    """An engaged hub cap is never silent: one hub of in-degree
+    AUTO_CAP_FLOOR + 1 is counted in stats AND logged as a warning."""
+    import logging
+
+    from neo4j_graph_algorithms_spark.operators.node_similarity import (
+        AUTO_CAP_FLOOR,
+        node_similarity,
+    )
+
+    g = _graph(spark, [(s, 10_000_000) for s in range(AUTO_CAP_FLOOR + 1)])
+    with caplog.at_level(logging.WARNING):
+        _out, st = node_similarity(g, threshold=0.01, return_stats=True)
+    assert st["dropped_hubs"] == 1
+    warned = [r for r in caplog.records if r.levelno == logging.WARNING
+              and "node_similarity" in r.getMessage()]
+    assert len(warned) == 1
+    assert "dropping 1 shared-neighbor hubs" in warned[0].getMessage()
+
+
 def test_node_similarity_auto_is_exact_without_hubs(spark):
     """Hub-free graph: auto must NOT engage (cap None in stats-free
     path ≡ exact uncapped answer)."""
