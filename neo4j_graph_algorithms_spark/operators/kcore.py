@@ -41,17 +41,11 @@ oracle on the driver-gate corpus.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph, undirect
-from ..plans.checkpointing import (
-    IterationCache,
-    adaptive_disabled,
-    check_termination,
-)
+from ..plans.checkpointing import SuperstepDriver
 
 
 def core_decomposition(
@@ -79,7 +73,7 @@ def core_decomposition(
     `_chg` column restores the EXACT change frontier, so the resumed
     sequence is the uninterrupted synchronous sequence, bit for bit."""
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
     id_t = graph.id_type()
 
     sym = (
@@ -99,27 +93,7 @@ def core_decomposition(
     sym.count()
     sym_by_node.count()
 
-    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
-    start_it = 1
-    cur = None
-    changed = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            step, state, _meta = latest
-            cur = state.select(
-                F.col("node").cast(id_t).alias("node"),
-                F.col("core").cast("long").alias("core"),
-            ).localCheckpoint(eager=True)
-            # the snapshot's _chg column IS that round's change
-            # frontier — resuming from it continues the exact
-            # synchronous sequence
-            changed = state.filter(F.col("_chg")).select(
-                F.col("node").cast(id_t).alias("node"),
-                F.col("core").cast("long").alias("core"),
-            ).localCheckpoint(eager=True)
-            start_it = step + 1
-    if cur is None:
+    def init():
         deg = sym.groupBy("node").agg(F.count("*").alias("core"))
         cur = (
             graph.nodes.select(F.col("id").cast(id_t).alias("node"))
@@ -127,95 +101,94 @@ def core_decomposition(
             .select("node", F.coalesce("core", F.lit(0)).cast("long").alias("core"))
             .localCheckpoint(eager=True)
         )
-        changed = cur  # every node "changed" at t=0
-    rounds = start_it - 1
-    converged = False
-    history: list[dict] = []
+        return cur, cur  # every node "changed" at t=0
+
+    def restore(state: DataFrame, _meta: dict):
+        state = state.select(
+            F.col("node").cast(id_t).alias("node"),
+            F.col("core").cast("long").alias("core"),
+            "_chg",
+        ).localCheckpoint(eager=True)
+        # the snapshot's _chg column IS that round's change frontier —
+        # resuming from it continues the exact synchronous sequence
+        return state.select("node", "core"), state.filter("_chg").select("node", "core")
 
     w = Window.partitionBy("node").orderBy(F.desc("val"))
-    with adaptive_disabled(spark):
-        for it in range(start_it, max_iterations + 1):
-            check_termination(spark, termination, it)
-            t_it = time.time()
-            cur_vals = cur.select(
-                F.col("node").alias("nbr"), F.col("core").alias("val")
+
+    def superstep(it: int, st):
+        cur, changed = st
+        cur_vals = cur.select(
+            F.col("node").alias("nbr"), F.col("core").alias("val")
+        )
+        if it == 1:
+            # round 1: every node is affected — the full nbr-keyed
+            # cache joined with the O(V) value frame IS the
+            # frontier-sized plan; a semi-join would only add an
+            # O(E) exchange
+            vals = sym.join(cur_vals, "nbr").select("node", "val")
+            n_affected = None
+        else:
+            # nodes whose h-index can move: neighbors of changed
+            # nodes (one join against the nbr-keyed cache — only
+            # the frontier moves), then STRUCTURALLY restrict the
+            # adjacency to those nodes BEFORE the value join: the
+            # semi-join pairs the node-keyed stationary cache with
+            # the frontier-sized affected frame, so every join this
+            # round has one cached side and one small moving side
+            # regardless of optimizer choices.
+            affected = (
+                sym.join(changed.select(F.col("node").alias("nbr")), "nbr")
+                .select("node")
             )
-            if it == 1:
-                # round 1: every node is affected — the full nbr-keyed
-                # cache joined with the O(V) value frame IS the
-                # frontier-sized plan; a semi-join would only add an
-                # O(E) exchange
-                vals = sym.join(cur_vals, "nbr").select("node", "val")
-                n_affected = None
+            # SHUFFLE_HASH hint: the affected frame's stats are
+            # join-products (huge estimates), so without the hint
+            # Spark falls back to sort-merge and re-SORTS the O(E)
+            # cached side every round; hash-building on the
+            # frontier-sized affected side probes the cache sorted-
+            # free (per-partition build, same memory class as any
+            # SHJ build side)
+            act = sym_by_node.join(
+                affected.hint("shuffle_hash"), "node", "left_semi"
+            )
+            if track_affected:
+                act = act.localCheckpoint(eager=True)
+                n_affected = act.count()
             else:
-                # nodes whose h-index can move: neighbors of changed
-                # nodes (one join against the nbr-keyed cache — only
-                # the frontier moves), then STRUCTURALLY restrict the
-                # adjacency to those nodes BEFORE the value join: the
-                # semi-join pairs the node-keyed stationary cache with
-                # the frontier-sized affected frame, so every join this
-                # round has one cached side and one small moving side
-                # regardless of optimizer choices.
-                affected = (
-                    sym.join(changed.select(F.col("node").alias("nbr")), "nbr")
-                    .select("node")
-                )
-                # SHUFFLE_HASH hint: the affected frame's stats are
-                # join-products (huge estimates), so without the hint
-                # Spark falls back to sort-merge and re-SORTS the O(E)
-                # cached side every round; hash-building on the
-                # frontier-sized affected side probes the cache sorted-
-                # free (per-partition build, same memory class as any
-                # SHJ build side)
-                act = sym_by_node.join(
-                    affected.hint("shuffle_hash"), "node", "left_semi"
-                )
-                if track_affected:
-                    act = act.localCheckpoint(eager=True)
-                    n_affected = act.count()
-                else:
-                    n_affected = None
-                vals = act.join(cur_vals, "nbr").select("node", "val")
-            h = (
-                vals.withColumn("rn", F.row_number().over(w))
-                .groupBy("node")
-                .agg(F.max(F.least(F.col("val"), F.col("rn"))).alias("h"))
-            )
-            nxt = cur.join(h, "node", "left").select(
-                "node",
-                F.coalesce("h", "core").cast("long").alias("core"),
-                (F.coalesce("h", "core") != F.col("core")).alias("_chg"),
-            )
-            # IterationCache: origin-severed truncation every round,
-            # durable parquet snapshot (with per-partition lineage) on
-            # the checkpoint cadence
-            nxt = cache.step(nxt, it, value_col="core")
-            changed = nxt.filter("_chg").select("node", "core")
-            n_changed = changed.count()
-            cur = nxt.select("node", "core")
-            rounds = it
-            rec = {
-                "round": it, "changed": n_changed,
-                "secs": round(time.time() - t_it, 2),
-            }
-            if n_affected is not None:
-                rec["affected_edges"] = n_affected
-            history.append(rec)
-            if n_changed == 0:
-                converged = True
-                break
+                n_affected = None
+            vals = act.join(cur_vals, "nbr").select("node", "val")
+        h = (
+            vals.withColumn("rn", F.row_number().over(w))
+            .groupBy("node")
+            .agg(F.max(F.least(F.col("val"), F.col("rn"))).alias("h"))
+        )
+        nxt = cur.join(h, "node", "left").select(
+            "node",
+            F.coalesce("h", "core").cast("long").alias("core"),
+            (F.coalesce("h", "core") != F.col("core")).alias("_chg"),
+        )
+        # IterationCache: origin-severed truncation every round,
+        # durable parquet snapshot (with per-partition lineage) on
+        # the checkpoint cadence
+        nxt = loop.cache.step(nxt, it, value_col="core")
+        changed = nxt.filter("_chg").select("node", "core")
+        n_changed = changed.count()
+        fields = {"changed": n_changed}
+        if n_affected is not None:
+            fields["affected_edges"] = n_affected
+        return (nxt.select("node", "core"), changed), fields, n_changed == 0
+
+    cur, _ = loop.run(max_iterations, init, restore, superstep, resume)
 
     result = cur.select(F.col("node").cast("long").alias("id"), "core")
     stats = {
         "nodes": graph.node_count(),
-        "rounds": rounds,
-        "didConverge": converged,
-        "history": history,
-        "computeMillis": int((time.time() - t0) * 1000),
+        "rounds": loop.ran,
+        "didConverge": loop.stopped,
+        "history": loop.history,
+        "computeMillis": loop.millis(),
     }
     sym.unpersist()
     sym_by_node.unpersist()
-    cache.close()
     return result, stats
 
 

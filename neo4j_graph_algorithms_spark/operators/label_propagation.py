@@ -31,13 +31,11 @@ pre-aggregation by (node, label) prevents.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import IterationCache, adaptive_disabled, check_termination
+from ..plans.checkpointing import SuperstepDriver
 
 
 def label_propagation(
@@ -61,7 +59,7 @@ def label_propagation(
     north-rule "resumable" shape as `pagerank(resume=True)`).
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
     nodes = graph.nodes
 
     # voting edges: node <- (neighbor, rel weight); OUTGOING means a node
@@ -128,23 +126,6 @@ def label_propagation(
         nw = nodes.select(F.col("id").cast(id_t).alias("id"), F.lit(1.0).alias("nw"))
     nw = nw.persist()
 
-    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
-    start_it = 1
-    labels = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            step, state, _meta = latest
-            labels = state.select(
-                F.col("id").cast(id_t).alias("id"),
-                F.col("label").cast(id_t).alias("label"),
-            )
-            start_it = step + 1
-    if labels is None:
-        labels = cache.step(init, 0)
-
-    ran = start_it - 1
-    converged = False
     w = Window.partitionBy("node").orderBy(F.desc("vote"), F.asc("nbr_label"))
 
     def half_step(labels: DataFrame, parity: int) -> DataFrame:
@@ -168,31 +149,37 @@ def label_propagation(
             .filter(F.pmod("node", F.lit(2)) == parity)
             .select(F.col("node").alias("id"), F.col("nbr_label").alias("new_label"))
         )
-        return labels.join(winner, "id", "left").select(
-            "id", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
+        return (
+            labels.join(winner, "id", "left")
+            .withColumn("label", F.coalesce(F.col("new_label"), F.col("label")))
+            .drop("new_label")
         )
 
-    with adaptive_disabled(spark):
-        for it in range(start_it, iterations + 1):
-            check_termination(spark, termination, it)
-            stepped = cache.step(half_step(half_step(labels, 0), 1), it)
-            changed = (
-                stepped.join(labels.withColumnRenamed("label", "prev"), "id")
-                .filter(F.col("label") != F.col("prev"))
-                .count()
-            )
-            cache.history[-1]["changed"] = changed
-            labels = stepped
-            ran = it
-            if changed == 0:
-                converged = True
-                break
+    def restore(state: DataFrame, _meta: dict) -> DataFrame:
+        return state.select(
+            F.col("id").cast(id_t).alias("id"),
+            F.col("label").cast(id_t).alias("label"),
+        )
+
+    def superstep(it: int, labels: DataFrame):
+        # `prev` rides along both half-steps, so changes are counted
+        # off the materialized frame — no join against the previous
+        # state, which the cache has released by then
+        stepped = loop.cache.step(
+            half_step(half_step(labels.withColumn("prev", F.col("label")), 0), 1), it
+        )
+        changed = stepped.filter(F.col("label") != F.col("prev")).count()
+        return stepped.select("id", "label"), {"changed": changed}, changed == 0
+
+    labels = loop.run(
+        iterations, lambda: loop.cache.step(init, 0), restore, superstep, resume
+    )
 
     stats = {
-        "ranIterations": ran,
-        "didConverge": converged,
-        "computeMillis": int((time.time() - t0) * 1000),
-        "history": cache.history,
+        "ranIterations": loop.ran,
+        "didConverge": loop.stopped,
+        "computeMillis": loop.millis(),
+        "history": loop.history,
     }
     e.unpersist()
     nw.unpersist()

@@ -117,8 +117,10 @@ def louvain(
             .filter(F.pmod("id", F.lit(2)) == parity)
             .select("id", F.col("community").alias("new_c"))
         )
-        return comm.join(best, "id", "left").select(
-            "id", F.coalesce("new_c", "community").alias("community")
+        return (
+            comm.join(best, "id", "left")
+            .withColumn("community", F.coalesce("new_c", "community"))
+            .drop("new_c")
         )
 
     with adaptive_disabled(spark):
@@ -130,13 +132,14 @@ def louvain(
             # widest diamond of any kernel; a plain localCheckpoint's
             # origin chain would grow ~4^iterations
             # (plans/checkpointing.truncate_plan)
-            stepped = truncate_plan(half_round(half_round(comm, 0), 1))
-            changed = (
-                stepped.join(comm.withColumnRenamed("community", "prev"), "id")
-                .filter(F.col("community") != F.col("prev"))
-                .count()
+            # `prev` rides along both half-rounds, so changes are
+            # counted off the materialized frame, not by a join
+            # against the previous state
+            stepped = truncate_plan(
+                half_round(half_round(comm.withColumn("prev", F.col("community")), 0), 1)
             )
-            comm = stepped
+            changed = stepped.filter(F.col("community") != F.col("prev")).count()
+            comm = stepped.select("id", "community")
             ran = it
             if changed == 0:
                 converged = True

@@ -38,17 +38,11 @@ differential/oracle anchor at test scales.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, undirect
-from ..plans.checkpointing import (
-    IterationCache,
-    adaptive_disabled,
-    check_termination,
-)
+from ..plans.checkpointing import SuperstepDriver
 
 
 def _edges_pull(graph: Graph, direction: str) -> DataFrame:
@@ -173,7 +167,7 @@ def neighborhood_function(
     is surfaced in stats.
 
     ``checkpoint_dir`` + ``resume=True``: durable depth snapshots
-    (state (id, sketch, _changed) + the running N(t) history in
+    (state (id, sketch, _changed) + the N(t) series so far in
     meta.json); sketches are monotone and the `_changed` column
     restores the exact systolic frontier, so a killed deep run resumed
     from its last snapshot continues the exact sketch sequence (the
@@ -182,7 +176,7 @@ def neighborhood_function(
     ulp — the parquet re-read changes the summation order.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
     m = 1 << p
     id_t = graph.id_type()
 
@@ -204,101 +198,93 @@ def neighborhood_function(
     salt_buckets = int(salt_buckets)
 
     n_nodes = graph.node_count()
-    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
-    start_depth = 1
-    sketches = None
-    history: list[dict] = []
-    prev_n = 0.0
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            step, state, meta = latest
-            state = state.localCheckpoint(eager=True)
-            sketches = state.select("id", "sketch")
-            frontier = state.filter(F.col("_changed")).select("id", "sketch")
-            history = list(meta.get("history", []))
-            prev_n = float(meta.get("prev_n", 0.0))
-            start_depth = step + 1
-    if sketches is None:
+
+    def total(sketches: DataFrame) -> float:
+        """Σ per-node estimates: N(t) including the V self-pairs."""
+        return float(
+            sketches.select(_estimate_expr("sketch", m).alias("e"))
+            .agg(F.sum("e")).collect()[0][0] or 0.0
+        )
+
+    def init():
         sketches = graph.nodes.select(
             F.col("id").cast(id_t).alias("id"), _seed_sketch(F.col("id"), p).alias("sketch")
         ).localCheckpoint(eager=True)
-        frontier = sketches  # every sketch "changed" at t=0
-        est_self = (
-            sketches.select(_estimate_expr("sketch", m).alias("e"))
-            .agg(F.sum("e")).collect()[0][0]
-        )
-        prev_n = float(est_self or 0.0)
-    converged = False
+        # every sketch "changed" at t=0
+        return sketches, sketches, total(sketches), []
 
-    with adaptive_disabled(spark):
-        for depth in range(start_depth, max_depth + 1):
-            check_termination(spark, termination, depth)
-            t_it = time.time()
-            msgs = edges.join(
-                frontier.select(F.col("id").alias("dst"), "sketch"), "dst"
-            ).select(F.col("src").alias("id"), "sketch")
-            if salt_buckets > 1:
-                # any row→salt assignment is correct (elementwise max is
-                # associative + commutative, so the merged sketch doesn't
-                # depend on grouping order); a per-row counter spreads a
-                # hub's fan-in evenly over the partial reducers
-                partial = msgs.withColumn(
-                    "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
-                )
-                inc = (
-                    partial.groupBy("id", "_salt").agg(_merge_agg("sketch", m).alias("sketch"))
-                    .groupBy("id").agg(_merge_agg("sketch", m).alias("inc"))
-                )
-            else:
-                inc = msgs.groupBy("id").agg(_merge_agg("sketch", m).alias("inc"))
-            nxt = (
-                sketches.join(inc, "id", "left")
-                .select(
-                    "id", "sketch",
-                    F.when(
-                        F.col("inc").isNull(), F.col("sketch")
-                    ).otherwise(
-                        F.zip_with("sketch", "inc", lambda a, b: F.greatest(a, b))
-                    ).alias("_merged"),
-                )
-                .select(
-                    "id",
-                    F.col("_merged").alias("sketch"),
-                    (F.col("_merged") != F.col("sketch")).alias("_changed"),
-                )
-                .localCheckpoint(eager=True)
+    def restore(state: DataFrame, meta: dict):
+        state = state.localCheckpoint(eager=True)
+        return (
+            state.select("id", "sketch"),
+            state.filter(F.col("_changed")).select("id", "sketch"),
+            float(meta["prev_n"]),
+            list(meta["series"]),
+        )
+
+    # loop state (sketches, frontier, prev_n, series): the per-node
+    # sketches, those that changed last depth, the last raw Σ estimate,
+    # and the N(t) series so far (depth t at index t-1)
+    def superstep(depth: int, st):
+        sketches, frontier, prev_n, series = st
+        msgs = edges.join(
+            frontier.select(F.col("id").alias("dst"), "sketch"), "dst"
+        ).select(F.col("src").alias("id"), "sketch")
+        if salt_buckets > 1:
+            # any row→salt assignment is correct (elementwise max is
+            # associative + commutative, so the merged sketch doesn't
+            # depend on grouping order); a per-row counter spreads a
+            # hub's fan-in evenly over the partial reducers
+            partial = msgs.withColumn(
+                "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
             )
-            n_est = (
-                nxt.select(_estimate_expr("sketch", m).alias("e"))
-                .agg(F.sum("e")).collect()[0][0]
+            inc = (
+                partial.groupBy("id", "_salt").agg(_merge_agg("sketch", m).alias("sketch"))
+                .groupBy("id").agg(_merge_agg("sketch", m).alias("inc"))
             )
-            frontier = nxt.filter("_changed").select("id", "sketch")
-            changed = frontier.count()
-            sketches = nxt.select("id", "sketch")
-            growth = (n_est - prev_n) / prev_n if prev_n > 0 else 1.0
-            history.append({
-                "depth": depth,
-                "n_pairs_est": max(0.0, n_est - n_nodes),
-                "changed": changed,
-                "secs": round(time.time() - t_it, 2),
-            })
-            prev_n = n_est
-            # durable snapshot at END of round, so meta carries this
-            # depth's history entry and running prev_n (the resume
-            # anchor); per-round truncation already happened via the
-            # eager localCheckpoint above
-            if checkpoint_dir and depth % checkpoint_every == 0:
-                cache.step(
-                    nxt, depth, metrics={"history": history, "prev_n": prev_n}
-                )
-            if changed == 0 or (tolerance > 0 and growth < tolerance):
-                converged = changed == 0
-                break
+        else:
+            inc = msgs.groupBy("id").agg(_merge_agg("sketch", m).alias("inc"))
+        nxt = (
+            sketches.join(inc, "id", "left")
+            .select(
+                "id", "sketch",
+                F.when(
+                    F.col("inc").isNull(), F.col("sketch")
+                ).otherwise(
+                    F.zip_with("sketch", "inc", lambda a, b: F.greatest(a, b))
+                ).alias("_merged"),
+            )
+            .select(
+                "id",
+                F.col("_merged").alias("sketch"),
+                (F.col("_merged") != F.col("sketch")).alias("_changed"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        n_est = total(nxt)
+        frontier = nxt.filter("_changed").select("id", "sketch")
+        changed = frontier.count()
+        growth = (n_est - prev_n) / prev_n if prev_n > 0 else 1.0
+        series.append(max(0.0, n_est - n_nodes))
+        # durable snapshot at END of round, so meta carries the series
+        # through this depth and the running raw estimate (the resume
+        # anchor); per-round truncation already happened via the eager
+        # localCheckpoint above
+        if loop.cache.durable(depth):
+            loop.cache.step(nxt, depth, metrics={"series": series, "prev_n": n_est})
+        stop = changed == 0 or (tolerance > 0 and growth < tolerance)
+        return (
+            (nxt.select("id", "sketch"), frontier, n_est, series),
+            {"n_pairs_est": series[-1], "changed": changed},
+            stop,
+        )
+
+    *_, nf = loop.run(max_depth, init, restore, superstep, resume)
+    # stopped with a still-moving frontier = the tolerance cut, not convergence
+    converged = loop.stopped and loop.history[-1]["changed"] == 0
 
     # effective diameter at q=0.9 with linear interpolation between
     # depths (HyperANF convention); denominator = last measured N
-    nf = [h["n_pairs_est"] for h in history]
     eff_d = None
     if nf:
         target = 0.9 * nf[-1]
@@ -312,20 +298,19 @@ def neighborhood_function(
                 eff_d = i + frac
                 break
 
-    rows = [(h["depth"], float(h["n_pairs_est"])) for h in history]
+    rows = [(d, float(v)) for d, v in enumerate(nf, start=1)]
     out = spark.createDataFrame(rows, "depth int, n_pairs_est double")
     stats = {
         "nodes": n_nodes,
         "registers": m,
         "salt_buckets": salt_buckets,
-        "depths_run": len(history),
+        "depths_run": len(nf),
         "didConverge": converged,
         "effective_diameter_90": eff_d,
-        "history": history,
-        "computeMillis": int((time.time() - t0) * 1000),
+        "history": loop.history,
+        "computeMillis": loop.millis(),
     }
     edges.unpersist()
-    cache.close()
     return out, stats
 
 

@@ -41,13 +41,11 @@ hubs.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import IterationCache, adaptive_disabled, check_termination
+from ..plans.checkpointing import SuperstepDriver
 
 
 def _messages_dataframe(edges_inv: DataFrame, active: DataFrame, damping: float) -> DataFrame:
@@ -165,7 +163,7 @@ def pagerank(
     — fixed scheduling overhead is the enemy of scaling efficiency.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
 
     # int-id compression (shared Heavy-vs-Huge analogue; bound scan
     # cached per snapshot via graph.id_type). inv_deg and messages stay
@@ -211,9 +209,7 @@ def pagerank(
     edges_inv.count()
 
     alpha = 1.0 - damping
-    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
 
-    start_step = 0
     def send(active: DataFrame) -> DataFrame:
         """d·Mᵀ·active — (id, delta) messages for an (src-named-id,
         delta) frame; shared by the superstep push and the warm-start
@@ -228,13 +224,19 @@ def pagerank(
     if signed and source_nodes is not None:
         raise ValueError("init_ranks and source_nodes are mutually exclusive")
 
-    state = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            start_step, state, _meta = latest
-            start_step += 1
-    if state is None:
+    # warm starts propagate SIGNED residuals; cold deltas are >= 0 and
+    # the != 0 form would be equivalent, but > 0 keeps the cold plan
+    # byte-identical to previous rounds' recorded plans
+    active_pred = (
+        (F.col("delta") != 0.0) if signed else (F.col("delta") > 0)
+    )
+
+    def split(state: DataFrame):
+        """(id, rank, delta) state → loop state (rank accumulator,
+        active delta frontier, pending unfolded delta frames)."""
+        return state.select("id", "rank"), state.select("id", "delta").filter(active_pred), []
+
+    def init():
         if init_ranks is not None:
             # warm start: delta₀ = α + d·Mᵀ·r₀ − r₀ (one O(E) pass);
             # appended nodes absent from the estimate start cold at α
@@ -265,19 +267,18 @@ def pagerank(
             seeds = source_nodes.select(
                 F.col("id").cast(id_t).alias("id"), F.lit(True).alias("_seed")
             ).distinct()
-            init = F.when(F.col("_seed"), F.lit(alpha)).otherwise(F.lit(0.0))
+            seeded = F.when(F.col("_seed"), F.lit(alpha)).otherwise(F.lit(0.0))
             state = (
                 graph.nodes.select(F.col("id").cast(id_t).alias("id"))
                 .join(seeds, "id", "left")
-                .select("id", init.alias("rank"), init.alias("delta"))
+                .select("id", seeded.alias("rank"), seeded.alias("delta"))
             )
         else:
             state = graph.nodes.select(
                 F.col("id").cast(id_t).alias("id"),
                 F.lit(alpha).alias("rank"), F.lit(alpha).alias("delta"),
             )
-        state = cache.step(state, 0, {"phase": "init"}, value_col="delta")
-        start_step = 1
+        return split(loop.cache.step(state, 0))
 
     def push(cur: DataFrame) -> DataFrame:
         """One delta superstep: cur(id, active delta) → next deltas.
@@ -289,20 +290,7 @@ def pagerank(
         """
         return send(cur.select(F.col("id").alias("src"), "delta"))
 
-    # warm starts propagate SIGNED residuals; cold deltas are >= 0 and
-    # the != 0 form would be equivalent, but > 0 keeps the cold plan
-    # byte-identical to previous rounds' recorded plans
-    active_pred = (
-        (F.col("delta") != 0.0) if signed else (F.col("delta") > 0)
-    )
-
-    history: list[dict] = []
-    ran = 0
-    converged = False
     fold = max(1, fuse)
-    acc = state.select("id", "rank")
-    cur = state.select("id", "delta").filter(active_pred)
-    pending: list[DataFrame] = []
 
     def fold_state(acc: DataFrame, pending: list[DataFrame], cur: DataFrame) -> DataFrame:
         """acc + Σ pending deltas → (id, rank, delta=last delta).
@@ -323,66 +311,56 @@ def pagerank(
             "id", "rank", F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta")
         )
 
-    with adaptive_disabled(spark):
-        for it in range(start_step, max_iterations + 1):
-            check_termination(spark, termination, it)
-            t_it = time.time()
-            # persist() (not localCheckpoint) keeps the hash(dst) output
-            # partitioning visible to Catalyst, so the next superstep's
-            # edge join needs NO exchange; the InMemoryRelation chain
-            # stays ≤ fuse deep because every fold below re-roots it
-            cur = push(cur).persist()
-            cur.count()
-            pending.append(cur)
-            ran = it
-            if tolerance is not None:
-                max_delta = (
-                    cur.agg(F.max(F.abs(F.col("delta")))).collect()[0][0]
-                    if signed
-                    else cur.agg(F.max("delta")).collect()[0][0]
-                ) or 0.0
-                if max_delta < tolerance:
-                    converged = True
-            else:
-                max_delta = None
-            last = converged or it == max_iterations
-            folded = False
-            if len(pending) >= fold or last or (
-                checkpoint_dir is not None and it % cache.checkpoint_every == 0
-            ):
-                # the fold doubles as lineage truncation: the folded
-                # state materializes through IterationCache (durable
-                # parquet or eager localCheckpoint), and the frontier is
-                # RE-ROOTED at that materialized state so every
-                # per-block chain hangs off exactly one truncated root —
-                # unions mixing several localCheckpoint roots defeat
-                # Catalyst's cache lookup and recompute the chains
-                # (measured: 11-frame mixed-root fold 49s vs 1.2s)
-                state = cache.step(
-                    fold_state(acc, pending, cur), it, None, value_col="delta"
-                )
-                acc = state.select("id", "rank")
-                for p in pending:
-                    p.unpersist()
-                pending = []
-                cur = state.select("id", "delta").filter(active_pred)
-                folded = True
-            history.append({
-                "superstep": it, "max_delta": max_delta,
-                "secs": round(time.time() - t_it, 2), "folded": folded,
-            })
-            if last:
-                break
+    def superstep(it: int, st):
+        acc, cur, pending = st
+        # persist() (not localCheckpoint) keeps the hash(dst) output
+        # partitioning visible to Catalyst, so the next superstep's
+        # edge join needs NO exchange; the InMemoryRelation chain
+        # stays ≤ fuse deep because every fold below re-roots it
+        cur = push(cur).persist()
+        cur.count()
+        pending.append(cur)
+        max_delta = None
+        if tolerance is not None:
+            max_delta = (
+                cur.agg(F.max(F.abs(F.col("delta")))).collect()[0][0]
+                if signed
+                else cur.agg(F.max("delta")).collect()[0][0]
+            ) or 0.0
+        converged = max_delta is not None and max_delta < tolerance
+        folded = (
+            len(pending) >= fold or converged or it == max_iterations
+            or loop.cache.durable(it)
+        )
+        if folded:
+            # the fold doubles as lineage truncation: the folded
+            # state materializes through IterationCache (durable
+            # parquet or eager localCheckpoint), and the frontier is
+            # RE-ROOTED at that materialized state so every
+            # per-block chain hangs off exactly one truncated root —
+            # unions mixing several localCheckpoint roots defeat
+            # Catalyst's cache lookup and recompute the chains
+            # (measured: 11-frame mixed-root fold 49s vs 1.2s)
+            state = loop.cache.step(
+                fold_state(acc, pending, cur), it, value_col="delta"
+            )
+            for p in pending:
+                p.unpersist()
+            acc, cur, pending = split(state)
+        return (acc, cur, pending), {"max_delta": max_delta, "folded": folded}, converged
+
+    acc, _, _ = loop.run(
+        max_iterations, init, lambda df, _meta: split(df), superstep, resume
+    )
 
     result = acc.select(F.col("id").cast("long").alias("id"), "rank")
     stats = {
         "nodes": graph.node_count(),
-        "iterations": ran,
-        "didConverge": converged,
+        "iterations": loop.ran,
+        "didConverge": loop.stopped,
         "damping": damping,
-        "computeMillis": int((time.time() - t0) * 1000),
-        "history": history,
-        "checkpoints": cache.history,
+        "computeMillis": loop.millis(),
+        "history": loop.history,
     }
     edges_inv.unpersist()
     return result, stats

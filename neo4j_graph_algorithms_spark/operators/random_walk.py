@@ -36,18 +36,14 @@ degrees < 2^13 on a 64-bit hash — negligible); independence across
 
 from __future__ import annotations
 
-import time
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..graph import Graph
-from ..plans.checkpointing import (
-    IterationCache,
-    adaptive_disabled,
-    check_termination,
-)
+from ..plans.checkpointing import SuperstepDriver
 
 
 def random_walks(
@@ -76,7 +72,7 @@ def random_walks(
     seed/walk args, as with every resumable kernel here).
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
     id_t = graph.id_type()
 
     w = Window.partitionBy("src").orderBy("dst")
@@ -102,22 +98,7 @@ def random_walks(
     )
     adj.count()
 
-    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
-    start_step = 1
-    steps: list[DataFrame] | None = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            ck_step, acc, _meta = latest
-            acc = acc.localCheckpoint(eager=True)
-            frontier = acc.filter(F.col("step") == ck_step).select(
-                F.col("source").cast(id_t).alias("source"),
-                "rep",
-                F.col("node").cast(id_t).alias("node"),
-            ).localCheckpoint(eager=True)
-            steps = [acc]
-            start_step = ck_step + 1
-    if steps is None:
+    def init():
         src_nodes = (sources or graph.nodes.select("id")).select(
             F.col("id").cast(id_t).alias("source")
         )
@@ -127,42 +108,46 @@ def random_walks(
             .select("source", "rep", F.col("source").alias("node"))
             .localCheckpoint(eager=True)
         )
-        steps = [frontier.select("source", "rep", F.lit(0).alias("step"), "node")]
+        return [frontier.select("source", "rep", F.lit(0).alias("step"), "node")], frontier
 
-    with adaptive_disabled(spark):
-        for step in range(start_step, walk_length + 1):
-            check_termination(spark, termination, step)
-            picked = frontier.join(deg, "node").select(
-                "source", "rep",
-                F.col("node").alias("src"),
-                F.pmod(
-                    F.xxhash64("source", "node", "rep", F.lit(step), F.lit(seed)),
-                    F.col("deg"),
-                ).cast("int").alias("rn"),
-            )
-            frontier = (
-                picked.join(adj, ["src", "rn"])
-                .select("source", "rep", F.col("dst").alias("node"))
-                .localCheckpoint(eager=True)
-            )
-            if frontier.isEmpty():
-                break
-            steps.append(
-                frontier.select("source", "rep", F.lit(step).alias("step"), "node")
-            )
-            if checkpoint_dir and step % checkpoint_every == 0:
-                # durable snapshot of the accumulated prefix (the lazy
-                # per-step frames union-fold exactly once per cadence —
-                # the standing BFS-family accumulation discipline)
-                acc = steps[0]
-                for s in steps[1:]:
-                    acc = acc.unionByName(s)
-                steps = [cache.step(acc, step)]
+    def restore(acc: DataFrame, meta: dict):
+        acc = acc.localCheckpoint(eager=True)
+        frontier = acc.filter(F.col("step") == meta["superstep"]).select(
+            F.col("source").cast(id_t).alias("source"),
+            "rep",
+            F.col("node").cast(id_t).alias("node"),
+        ).localCheckpoint(eager=True)
+        return [acc], frontier
 
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    out = out.select(
+    # loop state (steps, frontier): the lazy per-step frames of the walk
+    # prefix, and the walkers' current (source, rep, node)
+    def superstep(step: int, st):
+        steps, frontier = st
+        picked = frontier.join(deg, "node").select(
+            "source", "rep",
+            F.col("node").alias("src"),
+            F.pmod(
+                F.xxhash64("source", "node", "rep", F.lit(step), F.lit(seed)),
+                F.col("deg"),
+            ).cast("int").alias("rn"),
+        )
+        frontier = (
+            picked.join(adj, ["src", "rn"])
+            .select("source", "rep", F.col("dst").alias("node"))
+            .localCheckpoint(eager=True)
+        )
+        if frontier.isEmpty():
+            return (steps, frontier), {}, True
+        steps.append(frontier.select("source", "rep", F.lit(step).alias("step"), "node"))
+        if loop.cache.durable(step):
+            # durable snapshot of the accumulated prefix (the lazy
+            # per-step frames union-fold exactly once per cadence —
+            # the standing BFS-family accumulation discipline)
+            steps = [loop.cache.step(reduce(DataFrame.unionByName, steps), step)]
+        return (steps, frontier), {}, False
+
+    steps, _ = loop.run(walk_length, init, restore, superstep, resume)
+    out = reduce(DataFrame.unionByName, steps).select(
         F.col("source").cast("long").alias("source"), "rep", "step",
         F.col("node").cast("long").alias("node"),
     )
@@ -172,9 +157,9 @@ def random_walks(
         "walks_per_node": walks_per_node,
         "steps_run": int(out.agg(F.max("step")).collect()[0][0] or 0),
         "seed": seed,
-        "computeMillis": int((time.time() - t0) * 1000),
+        "history": loop.history,
+        "computeMillis": loop.millis(),
     }
     adj.unpersist()
     deg.unpersist()
-    cache.close()
     return out, stats

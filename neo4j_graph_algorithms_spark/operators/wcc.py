@@ -37,13 +37,11 @@ analogue of DSS path compression.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import IterationCache, adaptive_disabled, check_termination
+from ..plans.checkpointing import SuperstepDriver
 
 
 def wcc(
@@ -55,7 +53,6 @@ def wcc(
     assume_deduped: bool = False,
     resume: bool = False,
     num_partitions: int | None = None,
-    pointer_jump: bool | str = True,
     termination=None,
 ) -> tuple[DataFrame, dict]:
     """Returns (components(id, component), stats).
@@ -72,24 +69,14 @@ def wcc(
     "resumable from checkpoint" contract, same shape as
     `pagerank(resume=True)`).
 
-    ``pointer_jump``: True (default — every round), "auto"
-    (frontier-gated: jump only while changed·64 ≥ V), False (never).
-    Pointer jumping (component := component(component)) is
-    LOAD-BEARING: the r5 A/B on the 8M-node chain+hub graph converges
-    in 6 rounds with it vs >20 without (577k labels still moving at
-    round 20) — the jump join adds ~30-40% to a superstep but buys
-    O(log) total rounds, a clear win. It is also the least scalable
-    part of a late superstep (label values concentrate onto giant
-    components, skewing the exchange), which is why the knob exists:
-    "auto" drops it once the frontier is tiny, but that can
-    asymptotically INFLATE round counts on high-diameter graphs (a
-    path's tail then advances one hop per round), so it is opt-in for
-    giant-component-dominated workloads, not the default. The
-    min-label fixpoint and the convergence test are jump-agnostic —
-    any setting converges to identical components.
+    Pointer jumping (component := component(component)) runs every
+    round and is LOAD-BEARING: the r5 A/B on the 8M-node chain+hub
+    graph converges in 6 rounds with it vs >20 without (577k labels
+    still moving at round 20) — the jump join adds ~30-40% to a
+    superstep but buys O(log) total rounds, a clear win.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
 
     edges = graph.edges
     if threshold is not None:
@@ -123,100 +110,83 @@ def wcc(
     sym = sym.repartition(n_parts, "src").persist()
     sym.count()
 
-    cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
-    start_it = 1
-    comp = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            step, state, _meta = latest
-            comp = state.select(
-                F.col("id").cast(id_t).alias("id"),
-                F.col("component").cast(id_t).alias("component"),
-            )
-            start_it = step + 1
-    if comp is None:
+    def init():
         comp = graph.nodes.select(
             F.col("id").cast(id_t).alias("id"), F.col("id").cast(id_t).alias("component")
         )
-        comp = cache.step(comp, 0)
+        comp = loop.cache.step(comp, 0)
+        return comp, comp
 
-    ran = start_it - 1
-    converged = False
-    n_nodes = graph.node_count()
-    changed = None  # unknown until the first round (jump gate treats as large)
-    # frontier = rows whose label changed last round (everyone, in
-    # round 1 / on resume). Offering from the frontier alone is exact:
-    # labels only decrease, and a node's current label was offered the
-    # round it last changed — so by induction every neighbor has seen
-    # every value (hence the min) each node ever held.
-    frontier = comp
-    with adaptive_disabled(spark):
-        for it in range(start_it, max_iterations + 1):
-            check_termination(spark, termination, it)
-            # neighbor-min: every node pulls the smallest label offered
-            # by frontier neighbors over one (undirected) hop
-            nbr_min = (
-                sym.join(frontier.select(F.col("id").alias("src"), "component"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("component").alias("nbr_comp"))
+    def restore(state: DataFrame, _meta: dict):
+        comp = state.select(
+            F.col("id").cast(id_t).alias("id"),
+            F.col("component").cast(id_t).alias("component"),
+        )
+        return comp, comp
+
+    # loop state (comp, frontier): frontier = rows whose label changed
+    # last round (everyone, in round 1 / on resume). Offering from the
+    # frontier alone is exact: labels only decrease, and a node's
+    # current label was offered the round it last changed — so by
+    # induction every neighbor has seen every value (hence the min)
+    # each node ever held.
+    def superstep(it: int, st):
+        comp, frontier = st
+        # neighbor-min: every node pulls the smallest label offered
+        # by frontier neighbors over one (undirected) hop
+        nbr_min = (
+            sym.join(frontier.select(F.col("id").alias("src"), "component"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("component").alias("nbr_comp"))
+        )
+        # `prev` rides along so convergence is read off the
+        # materialized frame with a cached O(V) scan — no separate
+        # full-join job per round
+        stepped = (
+            comp.join(nbr_min, "id", "left")
+            .select(
+                "id",
+                F.col("component").alias("prev"),
+                F.least(
+                    F.col("component"), F.coalesce(F.col("nbr_comp"), F.col("component"))
+                ).alias("component"),
             )
-            # `prev` rides along so convergence is read off the
-            # materialized frame with a cached O(V) scan — no separate
-            # full-join job per round
-            stepped = (
-                comp.join(nbr_min, "id", "left")
-                .select(
-                    "id",
-                    F.col("component").alias("prev"),
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("nbr_comp"), F.col("component"))
-                    ).alias("component"),
-                )
+        )
+        # pointer jumping: component := component(component) —
+        # compresses label chains (distributed path compression)
+        parent = stepped.select(
+            F.col("id").alias("component"), F.col("component").alias("jump")
+        )
+        jumped = (
+            stepped.join(parent, "component", "left")
+            .select(
+                "id", "prev",
+                F.coalesce(F.col("jump"), F.col("component")).alias("component"),
             )
-            # pointer jumping: component := component(component) —
-            # compresses label chains (distributed path compression);
-            # gating options and the measured cost/benefit trade are in
-            # the docstring
-            do_jump = pointer_jump is True or (
-                pointer_jump == "auto" and (changed is None or changed * 64 >= n_nodes)
-            )
-            if do_jump:
-                parent = stepped.select(
-                    F.col("id").alias("component"), F.col("component").alias("jump")
-                )
-                jumped = (
-                    stepped.join(parent, "component", "left")
-                    .select(
-                        "id", "prev",
-                        F.coalesce(F.col("jump"), F.col("component")).alias("component"),
-                    )
-                )
-            else:
-                jumped = stepped
-            jumped = cache.step(jumped, it)
-            changed = jumped.agg(
-                F.sum((F.col("component") != F.col("prev")).cast("long")).alias("c")
-            ).collect()[0]["c"] or 0
-            cache.history[-1]["changed"] = int(changed)
-            cache.history[-1]["jumped"] = do_jump
-            comp = jumped.select("id", "component")
-            # next round's frontier: exactly the rows that changed this
-            # round (via neighbor-min OR pointer jump — `prev` predates
-            # both). Cheap filter over the just-materialized frame.
-            frontier = jumped.filter(F.col("component") != F.col("prev")).select(
-                "id", "component"
-            )
-            ran = it
-            if changed == 0:
-                converged = True
-                break
+        )
+        jumped = loop.cache.step(jumped, it)
+        changed = jumped.agg(
+            F.sum((F.col("component") != F.col("prev")).cast("long")).alias("c")
+        ).collect()[0]["c"] or 0
+        # next round's frontier: exactly the rows that changed this
+        # round (via neighbor-min OR pointer jump — `prev` predates
+        # both). Cheap filter over the just-materialized frame.
+        frontier = jumped.filter(F.col("component") != F.col("prev")).select(
+            "id", "component"
+        )
+        return (
+            (jumped.select("id", "component"), frontier),
+            {"changed": int(changed)},
+            changed == 0,
+        )
+
+    comp, _ = loop.run(max_iterations, init, restore, superstep, resume)
 
     stats = {
-        "iterations": ran,
-        "didConverge": converged,
-        "computeMillis": int((time.time() - t0) * 1000),
-        "history": cache.history,
+        "iterations": loop.ran,
+        "didConverge": loop.stopped,
+        "computeMillis": loop.millis(),
+        "history": loop.history,
     }
     sym.unpersist()
     comp = comp.select(

@@ -9,14 +9,19 @@ are (a) unbounded lineage growth across tens of iterations and (b) no
 restart point for a 100 TB run that dies at superstep 37. This module
 solves both:
 
-- `IterationCache` — persist-count-unpersist cadence with optional
-  periodic truncation: either `localCheckpoint` (fast, lineage-only) or
-  a durable parquet checkpoint directory (resumable; the sandbox
-  stand-in for an Iceberg state table).
+- `IterationCache` — one materialization per superstep: an eager,
+  origin-severed `localCheckpoint` (`truncate_plan`) whose blocks are
+  released once the next state exists, or on the durable cadence a
+  parquet snapshot (resumable; the sandbox stand-in for an Iceberg
+  state table). The initial state (superstep 0) is never written
+  durably: a resume that finds no snapshot recomputes the
+  deterministic init.
 - Every durable checkpoint writes `meta.json` with the superstep
-  number, convergence metric, and *per-partition* lineage metrics
-  (rows + partition-local convergence) so a resumed run can verify its
-  inputs before continuing.
+  number, kernel metrics, and *per-partition* lineage metrics (rows +
+  partition-local convergence); a resume re-counts the re-read state
+  and refuses a snapshot whose row count does not match.
+- `SuperstepDriver` — the loop of every resumable kernel (PageRank,
+  WCC, label propagation, k-core, HyperANF, random walks), written once.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ import shutil
 import time
 import warnings
 from contextlib import contextmanager
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,7 +129,12 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     `persist()` and are untouched). Falls back to the plain checkpoint
     on non-classic sessions (e.g. Spark Connect) or API drift.
     """
-    ck = df.localCheckpoint(eager=True)
+    return _sever(df.localCheckpoint(eager=True))
+
+
+def _sever(ck: DataFrame) -> DataFrame:
+    """The origin-plan cut of `truncate_plan`, applied to an eager
+    localCheckpoint `ck` (kept by the caller to `_release` it later)."""
     try:
         jdf = ck._jdf
         jspark = ck.sparkSession._jsparkSession
@@ -150,6 +161,18 @@ def truncate_plan(df: DataFrame) -> DataFrame:
                 stacklevel=2,
             )
         return ck
+
+
+def _release(ck: DataFrame) -> None:
+    """Drop the blocks of an eager localCheckpoint. `DataFrame.unpersist`
+    is a no-op on it: the checkpointed RDD behind the frame's LogicalRDD
+    was never registered with the CacheManager, so without this its
+    blocks stay until driver GC. Blocking, so the memory is free before
+    the next superstep."""
+    try:
+        ck._jdf.queryExecution().analyzed().rdd().unpersist(True)
+    except (AttributeError, TypeError, Py4JError):  # non-classic session
+        ck.unpersist()
 
 
 @contextmanager
@@ -186,8 +209,8 @@ def partition_metrics(df: DataFrame, value_col: str | None = None) -> list[dict]
 
 
 class IterationCache:
-    """persist → materialize → unpersist-previous, with optional durable
-    checkpoints every `checkpoint_every` steps."""
+    """Materialize each superstep's state; durable parquet snapshots
+    every `checkpoint_every` steps, in-memory truncation otherwise."""
 
     def __init__(
         self,
@@ -198,23 +221,33 @@ class IterationCache:
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self._prev: DataFrame | None = None
-        self.history: list[dict] = []
+        self._held: DataFrame | None = None  # checkpoint behind the live in-memory state
+        self.last_durable: int | None = None
         if checkpoint_dir:
             os.makedirs(checkpoint_dir, exist_ok=True)
+
+    def durable(self, superstep: int) -> bool:
+        """Whether `superstep` falls on the durable cadence. Never the
+        initial state: superstep 0 is recomputed, not resumed."""
+        return (
+            self.checkpoint_dir is not None
+            and superstep > 0
+            and superstep % self.checkpoint_every == 0
+        )
 
     def step(
         self, df: DataFrame, superstep: int, metrics: dict | None = None, value_col: str | None = None
     ) -> DataFrame:
         """Materialize this superstep's state; returns the DataFrame to
         use for the next iteration (re-read from checkpoint when a
-        durable snapshot was taken, truncating lineage)."""
-        durable = self.checkpoint_dir is not None and superstep % self.checkpoint_every == 0
-        meta = {"superstep": superstep, "ts": time.time(), **(metrics or {})}
-        if durable:
+        durable snapshot was taken, truncating lineage). The previous
+        in-memory state is released, so it must not be read again."""
+        held = None
+        if self.durable(superstep):
             path = os.path.join(self.checkpoint_dir, f"step_{superstep:06d}")
             df.write.mode("overwrite").parquet(os.path.join(path, "state"))
             out = self.spark.read.parquet(os.path.join(path, "state"))
+            meta = {"superstep": superstep, "ts": time.time(), **(metrics or {})}
             meta["partitions"] = partition_metrics(out, value_col)
             with open(os.path.join(path, "meta.json"), "w") as f:
                 json.dump(meta, f)
@@ -222,28 +255,23 @@ class IterationCache:
             with open(os.path.join(path, "_SUCCESS_META"), "w") as f:
                 f.write("ok")
             self._gc(keep=2)
+            self.last_durable = superstep
         else:
-            # eager checkpoint EVERY step, with the origin-plan link
-            # severed (`truncate_plan`): materializes, truncates RDD
-            # lineage, AND truncates the LOGICAL origin chain. A plain
+            # `truncate_plan`, keeping the checkpoint to release: a plain
             # persist() keeps the full logical tree (measured: per-step
-            # cost degrades 0.5s → tens of seconds within 8 iterations);
-            # a plain localCheckpoint() keeps the origin-plan reference,
-            # whose stats walk turns exponential past ~16 steps on any
-            # state with a frontier/accumulator diamond (see
-            # truncate_plan's docstring for the measured blowup).
-            out = truncate_plan(df)
-        if self._prev is not None:
-            try:
-                self._prev.unpersist()
-            except Exception:
-                pass
-        self._prev = out if not durable else None
-        self.history.append(meta)
+            # cost degrades 0.5s → tens of seconds within 8 iterations)
+            held = df.localCheckpoint(eager=True)
+            out = _sever(held)
+        if self._held is not None:
+            _release(self._held)
+        self._held = held
         return out
 
     def latest(self) -> tuple[int, DataFrame, dict] | None:
-        """Most recent complete durable checkpoint, or None."""
+        """Most recent complete durable checkpoint, or None. Raises
+        `RuntimeError` when the re-read state's row count differs from
+        the per-partition rows its meta.json recorded (a lost or
+        truncated part file)."""
         if not self.checkpoint_dir or not os.path.isdir(self.checkpoint_dir):
             return None
         steps = sorted(
@@ -258,6 +286,13 @@ class IterationCache:
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
         df = self.spark.read.parquet(os.path.join(path, "state"))
+        want = sum(p["rows"] for p in meta["partitions"])
+        got = df.count()
+        if got != want:
+            raise RuntimeError(
+                f"checkpoint {path} is damaged: its state has {got} rows, "
+                f"meta.json records {want}"
+            )
         return int(meta["superstep"]), df, meta
 
     def _gc(self, keep: int) -> None:
@@ -267,10 +302,84 @@ class IterationCache:
         for d in steps[:-keep]:
             shutil.rmtree(os.path.join(self.checkpoint_dir, d), ignore_errors=True)
 
-    def close(self) -> None:
-        if self._prev is not None:
-            try:
-                self._prev.unpersist()
-            except Exception:
-                pass
-            self._prev = None
+
+class SuperstepDriver:
+    """The superstep loop of a resumable kernel.
+
+    Create it when the kernel starts (it also times the whole call,
+    `millis`), then hand `run` the kernel's own parts: init state,
+    restore-from-snapshot, and step body with its convergence test.
+    The driver owns the `IterationCache` (`cache`, which the step body
+    materializes through), resume from the latest snapshot, AQE off,
+    one `check_termination` per superstep (the reference checks one
+    `TerminationFlag` in every kernel loop), wall timing, and the
+    per-superstep record appended to `history`::
+
+        {"superstep": n, "secs": wall seconds, "durable": wrote a snapshot,
+         **the fields the step body returned}
+
+    After `run`, `ran` is the last superstep reached and `stopped` says
+    whether the step body ended the loop before `last`.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        checkpoint_dir: str | None = None,
+        checkpoint_every: int = 5,
+        termination=None,
+    ):
+        self.spark = spark
+        self.termination = termination
+        self.cache = IterationCache(spark, checkpoint_dir, checkpoint_every)
+        self.history: list[dict] = []
+        self.ran = 0
+        self.stopped = False
+        self._t0 = time.time()
+
+    def run(
+        self,
+        last: int,
+        init: Callable[[], Any],
+        restore: Callable[[DataFrame, dict], Any],
+        step: Callable[[int, Any], tuple[Any, dict, bool]],
+        resume: bool = False,
+    ) -> Any:
+        """Run supersteps 1..`last` and return the final kernel state.
+
+        - ``init()``: the initial state (superstep 0).
+        - ``restore(df, meta)``: the state rebuilt from the latest
+          durable snapshot's frame and meta.json; with ``resume`` and a
+          snapshot present it replaces ``init`` and the loop starts at
+          the snapshot's superstep + 1.
+        - ``step(n, state) -> (state, fields, stop)``: superstep ``n``;
+          ``fields`` join its history record, a truthy ``stop`` ends the
+          loop.
+        """
+        latest = self.cache.latest() if resume else None
+        if latest is None:
+            first, state = 1, init()
+        else:
+            done, df, meta = latest
+            first, state = done + 1, restore(df, meta)
+        self.ran = first - 1
+        with adaptive_disabled(self.spark):
+            for n in range(first, last + 1):
+                check_termination(self.spark, self.termination, n)
+                t = time.time()
+                state, fields, stop = step(n, state)
+                self.history.append({
+                    "superstep": n,
+                    "secs": round(time.time() - t, 2),
+                    "durable": self.cache.last_durable == n,
+                    **fields,
+                })
+                self.ran = n
+                if stop:
+                    self.stopped = True
+                    break
+        return state
+
+    def millis(self) -> int:
+        """Milliseconds since the driver was created."""
+        return int((time.time() - self._t0) * 1000)

@@ -73,13 +73,7 @@ elif kernel == "wcc":
     _c, stats = wcc(g, max_iterations=supersteps, assume_deduped=True,
                     num_partitions=parts)
     dt = time.time() - t0
-    # per-superstep durations from the IterationCache meta timestamps.
-    # ts marks the START of each step's materialization, so diff i
-    # covers superstep i end-to-end (shifted by one); the FIRST diff is
-    # the O(V) init materialization, not a superstep — dropped, else it
-    # pollutes the fastest-step floor with a latency-bound entry
-    ts = [h["ts"] for h in stats["history"]]
-    step_seconds = [round(ts[i] - ts[i-1], 3) for i in range(2, len(ts))]
+    step_seconds = [h["secs"] for h in stats["history"]]
     fold_steps = []
     iters = stats["iterations"]
 else:

@@ -1,13 +1,22 @@
 """Durable superstep checkpoints: per-partition lineage metrics in
-meta.json, and bit-identical resume from the latest snapshot."""
+meta.json, bit-identical resume from the latest snapshot, refusal of a
+damaged snapshot, release of in-memory states, and kill-and-resume of
+every kernel the superstep driver runs."""
 
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from neo4j_graph_algorithms_spark.graph import Graph
+from neo4j_graph_algorithms_spark.operators.kcore import core_decomposition
+from neo4j_graph_algorithms_spark.operators.label_propagation import label_propagation
+from neo4j_graph_algorithms_spark.operators.neighborhood import neighborhood_function
 from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
+from neo4j_graph_algorithms_spark.operators.random_walk import random_walks
+from neo4j_graph_algorithms_spark.operators.wcc import wcc
+from neo4j_graph_algorithms_spark.plans.checkpointing import IterationCache, TerminatedError
 
 EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (1, 3)]
 
@@ -54,3 +63,149 @@ def test_resume_matches_uninterrupted_run(spark, tmp_path):
     assert stats["history"][0]["superstep"] == 6  # really resumed, not re-run
     for k, v in expected.items():
         assert abs(got[k] - v) < 1e-12, (k, got[k], v)
+
+
+def _cached_rdds(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    # storage info comes from the status store, fed by the async listener bus
+    sc.listenerBus().waitUntilEmpty()
+    return len(sc.getRDDStorageInfo())
+
+
+def test_iteration_cache_releases_previous_state(spark):
+    """Each in-memory step frees the previous state's checkpoint blocks
+    (`DataFrame.unpersist` is a no-op on them): over six steps at most
+    one state stays cached, and that state stays readable."""
+    n = 20000
+    before = _cached_rdds(spark)
+    cache = IterationCache(spark)
+    state = spark.range(n).select("id", F.col("id").alias("v"))
+    for step in range(1, 7):
+        state = cache.step(state.select("id", (F.col("v") + 1).alias("v")), step)
+        assert _cached_rdds(spark) - before <= 1, step
+    assert state.agg(F.sum("v")).collect()[0][0] == sum(range(n)) + 6 * n
+
+
+def test_resume_refuses_snapshot_with_missing_part(spark, tmp_path):
+    """A snapshot whose re-read state lost rows (here: one deleted part
+    file) must not be resumed from; meta.json's per-partition rows are
+    the check."""
+    ckpt = str(tmp_path / "ck3")
+    g = Graph.from_edge_list(spark, EDGES, n_nodes=5)
+    pagerank(g, max_iterations=2, checkpoint_dir=ckpt, checkpoint_every=2)
+    state = os.path.join(ckpt, "step_000002", "state")
+    parts = [os.path.join(state, f) for f in os.listdir(state) if f.startswith("part-")]
+    os.remove(max(parts, key=os.path.getsize))
+    with pytest.raises(RuntimeError, match="meta.json records 5"):
+        pagerank(g, max_iterations=4, checkpoint_dir=ckpt, checkpoint_every=2, resume=True)
+
+
+# kill-and-resume: kernel -> (edges, n_nodes, run(graph, **kw) -> (result
+# dict, stats), supersteps before the kill, durable cadence, rel tolerance)
+def _pagerank(g, **kw):
+    ranks, stats = pagerank(g, max_iterations=8, fuse=2, **kw)
+    return {r.id: r.rank for r in ranks.collect()}, stats
+
+
+def _wcc(g, **kw):
+    comp, stats = wcc(g, **kw)
+    return {r.id: r.component for r in comp.collect()}, stats
+
+
+def _lpa(g, **kw):
+    labels, stats = label_propagation(g, iterations=8, direction="both", **kw)
+    return {r.id: r.label for r in labels.collect()}, stats
+
+
+def _kcore(g, **kw):
+    cores, stats = core_decomposition(g, **kw)
+    return {r.id: r.core for r in cores.collect()}, stats
+
+
+def _anf(g, **kw):
+    # the SKETCH state round-trips exactly; the per-depth float SUM may
+    # differ in the last ulp (parquet re-read changes the summation
+    # order), hence the case's relative tolerance
+    series, stats = neighborhood_function(g, max_depth=6, p=6, **kw)
+    return {r.depth: r.n_pairs_est for r in series.collect()}, stats
+
+
+def _walks(g, **kw):
+    walks, stats = random_walks(g, walk_length=8, walks_per_node=2, seed=11, **kw)
+    return {(r.source, r.rep, r.step): r.node for r in walks.collect()}, stats
+
+
+_CLIQUE = [100, 101, 102, 0]
+KILL_RESUME = {
+    # cycle with chords; killed past the last snapshot, so superstep 5 reruns
+    "pagerank": (
+        [(i, (i + 1) % 30) for i in range(30)] + [(i, 0) for i in range(1, 30, 7)],
+        30, _pagerank, 5, 2, 1e-9,
+    ),
+    # long path (slow min-label convergence) + a separate clique
+    "wcc": (
+        [(i, i + 1) for i in range(40)] + [(50, 51), (51, 52), (52, 50)],
+        53, _wcc, 3, 3, 0,
+    ),
+    "label_propagation": (
+        [(i, i + 1, 1.0) for i in range(30)]
+        + [(40 + a, 40 + b, 1.0) for a in range(5) for b in range(5) if a < b],
+        45, _lpa, 4, 2, 0,
+    ),
+    # deep h-index run: a path with a 4-clique glued at node 0
+    "kcore": (
+        [(i, i + 1) for i in range(19)]
+        + [(a, b) for a in _CLIQUE for b in _CLIQUE if a < b],
+        None, _kcore, 4, 4, 0,
+    ),
+    "neighborhood": (
+        [(i, i + 1) for i in range(15)] + [(i, (i + 4) % 15) for i in range(15)],
+        None, _anf, 3, 3, 1e-12,
+    ),
+    # every node has an out-edge, so no walk ends early
+    "random_walk": (
+        [(i, (i * 3 + 1) % 30) for i in range(30)] + [(i, (i * 7 + 2) % 30) for i in range(30)],
+        None, _walks, 4, 4, 0,
+    ),
+}
+
+
+class _Checks:
+    """Termination callable counting its calls; stops the run at call
+    ``stop_after + 1`` when given."""
+
+    def __init__(self, stop_after=None):
+        self.stop_after, self.calls = stop_after, 0
+
+    def __call__(self):
+        self.calls += 1
+        return self.stop_after is not None and self.calls > self.stop_after
+
+
+@pytest.mark.parametrize("kernel", list(KILL_RESUME))
+def test_kill_and_resume(spark, tmp_path, kernel):
+    """A run stopped through its termination callable after k supersteps
+    under a durable cadence, then resumed, equals an uninterrupted run;
+    the resumed history starts right after the last snapshot, and the
+    callable ran once per superstep."""
+    edges, n_nodes, run, k, every, rel = KILL_RESUME[kernel]
+    g = Graph.from_edge_list(spark, edges, n_nodes=n_nodes)
+    want, full = run(g)
+    assert len(full["history"]) > k  # deep enough to interrupt
+
+    ckpt = str(tmp_path / kernel)
+    killed = _Checks(stop_after=k)
+    with pytest.raises(TerminatedError):
+        run(g, checkpoint_dir=ckpt, checkpoint_every=every, termination=killed)
+    assert killed.calls == k + 1
+
+    checks = _Checks()
+    got, stats = run(
+        g, checkpoint_dir=ckpt, checkpoint_every=every, resume=True, termination=checks
+    )
+    assert got == pytest.approx(want, rel=rel, abs=0)
+    assert stats["history"][0]["superstep"] == k // every * every + 1
+    assert checks.calls == len(stats["history"])
+    for key in ("iterations", "ranIterations", "rounds", "depths_run", "steps_run",
+                "didConverge"):
+        assert stats.get(key) == full.get(key), key

@@ -311,59 +311,6 @@ def test_embedding_near_pairs_exact_and_lsh(spark):
         embedding_near_pairs(emb, method="bogus")
 
 
-# ------------------------------------------------- resumable WCC / LPA
-
-def test_wcc_resume_matches_uninterrupted_run(spark, tmp_path):
-    """North-rule "resumable from checkpoint": a WCC run killed after a
-    durable snapshot, restarted with resume=True, converges to the same
-    partition as an uninterrupted run — and really resumes (superstep
-    history starts past the snapshot) rather than re-initializing."""
-    from neo4j_graph_algorithms_spark.operators.wcc import wcc
-
-    # long path (slow min-label convergence) + a separate clique
-    edges = [(i, i + 1) for i in range(40)] + [(50, 51), (51, 52), (52, 50)]
-    g = Graph.from_edge_list(spark, edges, n_nodes=53)
-    full, full_stats = wcc(g)
-    want = {r["id"]: r["component"] for r in full.collect()}
-
-    ckpt = str(tmp_path / "wcc_ck")
-    wcc(g, max_iterations=3, checkpoint_dir=ckpt, checkpoint_every=3)
-    resumed, stats = wcc(
-        g, checkpoint_dir=ckpt, checkpoint_every=3, resume=True
-    )
-    got = {r["id"]: r["component"] for r in resumed.collect()}
-    assert got == want
-    assert stats["didConverge"]
-    assert stats["history"][0]["superstep"] == 4  # resumed, not re-run
-
-
-def test_lpa_resume_matches_uninterrupted_run(spark, tmp_path):
-    """LPA is deterministic (sync half-steps + total-order tie-break),
-    so resuming from superstep k's labels must replay k+1.. identically."""
-    from neo4j_graph_algorithms_spark.operators.label_propagation import (
-        label_propagation,
-    )
-
-    edges = [(i, i + 1, 1.0) for i in range(30)] + [
-        (40 + a, 40 + b, 1.0) for a in range(5) for b in range(5) if a < b
-    ]
-    g = Graph.from_edge_list(spark, edges, n_nodes=45)
-    full, _ = label_propagation(g, iterations=8, direction="both")
-    want = {r["id"]: r["label"] for r in full.collect()}
-
-    ckpt = str(tmp_path / "lpa_ck")
-    label_propagation(
-        g, iterations=4, direction="both", checkpoint_dir=ckpt, checkpoint_every=2
-    )
-    resumed, stats = label_propagation(
-        g, iterations=8, direction="both",
-        checkpoint_dir=ckpt, checkpoint_every=2, resume=True,
-    )
-    got = {r["id"]: r["label"] for r in resumed.collect()}
-    assert got == want
-    assert stats["history"][0]["superstep"] == 5  # resumed from step-4 snapshot
-
-
 # ------------------------------------------- review-pass regressions
 
 def test_embedding_near_pairs_excludes_zero_norm_and_null(spark):
