@@ -17,22 +17,25 @@ a monotone fixpoint) — because both engines are deterministic given
 synchronous semantics. Floating-point columns are rounded (6 dp) on
 BOTH sides so summation order can't flip the value hash.
 
-56 queries: 50 oracle-backed, 6 rows-only (`minhash_dedup_pairs`,
-`simhash_pairs`, `ann_lsh_topk`, `neighborhood_hll`, `random_walks64`,
-`louvain_multilevel` — each rides seeded hashing or an
-argmax-contraction hierarchy that plain SQL can't replay). Each
-rows-only query has an ORACLE-BACKED `*_check` twin that computes its
-SQL-verifiable invariants Spark-side (edge-valid transitions and exact
-walker counts; refinement-consistent coarsening; monotone ±10%-of-exact
-HLL estimates; planted-duplicate recall floors) against constants the
-DuckDB side derives from the base tables — so the driver gate verifies
-every operator, not just the hash-reproducible ones; the raw outputs
+Each query is declared once, where it is defined: ``@query(oracle,
+headline=..., check=...)`` on its ``q_<name>`` function registers a
+`Query` in `QUERIES`, and `queries()`, `oracle_sql()` and bench.py's
+`HEADLINE` are derived from that table. An oracle-backed query carries
+its DuckDB SQL; a rows-only query (seeded hashing or an
+argmax-contraction hierarchy that plain SQL can't replay) names its
+ORACLE-BACKED `*_check` twin, which computes the query's SQL-verifiable
+invariants Spark-side (edge-valid transitions and exact walker counts;
+refinement-consistent coarsening; monotone ±10%-of-exact HLL estimates;
+planted-duplicate recall floors) against constants the DuckDB side
+derives from the base tables — so the driver gate verifies every
+operator, not just the hash-reproducible ones; the raw outputs
 additionally stay differential-tested in pytest.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,6 +125,8 @@ resolved AS MATERIALIZED (
 ),
 e AS MATERIALIZED (SELECT DISTINCT src, dst FROM resolved)
 """
+# the same CTEs as a query's WITH clause
+_SQL_EDGES_CTE = "WITH " + _SQL_DOC_EDGES.strip().rstrip(",")
 
 
 def _sql_pagerank_unrolled(
@@ -772,7 +777,7 @@ SELECT doc_id, lang AS lang_pred FROM (
 
 
 # --------------------------------------------------------------------------
-# driver contract
+# driver contract: one table of queries, each entry declared by `@query`
 # --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -785,952 +790,291 @@ def entry(spark: SparkSession) -> DataFrame:
     return ranks.select("id", F.round("rank", ROUND).alias("rank"))
 
 
+class Query(NamedTuple):
+    name: str  # the function's name without its `q_` prefix
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None  # DuckDB SQL; None for a rows-only query
+    headline: bool  # floor-tracked by bench.py
+    check: str | None  # a rows-only query's oracle-backed `*_check` twin
+
+
+QUERIES: list[Query] = []
+
+
+def query(
+    oracle: str | None = None, *, headline: bool = False, check: Callable | None = None
+):
+    """Register the decorated ``q_<name>(spark, sf_dir)`` in `QUERIES`
+    as query ``<name>``, with its DuckDB ``oracle`` SQL or, for a
+    rows-only query, the ``check`` twin function whose oracle verifies
+    its invariants."""
+
+    def register(fn):
+        QUERIES.append(Query(
+            fn.__name__.removeprefix("q_"), fn, oracle, headline,
+            check and check.__name__.removeprefix("q_"),
+        ))
+        return fn
+
+    return register
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from neo4j_graph_algorithms_spark.graph import Graph
-    from neo4j_graph_algorithms_spark.operators.label_propagation import (
-        label_propagation,
-    )
-    from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
-    from neo4j_graph_algorithms_spark.operators.triangles import (
-        triangle_count,
-        triangle_stream,
-    )
-    from neo4j_graph_algorithms_spark.operators.wcc import component_stats, wcc
-
-    def q_link_edges(spark, sf):
-        return _doc_link_rows(spark, sf).orderBy("src", "dst")
-
-    def q_out_degree(spark, sf):
-        g = _doc_graph(spark, sf)
-        return g.edges.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").alias("out_degree")
-        )
-
-    def q_degree_distribution(spark, sf):
-        g = _doc_graph(spark, sf)
-        indeg = g.edges.groupBy(F.col("dst").alias("id")).agg(
-            F.count("*").alias("degree")
-        )
-        return indeg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
-
-    def q_pagerank(spark, sf):
-        g = _doc_graph(spark, sf).cache()
-        ranks, _ = pagerank(g, damping=0.85, max_iterations=5)
-        return ranks.select("id", F.round("rank", ROUND).alias("rank"))
-
-    def q_pagerank_personalized(spark, sf):
-        # personalized PageRank (extension): teleport mass seeded at
-        # doc ids < 16 only; same delta-push recurrence, so the oracle
-        # is the standard unrolled chain with a seeded init
-        g = _doc_graph(spark, sf).cache()
-        seeds = (
-            _read(spark, sf, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .filter(F.col("id") < 16)
-        )
-        ranks, _ = pagerank(g, damping=0.85, max_iterations=5, source_nodes=seeds)
-        return ranks.select("id", F.round("rank", ROUND).alias("rank"))
-
-    def q_article_rank(spark, sf):
-        # ArticleRank (extension, ships in later Neo4j releases): the
-        # push denominator is outDegree + avgOutDegree (E/V), damping
-        # low-out-degree citers; same delta-push kernel otherwise
-        g = _doc_graph(spark, sf).cache()
-        ranks, _ = pagerank(g, damping=0.85, max_iterations=5, article=True)
-        return ranks.select("id", F.round("rank", ROUND).alias("rank"))
-
-    def q_pagerank_warm(spark, sf):
-        # warm-start / incremental PageRank (extension): restart from a
-        # 3-iteration estimate; the residual pass applies exactly the
-        # cold delta_4 and one loop superstep applies delta_5, so the
-        # result is bit-for-float-bit the cold 5-iteration chain — the
-        # same unrolled SQL oracle as `pagerank`
-        g = _doc_graph(spark, sf).cache()
-        r3, _ = pagerank(g, damping=0.85, max_iterations=3)
-        ranks, _ = pagerank(g, damping=0.85, max_iterations=1, init_ranks=r3)
-        return ranks.select("id", F.round("rank", ROUND).alias("rank"))
-
-    def q_pagerank_weighted(spark, sf):
-        # weighted PageRank (extension): push fraction w/Σw with a
-        # deterministic weight on BOTH endpoints ((src+2*dst)%7)+1 — a
-        # src-only weight would cancel back to the uniform 1/deg split
-        # and test nothing
-        edges = (
-            _doc_link_rows(spark, sf).select("src", "dst").withColumn(
-                "weight",
-                (F.pmod(F.col("src") + 2 * F.col("dst"), F.lit(7)) + 1).cast("double"),
-            )
-        )
-        nodes = _read(spark, sf, "documents").select(F.col("doc_id").alias("id"))
-        g = Graph.from_edges(edges, nodes=nodes, weight="weight", dedup=True).cache()
-        ranks, _ = pagerank(g, damping=0.85, max_iterations=5, weighted=True)
-        return ranks.select("id", F.round("rank", ROUND).alias("rank"))
-
-    def q_wcc(spark, sf):
-        li = _read(spark, sf, "lineitem")
-        edges = li.select(
-            F.col("l_partkey").alias("src"),
-            (F.col("l_suppkey") + 1000000).alias("dst"),
-            F.col("l_quantity").alias("weight"),
-        )
-        g = Graph.from_edges(edges, weight="weight", dedup=True).cache()
-        # edges are strictly partkey -> suppkey+1e6 (one direction, no
-        # reciprocal pairs) and already deduped upstream, so the
-        # symmetric union inside wcc cannot contain duplicates — skip
-        # its O(E) distinct() shuffle
-        comp, _ = wcc(g, threshold=48.0, assume_deduped=True)
-        return comp
-
-    def q_wcc_sizes(spark, sf):
-        comp = q_wcc(spark, sf)
-        _, sizes = component_stats(comp)
-        return sizes.select("component", F.col("size").alias("n_nodes"))
-
-    def q_triangles(spark, sf):
-        g = _doc_graph(spark, sf).cache()
-        per_node, _ = triangle_count(g)
-        return per_node.select(
-            "id", "triangles", F.round("coefficient", ROUND).alias("coefficient")
-        )
-
-    def q_triangle_triples(spark, sf):
-        # `algo.triangle.stream` — the raw (a, b, c) triple surface
-        # (impl/TriangleStream.java:95-160); each unordered triangle
-        # once, corners ascending, so the id-oriented SQL `tri` CTE is
-        # its exact twin
-        g = _doc_graph(spark, sf).cache()
-        return triangle_stream(g)
-
-    def q_triangle_stats(spark, sf):
-        g = _doc_graph(spark, sf).cache()
-        per_node, stats = triangle_count(g)
-        return spark.createDataFrame(
-            [(int(stats["triangleCount"]),
-              round(float(stats["averageClusteringCoefficient"]), ROUND))],
-            "triangle_count long, avg_coefficient double",
-        )
-
-    def q_lpa(spark, sf):
-        g = _doc_graph(spark, sf).cache()
-        labels, _ = label_propagation(g, iterations=2, seed_col=None)
-        return labels
-
-    def q_exact_dup_groups(spark, sf):
-        docs = _read(spark, sf, "documents")
-        return docs.groupBy(F.sha2("text", 256).alias("text_sha256")).agg(
-            F.count("*").alias("n_docs")
-        )
-
-    def q_token_counts(spark, sf):
-        docs = _read(spark, sf, "documents")
-        return docs.select(
-            "doc_id",
-            F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
-        )
-
-    def q_quality_scores(spark, sf):
-        docs = _read(spark, sf, "documents")
-        t = F.col("text")
-        ln = F.length(t)
-        return docs.select(
-            "doc_id",
-            ln.alias("n_chars"),
-            F.round(F.length(F.regexp_replace(t, "[^a-zA-Z]", "")) / ln, ROUND).alias("alpha_ratio"),
-            F.round(F.length(F.regexp_replace(t, "[^0-9]", "")) / ln, ROUND).alias("digit_ratio"),
-            F.round(F.length(F.regexp_replace(t, "[^ ]", "")) / ln, ROUND).alias("space_ratio"),
-        )
-
-    def q_lang_id(spark, sf):
-        return _langid_spark(_read(spark, sf, "documents"))
-
-    def q_doc_fingerprint(spark, sf):
-        docs = _read(spark, sf, "documents")
-        head = F.substring(F.col("text"), 1, 256)
-        shingles = F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(head) - 7, F.lit(1))),
-            lambda i: F.md5(head.substr(i, F.lit(8))),
-        )
-        return docs.select("doc_id", F.array_min(shingles).alias("fingerprint"))
-
-    def q_embedding_topk(spark, sf):
-        emb = _read(spark, sf, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
-        pairs = q.crossJoin(emb.filter(F.col("vec_id") >= 5))
-        dot = F.aggregate(
-            F.zip_with("qv", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        )
-        nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda acc, x: acc + x * x))
-        nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-        sims = pairs.select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            (dot / (nq * nv)).alias("sim"),
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3)
-            .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
-        )
-
-    def q_ngram_dedup_pairs(spark, sf):
-        from neo4j_graph_algorithms_spark.pipeline.dedup import ngram_jaccard_pairs
-
-        docs = _read(spark, sf, "documents")
-        pairs = ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.85)
-        return pairs.select("id_a", "id_b", F.round("jaccard", ROUND).alias("jaccard"))
-
-    def q_filter_corpus(spark, sf):
-        # composite pre-train quality gate — one projection over the
-        # scan; the oracle SQL is GENERATED from the same constants
-        from neo4j_graph_algorithms_spark.pipeline.text import filter_corpus
-
-        docs = _read(spark, sf, "documents")
-        out = filter_corpus(docs, **_FILTER_THRESH)
-        return out.select(
-            "id", "n_chars", "n_tokens",
-            F.round("alpha_ratio", ROUND).alias("alpha_ratio"),
-            F.round("digit_ratio", ROUND).alias("digit_ratio"),
-            F.round("punct_ratio", ROUND).alias("punct_ratio"),
-            F.round("stopword_density", ROUND).alias("stopword_density"),
-            "lang_pred", "reject_reason",
-            F.col("keep").cast("int").alias("keep"),
-        )
-
-    def q_ngram_dup_clusters(spark, sf):
-        # pair list -> transitive clusters -> canonical survivor: the
-        # step a production dedup pipeline runs after pair generation
-        # (WCC min-label fixpoint over the pair graph, then one corpus
-        # left join). int-cast the flag for engine-neutral hashing.
-        # k=20 shingles: the synthetic corpus has a tiny 3-gram
-        # vocabulary (~400 distinct shingles across 5k docs), so k=3
-        # fans the shingle self-join out quadratically at sf0.1; 20-char
-        # shingles are near-unique (df~1) and keep the join linear while
-        # still catching the near-identical dup pairs the corpus plants.
-        from neo4j_graph_algorithms_spark.pipeline.dedup import (
-            dup_clusters,
-            ngram_jaccard_pairs,
-        )
-
-        docs = _read(spark, sf, "documents")
-        pairs = ngram_jaccard_pairs(docs, shingle_k=20, threshold=0.85)
-        out = dup_clusters(docs, pairs)
-        return out.select(
-            "id", "cluster_id", F.col("is_canonical").cast("int").alias("is_canonical")
-        )
-
-    def q_minhash_dedup_pairs(spark, sf):
-        # rows-only check (seeded MinHash permutations aren't SQL-expressible);
-        # the estimator itself is differential-tested against exact Jaccard
-        # in tests/test_pipeline.py
-        from neo4j_graph_algorithms_spark.pipeline.dedup import minhash_lsh_pairs
-
-        docs = _read(spark, sf, "documents")
-        return minhash_lsh_pairs(docs, threshold=0.8, num_hashes=64, bands=16).select(
-            "id_a", "id_b", F.round("jaccard_est", ROUND).alias("jaccard_est")
-        )
-
-    def q_simhash_pairs(spark, sf):
-        # rows-only: xxhash64-seeded SimHash not SQL-expressible
-        from neo4j_graph_algorithms_spark.pipeline.dedup import simhash_near_pairs
-
-        docs = _read(spark, sf, "documents")
-        return simhash_near_pairs(docs, max_distance=3)
-
-    def q_ann_lsh_topk(spark, sf):
-        # rows-only: hyperplane-LSH candidates re-ranked exactly; recall
-        # vs the exact `embedding_topk` oracle is asserted in tests
-        from neo4j_graph_algorithms_spark.pipeline.similarity import lsh_cosine_topk
-
-        emb = _read(spark, sf, "embeddings")
-        q = emb.filter(F.col("vec_id") < 5)
-        c = emb.filter(F.col("vec_id") >= 5)
-        out = lsh_cosine_topk(q, c, k=3, n_tables=8, n_bits=8)
-        return out.select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
-
-    def q_sssp_hops12(spark, sf):
-        # 12-hop-bounded weighted SSSP from doc 0 (frontier Bellman-Ford
-        # after k rounds == min cost over paths of <= k edges, so a
-        # k-round unrolled SQL relaxation is the exact oracle);
-        # deterministic edge weight (src % 7) + 1 on the deduped graph
-        from neo4j_graph_algorithms_spark.graph import Graph
-        from neo4j_graph_algorithms_spark.operators.shortest_path import (
-            INF,
-            shortest_paths,
-        )
-
-        edges = (
-            _doc_link_rows(spark, sf).select("src", "dst").distinct()
-            .withColumn("weight", (F.pmod("src", F.lit(7)) + 1).cast("double"))
-        )
-        nodes = _read(spark, sf, "documents").select(F.col("doc_id").alias("id"))
-        g = Graph.from_edges(edges, nodes=nodes, weight="weight")
-        dist, _ = shortest_paths(g, source=0, max_iterations=12)
-        return dist.filter(F.col("distance") < INF).select(
-            "id", F.round("distance", ROUND).alias("distance")
-        )
-
-    def q_apsp_hops4(spark, sf):
-        # depth-4-bounded unweighted all-pairs over the doc graph — the
-        # MS-BFS engine's oracle row (depth >= 1 pairs only, like the
-        # reference stream)
-        from neo4j_graph_algorithms_spark.operators.msbfs import all_shortest_paths
-
-        g = _doc_graph(spark, sf)
-        return all_shortest_paths(g, direction="out", max_depth=4)
-
-    def q_graph_summary(spark, sf):
-        # whole-graph profile (extension): one-row summary + degree
-        # assortativity over the doc link graph — pure aggregates
-        from neo4j_graph_algorithms_spark.operators.graph_stats import (
-            degree_assortativity,
-            graph_summary,
-        )
-
-        g = _doc_graph(spark, sf)
-        r = degree_assortativity(g)
-        return graph_summary(g).select(
-            "n_nodes", "n_edges",
-            F.round("density", 9).alias("density"),
-            "min_out", "max_out",
-            F.round("avg_out", ROUND).alias("avg_out"),
-            "dangling",
-            F.round(F.lit(r).cast("double"), ROUND).alias("assortativity"),
-        )
-
-    def q_node_jaccard(spark, sf):
-        # neighborhood-Jaccard node similarity (extension; the era's
-        # companion library ships algo.similarity.jaccard): same
-        # shared-neighbor join algebra as the exact n-gram dedup plan
-        from neo4j_graph_algorithms_spark.operators.node_similarity import (
-            node_similarity,
-        )
-
-        g = _doc_graph(spark, sf)
-        out = node_similarity(g, threshold=0.15, direction="out")
-        return out.select(
-            "id_a", "id_b", F.round("similarity", ROUND).alias("similarity")
-        )
-
-    def q_node_overlap(spark, sf):
-        # overlap-coefficient variant (|A∩B| / min|A|,|B|) of the same
-        # shared-neighbor plan — subset-affinity detection
-        from neo4j_graph_algorithms_spark.operators.node_similarity import (
-            node_similarity,
-        )
-
-        g = _doc_graph(spark, sf)
-        out = node_similarity(g, threshold=0.34, direction="out", metric="overlap")
-        return out.select(
-            "id_a", "id_b", F.round("similarity", ROUND).alias("similarity")
-        )
-
-    def q_doc_sample_10pct(spark, sf):
-        # deterministic Bernoulli-style sample: a pure filter on the
-        # Knuth multiplicative hash order — identical formula in the
-        # oracle, so the kept set matches row-for-row
-        from neo4j_graph_algorithms_spark.pipeline.sampling import hash_sample
-
-        docs = _read(spark, sf, "documents")
-        return hash_sample(docs, 0.1).select("doc_id")
-
-    def q_doc_sample_stratified(spark, sf):
-        # 5 docs per token-count bucket (width 50), hash-ordered with
-        # id tie-break — exactly min(5, |bucket|) rows per stratum
-        from neo4j_graph_algorithms_spark.pipeline.sampling import (
-            stratified_sample,
-        )
-        from neo4j_graph_algorithms_spark.pipeline.text import token_counts
-
-        docs = _read(spark, sf, "documents")
-        toks = token_counts(docs)
-        bucketed = toks.select(
-            "doc_id", F.floor(F.col("n_tokens") / 50).cast("int").alias("bucket")
-        )
-        return stratified_sample(bucketed, ["bucket"], 5)
-
-    def q_random_walks64(spark, sf):
-        # rows-only: the walk's neighbor choice is xxhash64-seeded (not
-        # SQL-expressible); forced-path / edge-validity / determinism /
-        # spread properties are tested in tests/test_round4.py. 64
-        # sources × 2 reps × 4 steps over the doc graph — deterministic
-        # given (graph, seed), so rows are stable across runs.
-        from neo4j_graph_algorithms_spark.operators.random_walk import (
-            random_walks,
-        )
-
-        g = _doc_graph(spark, sf)
-        srcs = (
-            _read(spark, sf, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .filter(F.col("id") < 64)
-        )
-        out, _ = random_walks(g, walk_length=4, walks_per_node=2, sources=srcs)
-        return out
-
-    def q_kcore45(spark, sf):
-        # core decomposition (EXTENSION): iterative h-index fixpoint on
-        # the quantity≥45 part–supplier bipartite graph (cores 1..6 at
-        # sf0.01 — heterogeneous, unlike the near-regular doc graph);
-        # oracle = the same recurrence unrolled past convergence depth
-        from neo4j_graph_algorithms_spark.operators.kcore import (
-            core_decomposition,
-        )
-
-        li = _read(spark, sf, "lineitem")
-        edges = li.filter(F.col("l_quantity") >= 45.0).select(
-            F.col("l_partkey").alias("src"),
-            (F.col("l_suppkey") + 1000000).alias("dst"),
-        )
-        g = Graph.from_edges(edges, dedup=True).cache()
-        cores, _ = core_decomposition(g)
-        return cores
-
-    def q_neighborhood_exact(spark, sf):
-        # exact neighborhood function N(t) (EXTENSION, HyperANF family):
-        # cumulative reachable ordered pairs per depth via the MS-BFS
-        # (node, depth, n_sources) aggregate — never materializes pairs
-        from neo4j_graph_algorithms_spark.operators.neighborhood import (
-            neighborhood_exact,
-        )
-
-        g = _doc_graph(spark, sf)
-        return neighborhood_exact(g, max_depth=4, direction="out")
-
-    def q_neighborhood_hll(spark, sf):
-        # rows-only: the HyperANF estimate rides xxhash64-seeded HLL
-        # registers (not SQL-expressible); its accuracy vs the exact
-        # N(t) is differential-tested in tests/test_round4.py
-        from neo4j_graph_algorithms_spark.operators.neighborhood import (
-            neighborhood_function,
-        )
-
-        g = _doc_graph(spark, sf)
-        nf, _ = neighborhood_function(g, max_depth=4, p=10, direction="out")
-        return nf.select("depth", F.round("n_pairs_est", 2).alias("n_pairs_est"))
-
-    def q_louvain(spark, sf):
-        from neo4j_graph_algorithms_spark.operators.louvain import louvain
-
-        g = _doc_graph(spark, sf)
-        comm, _ = louvain(g, iterations=1)
-        return comm
-
-    def q_louvain_multilevel(spark, sf):
-        # hierarchical Louvain (local moves + community contraction) —
-        # EXTENSION beyond the single-level reference (SURVEY §2.c 16b).
-        # Deterministic (parity half-steps + ascending-community argmax
-        # tie-break at every level) but not SQL-expressible: the driver
-        # records the rows-only check; the two-level collapse semantics
-        # are pinned by tests/test_round4.py's clique fixture.
-        from neo4j_graph_algorithms_spark.operators.louvain import louvain_multilevel
-
-        g = _doc_graph(spark, sf)
-        assign, _ = louvain_multilevel(g, levels=3, iterations=2)
-        return assign.select("id", "community")
-
-    def q_tfidf_top3(spark, sf):
-        # top-3 tf-idf keywords per document — the rational
-        # tf·(N+1)/(df+1) scoring contract is engine-exact (two IEEE
-        # double ops, no libm), so rank order matches the oracle
-        # bit-for-bit (see pipeline/text.tfidf_keywords)
-        from neo4j_graph_algorithms_spark.pipeline.text import tfidf_keywords
-
-        docs = _read(spark, sf, "documents")
-        out = tfidf_keywords(docs, k=3)
-        return out.select(
-            "doc_id", "rank", "term", "tf", "df", F.round("score", ROUND).alias("score")
-        )
-
-    def q_repeated_ngrams(spark, sf):
-        # corpus-repeated word 3-grams (boilerplate/template audit):
-        # df = distinct docs containing the gram, df >= 5 — linear
-        # column algebra (tokenize → slide → distinct → one agg)
-        from neo4j_graph_algorithms_spark.pipeline.text import repeated_ngrams
-
-        docs = _read(spark, sf, "documents")
-        return repeated_ngrams(docs, n=3, min_df=5)
-
-    def q_user_sessions(spark, sf):
-        # gap-based sessionization of the event stream (480-min gap ≈
-        # the corpus median inter-event gap, so the split is non-
-        # trivial): deterministic (ts, event_id) ordering, exact
-        # integer-microsecond gap test
-        from neo4j_graph_algorithms_spark.pipeline.sessionize import sessionize
-
-        ev = _read(spark, sf, "events")
-        out = sessionize(ev, gap_minutes=480)
-        return out.select(
-            "user_id", "session_id", "n_events", "first_ts", "last_ts",
-            F.round("sum_value", ROUND).alias("sum_value"),
-        )
-
-    # -- invariant-check twins for the six rows-only queries ----------
-    # (VERDICT r4 next-round #3). Exact value oracles are impossible
-    # for seeded-hash / contraction-hierarchy operators, but each has
-    # SQL-VERIFIABLE invariants: the *_check query computes them
-    # Spark-side and the oracle states the expected constants from the
-    # base tables — a hash mismatch means the invariant broke.
-
-    def q_random_walks_check(spark, sf):
-        # random_walks64 invariants: (a) step-0 rows = sources×reps;
-        # (b) NO walker terminates early on the doc graph (every doc
-        # has out-degree ≥ 2), so total rows = sources×reps×(len+1);
-        # (c) every consecutive (t → t+1) transition is a real edge.
-        from neo4j_graph_algorithms_spark.operators.random_walk import (
-            random_walks,
-        )
-
-        g = _doc_graph(spark, sf)
-        srcs = (
-            _read(spark, sf, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .filter(F.col("id") < 64)
-        )
-        out, _ = random_walks(g, walk_length=4, walks_per_node=2, sources=srcs)
-        out = out.localCheckpoint(eager=True)
-        edges = g.edges.select("src", "dst").distinct()
-        hop_a = out.select(
-            "source", "rep", F.col("step").alias("t"), F.col("node").alias("src")
-        )
-        hop_b = out.select(
-            "source", "rep", (F.col("step") - 1).alias("t"), F.col("node").alias("dst")
-        )
-        trans = hop_a.join(hop_b, ["source", "rep", "t"]).select("src", "dst")
-        bad = trans.join(edges, ["src", "dst"], "left_anti").agg(
-            F.count("*").alias("bad_transitions")
-        )
-        counts = out.agg(
-            F.sum((F.col("step") == 0).cast("long")).alias("step0_rows"),
-            F.count("*").alias("n_rows"),
-        )
-        return counts.crossJoin(bad)
-
-    def q_louvain_multilevel_check(spark, sf):
-        # louvain_multilevel invariants: every node assigned exactly
-        # once; final labels ⊆ node ids; the hierarchy is a
-        # REFINEMENT-CONSISTENT coarsening of the (deterministic)
-        # level-0 partition — no level-0 community is split across
-        # final communities.
-        from neo4j_graph_algorithms_spark.operators.louvain import (
-            louvain,
-            louvain_multilevel,
-        )
-
-        g = _doc_graph(spark, sf)
-        assign, _ = louvain_multilevel(g, levels=3, iterations=2)
-        level0, _ = louvain(g, iterations=2)
-        j = assign.join(level0.select("id", F.col("community").alias("c0")), "id")
-        split = (
-            j.groupBy("c0")
-            .agg(F.count_distinct("community").alias("k"))
-            .filter(F.col("k") > 1)
-            .agg(F.count("*").alias("split_communities"))
-        )
-        ids = _read(spark, sf, "documents").select(F.col("doc_id").alias("community"))
-        bad = assign.join(ids, "community", "left_anti").agg(
-            F.count("*").alias("bad_labels")
-        )
-        counts = assign.agg(
-            F.count("*").alias("n_assigned"),
-            F.count_distinct("id").alias("n_ids"),
-        )
-        return counts.crossJoin(split).crossJoin(bad)
-
-    def q_neighborhood_hll_check(spark, sf):
-        # neighborhood_hll invariants vs its exact twin at the same
-        # depths: the estimate is MONOTONE in depth and within ±10% of
-        # exact N(t) (p=10 → 1024 registers, theoretical σ ≈ 3.25%;
-        # the hash is fixed, so the estimate is deterministic).
-        from pyspark.sql.window import Window
-
-        from neo4j_graph_algorithms_spark.operators.neighborhood import (
-            neighborhood_exact,
-            neighborhood_function,
-        )
-
-        g = _doc_graph(spark, sf)
-        nf, _ = neighborhood_function(g, max_depth=4, p=10, direction="out")
-        ex = neighborhood_exact(g, max_depth=4, direction="out")
-        j = nf.join(ex, "depth")
-        w = Window.orderBy("depth")
-        return j.select(
-            "depth",
-            (
-                F.abs(F.col("n_pairs_est") - F.col("n_pairs"))
-                <= 0.10 * F.col("n_pairs")
-            ).cast("int").alias("within_tol"),
-            (
-                F.col("n_pairs_est")
-                >= F.lag("n_pairs_est", 1, 0.0).over(w)
-            ).cast("int").alias("monotone"),
-        )
-
-    def _planted_corpus(spark, sf, n_plant: int):
-        """documents ∪ exact copies of doc_id < n_plant at id+10M —
-        the planted-duplicate recall fixture (identical text ⇒ the
-        seeded signatures collide deterministically)."""
-        docs = _read(spark, sf, "documents").select("doc_id", "text")
-        base = docs.filter(F.col("doc_id") < n_plant)
-        planted = base.select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
-        )
-        return docs.unionByName(planted), base
-
-    def q_minhash_check(spark, sf):
-        # minhash_dedup_pairs invariants: planted exact copies are
-        # ALWAYS recovered (identical signature ⇒ same bucket in every
-        # band ⇒ candidate with est 1.0 ≥ threshold), and pair
-        # ordering id_a < id_b holds.
-        from neo4j_graph_algorithms_spark.pipeline.dedup import minhash_lsh_pairs
-
-        corpus, base = _planted_corpus(spark, sf, 200)
-        pairs = minhash_lsh_pairs(corpus, threshold=0.8, num_hashes=64, bands=16)
-        expect = base.select(
-            F.col("doc_id").alias("id_a"),
-            (F.col("doc_id") + 10_000_000).alias("id_b"),
-        )
-        found = pairs.join(expect, ["id_a", "id_b"], "left_semi").agg(
-            F.count("*").alias("found")
-        )
-        planted = base.agg(F.count("*").alias("planted"))
-        violations = pairs.filter(F.col("id_a") >= F.col("id_b")).agg(
-            F.count("*").alias("order_violations")
-        )
-        return planted.crossJoin(found).crossJoin(violations)
-
-    def q_simhash_check(spark, sf):
-        # simhash_pairs invariants: planted exact copies sit at Hamming
-        # distance 0 ≤ max_distance and share every pigeonhole chunk —
-        # recall of the planted set is exactly 100%.
-        from neo4j_graph_algorithms_spark.pipeline.dedup import simhash_near_pairs
-
-        corpus, base = _planted_corpus(spark, sf, 200)
-        pairs = simhash_near_pairs(corpus, max_distance=3)
-        expect = base.select(
-            F.col("doc_id").alias("id_a"),
-            (F.col("doc_id") + 10_000_000).alias("id_b"),
-        )
-        found = pairs.join(expect, ["id_a", "id_b"], "left_semi").agg(
-            F.count("*").alias("found")
-        )
-        planted = base.agg(F.count("*").alias("planted"))
-        violations = pairs.filter(F.col("id_a") >= F.col("id_b")).agg(
-            F.count("*").alias("order_violations")
-        )
-        return planted.crossJoin(found).crossJoin(violations)
-
-    def q_ann_lsh_check(spark, sf):
-        # ann_lsh_topk invariant: an exact copy of each query vector
-        # planted into the corpus hashes into the query's bucket in
-        # EVERY table (identical hyperplane signs) and re-ranks at
-        # sim 1.0 — so it must appear in the query's top-k.
-        from neo4j_graph_algorithms_spark.pipeline.similarity import lsh_cosine_topk
-
-        emb = _read(spark, sf, "embeddings").select("vec_id", "embedding")
-        q = emb.filter(F.col("vec_id") < 5)
-        planted = q.select(
-            (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
-        )
-        c = emb.filter(F.col("vec_id") >= 5).unionByName(planted)
-        out = lsh_cosine_topk(q, c, k=3, n_tables=8, n_bits=8)
-        found = out.filter(
-            F.col("neighbor_id") == F.col("query_id") + 10_000_000
-        ).agg(F.count("*").alias("found"))
-        nq = q.agg(F.count("*").alias("n_queries"))
-        return nq.crossJoin(found)
-
-    def q_closeness_hops4(spark, sf):
-        # radius-bounded closeness (depths <= 4, OUT direction): the
-        # MS-BFS farness aggregation with the reference's (n-1)/farness
-        # formula (MSClosenessCentrality.java:43-95), SQL-verifiable
-        # because the bounded pair set is exactly apsp_hops4's
-        from neo4j_graph_algorithms_spark.operators.msbfs import ms_bfs_depths
-
-        g = _doc_graph(spark, sf)
-        n = g.node_count()
-        depths = ms_bfs_depths(g, direction="out", max_depth=4)
-        farness = depths.groupBy(F.col("node").alias("id")).agg(
-            F.sum(F.col("depth") * F.col("n_sources")).alias("farness")
-        )
-        return g.nodes.select("id").join(farness, "id", "left").select(
-            "id",
-            F.round(
-                F.when(
-                    F.coalesce(F.col("farness"), F.lit(0)) > 0,
-                    F.lit(float(n - 1)) / F.col("farness"),
-                ).otherwise(F.lit(0.0)),
-                ROUND,
-            ).alias("centrality"),
-        )
-
-    def q_harmonic_hops4(spark, sf):
-        # radius-bounded harmonic centrality (MSHarmonicCentrality.java:55-79)
-        from neo4j_graph_algorithms_spark.operators.msbfs import ms_bfs_depths
-
-        g = _doc_graph(spark, sf)
-        n = g.node_count()
-        depths = ms_bfs_depths(g, direction="out", max_depth=4)
-        inv = depths.groupBy(F.col("node").alias("id")).agg(
-            F.sum(F.col("n_sources") / F.col("depth")).alias("inv_sum")
-        )
-        return g.nodes.select("id").join(inv, "id", "left").select(
-            "id",
-            F.round(
-                F.coalesce(F.col("inv_sum"), F.lit(0.0)) / F.lit(float(max(n - 1, 1))),
-                ROUND,
-            ).alias("centrality"),
-        )
-
-    def q_embedding_dup_pairs(spark, sf):
-        # embedding-cosine near-dup pairs, exact method (the
-        # verification baseline; the LSH scale path is differential-
-        # tested against it in tests/test_round3.py)
-        from neo4j_graph_algorithms_spark.pipeline.similarity import (
-            embedding_near_pairs,
-        )
-
-        emb = _read(spark, sf, "embeddings")
-        out = embedding_near_pairs(emb, threshold=0.45, method="exact")
-        return out.select("id_a", "id_b", F.round("sim", 4).alias("sim"))
-
-    def q_betweenness_hops4(spark, sf):
-        # depth-4-bounded exact Brandes betweenness (OUT direction) —
-        # the `algo.betweenness` maxDepth surface
-        # (MaxDepthBetweennessCentrality.java:125-145), oracle-checked
-        # against the fully-unrolled forward/backward recurrence in SQL
-        from neo4j_graph_algorithms_spark.operators.betweenness import betweenness
-
-        g = _doc_graph(spark, sf)
-        bc, _ = betweenness(g, direction="out", max_depth=4)
-        # 3 decimals: δ sums are order-dependent float accumulations —
-        # see _sql_betweenness_unrolled
-        return bc.select("id", F.round("centrality", 3).alias("centrality"))
-
-    def q_delta_sssp64(spark, sf):
-        # delta-stepping run to CONVERGENCE (no hop bound) on the doc
-        # subgraph with ids < 64 — small enough that the SQL oracle's
-        # 63-round Bellman-Ford is provably converged, so this checks
-        # the bucketed scheduler end-to-end, not a truncation of it
-        from neo4j_graph_algorithms_spark.graph import Graph
-        from neo4j_graph_algorithms_spark.operators.shortest_path import (
-            INF,
-            delta_stepping,
-        )
-
-        edges = (
-            _doc_link_rows(spark, sf).select("src", "dst").distinct()
-            .filter((F.col("src") < 64) & (F.col("dst") < 64))
-            .withColumn("weight", (F.pmod("src", F.lit(7)) + 1).cast("double"))
-        )
-        nodes = (
-            _read(spark, sf, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .filter(F.col("id") < 64)
-        )
-        g = Graph.from_edges(edges, nodes=nodes, weight="weight")
-        dist, _ = delta_stepping(g, source=0, delta=3.0)
-        return dist.filter(F.col("distance") < INF).select(
-            "id", F.round("distance", ROUND).alias("distance")
-        )
-
-    def q_scc64(spark, sf):
-        # `algo.scc.*` end-to-end on the bounded doc subgraph with
-        # deterministic back-edges (reverse every edge whose src % 3
-        # == 0) so genuine multi-node SCCs exist; oracle = 6-round
-        # path-doubling reachability closure + mutual-reach min in SQL
-        from neo4j_graph_algorithms_spark.graph import Graph
-        from neo4j_graph_algorithms_spark.operators.scc import scc
-
-        base = (
-            _doc_link_rows(spark, sf).select("src", "dst").distinct()
-            .filter((F.col("src") < 64) & (F.col("dst") < 64))
-        )
-        back = base.filter(F.pmod("src", F.lit(3)) == 0).select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-        edges = base.unionByName(back).distinct().withColumn("weight", F.lit(1.0))
-        nodes = (
-            _read(spark, sf, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .filter(F.col("id") < 64)
-        )
-        g = Graph.from_edges(edges, nodes=nodes, weight="weight")
-        assignments, _ = scc(g)
-        return assignments.orderBy("id")
-
-    def q_mst64(spark, sf):
-        # `algo.mst` (Borůvka rebuild) on the bounded undirected doc
-        # subgraph with distinct deterministic weights -> unique MST;
-        # oracle = minimax-path characterization via min-max doubling
-        from neo4j_graph_algorithms_spark.graph import Graph
-        from neo4j_graph_algorithms_spark.operators.mst import mst
-
-        base = (
-            _doc_link_rows(spark, sf).select("src", "dst").distinct()
-            .filter((F.col("src") < 64) & (F.col("dst") < 64))
-            .filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .distinct()
-            .withColumn(
-                "weight", (F.col("src") * 64 + F.col("dst")).cast("double")
-            )
-        )
-        nodes = (
-            _read(spark, sf, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .filter(F.col("id") < 64)
-        )
-        g = Graph.from_edges(base, nodes=nodes, weight="weight")
-        tree, _ = mst(g)
-        return tree.orderBy("src", "dst")
-
-    def q_events_hourly(spark, sf):
-        # date_trunc returns a session-zone timestamp even for the
-        # zone-less `ts` column; cast back so `hour` keeps the input's
-        # wall-clock (NTZ) type, as the oracle's TIMESTAMP does
-        ev = _read(spark, sf, "events")
-        return ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).cast("timestamp_ntz").alias("hour"),
-            "event_type",
-        ).agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), ROUND).alias("sum_value"),
-        )
-
-    return {
-        "link_edges": q_link_edges,
-        "out_degree": q_out_degree,
-        "degree_distribution": q_degree_distribution,
-        "pagerank": q_pagerank,
-        "pagerank_personalized": q_pagerank_personalized,
-        "pagerank_weighted": q_pagerank_weighted,
-        "pagerank_warm": q_pagerank_warm,
-        "article_rank": q_article_rank,
-        "wcc": q_wcc,
-        "wcc_sizes": q_wcc_sizes,
-        "triangles": q_triangles,
-        "triangle_stats": q_triangle_stats,
-        "triangle_triples": q_triangle_triples,
-        "label_propagation": q_lpa,
-        "exact_dup_groups": q_exact_dup_groups,
-        "token_counts": q_token_counts,
-        "quality_scores": q_quality_scores,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "embedding_topk": q_embedding_topk,
-        "ngram_dedup_pairs": q_ngram_dedup_pairs,
-        "ngram_dup_clusters": q_ngram_dup_clusters,
-        "filter_corpus": q_filter_corpus,
-        "sssp_hops12": q_sssp_hops12,
-        "apsp_hops4": q_apsp_hops4,
-        "neighborhood_exact": q_neighborhood_exact,
-        "kcore45": q_kcore45,
-        "node_jaccard": q_node_jaccard,
-        "node_overlap": q_node_overlap,
-        "graph_summary": q_graph_summary,
-        "doc_sample_10pct": q_doc_sample_10pct,
-        "doc_sample_stratified": q_doc_sample_stratified,
-        "louvain": q_louvain,
-        "tfidf_top3": q_tfidf_top3,
-        "repeated_ngrams": q_repeated_ngrams,
-        "user_sessions": q_user_sessions,
-        "random_walks_check": q_random_walks_check,
-        "louvain_multilevel_check": q_louvain_multilevel_check,
-        "neighborhood_hll_check": q_neighborhood_hll_check,
-        "minhash_check": q_minhash_check,
-        "simhash_check": q_simhash_check,
-        "ann_lsh_check": q_ann_lsh_check,
-        "closeness_hops4": q_closeness_hops4,
-        "harmonic_hops4": q_harmonic_hops4,
-        "betweenness_hops4": q_betweenness_hops4,
-        "delta_sssp64": q_delta_sssp64,
-        "scc64": q_scc64,
-        "mst64": q_mst64,
-        "embedding_dup_pairs": q_embedding_dup_pairs,
-        "events_hourly": q_events_hourly,
-        # rows-only queries last: the correctness gate checks only the
-        # first 50 queries, and every oracle-backed query must be in them
-        "minhash_dedup_pairs": q_minhash_dedup_pairs,
-        "simhash_pairs": q_simhash_pairs,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "neighborhood_hll": q_neighborhood_hll,
-        "random_walks64": q_random_walks64,
-        "louvain_multilevel": q_louvain_multilevel,
-    }
+    """Every query in declaration order, rows-only ones last: the
+    correctness gate checks only the first 50 queries, and every
+    oracle-backed query must be among them."""
+    return {q.name: q.fn for q in sorted(QUERIES, key=lambda q: q.oracle is None)}
 
 
 def oracle_sql() -> dict[str, str]:
-    edges_cte = "WITH " + _SQL_DOC_EDGES.strip().rstrip(",")
-    return {
-        "link_edges": (
-            edges_cte
-            + "\nSELECT src, dst, content_sha256 FROM resolved ORDER BY src, dst"
-        ),
-        "out_degree": (
-            edges_cte
-            + "\nSELECT src AS id, count(*) AS out_degree FROM e GROUP BY src"
-        ),
-        "degree_distribution": (
-            edges_cte
-            + """
+    return {q.name: q.oracle for q in QUERIES if q.oracle is not None}
+
+
+@query(_SQL_EDGES_CTE
+       + "\nSELECT src, dst, content_sha256 FROM resolved ORDER BY src, dst", headline=True)
+def q_link_edges(spark, sf):
+    return _doc_link_rows(spark, sf).orderBy("src", "dst")
+
+
+@query(_SQL_EDGES_CTE
+       + "\nSELECT src AS id, count(*) AS out_degree FROM e GROUP BY src", headline=True)
+def q_out_degree(spark, sf):
+    g = _doc_graph(spark, sf)
+    return g.edges.groupBy(F.col("src").alias("id")).agg(
+        F.count("*").alias("out_degree")
+    )
+
+
+@query(_SQL_EDGES_CTE
+       + """
 , indeg AS (SELECT dst AS id, count(*) AS degree FROM e GROUP BY dst)
-SELECT degree, count(*) AS n_nodes FROM indeg GROUP BY degree"""
-        ),
-        "pagerank": _sql_pagerank_unrolled(5),
-        "pagerank_personalized": _sql_pagerank_unrolled(5, seed_pred="doc_id < 16"),
-        "pagerank_weighted": _sql_pagerank_unrolled(5, weighted=True),
-        "pagerank_warm": _sql_pagerank_unrolled(5),
-        "article_rank": _sql_pagerank_unrolled(5, article=True),
-        "wcc": _sql_wcc_unrolled(14),
-        "wcc_sizes": (
-            "WITH base AS (" + _sql_wcc_unrolled(14).replace("ORDER BY id", "") + ")\n"
-            "SELECT component, count(*) AS n_nodes FROM base GROUP BY component"
-        ),
-        "triangles": (
-            edges_cte + ",\n" + _SQL_TRIANGLES.strip().rstrip(",")
-            + f"\nSELECT id, triangles, ROUND(coefficient, {ROUND}) AS coefficient FROM pernode"
-        ),
-        "triangle_triples": (
-            edges_cte + ",\n" + _SQL_TRIANGLES.strip().rstrip(",")
-            + "\nSELECT a, b, c FROM tri ORDER BY a, b, c"
-        ),
-        "triangle_stats": (
-            edges_cte + ",\n" + _SQL_TRIANGLES.strip().rstrip(",")
-            + f"""
+SELECT degree, count(*) AS n_nodes FROM indeg GROUP BY degree""")
+def q_degree_distribution(spark, sf):
+    g = _doc_graph(spark, sf)
+    indeg = g.edges.groupBy(F.col("dst").alias("id")).agg(
+        F.count("*").alias("degree")
+    )
+    return indeg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
+
+
+@query(_sql_pagerank_unrolled(5), headline=True)
+def q_pagerank(spark, sf):
+    from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
+
+    g = _doc_graph(spark, sf).cache()
+    ranks, _ = pagerank(g, damping=0.85, max_iterations=5)
+    return ranks.select("id", F.round("rank", ROUND).alias("rank"))
+
+
+@query(_sql_pagerank_unrolled(5, seed_pred="doc_id < 16"))
+def q_pagerank_personalized(spark, sf):
+    # personalized PageRank (extension): teleport mass seeded at
+    # doc ids < 16 only; same delta-push recurrence, so the oracle
+    # is the standard unrolled chain with a seeded init
+    from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
+
+    g = _doc_graph(spark, sf).cache()
+    seeds = (
+        _read(spark, sf, "documents")
+        .select(F.col("doc_id").alias("id"))
+        .filter(F.col("id") < 16)
+    )
+    ranks, _ = pagerank(g, damping=0.85, max_iterations=5, source_nodes=seeds)
+    return ranks.select("id", F.round("rank", ROUND).alias("rank"))
+
+
+@query(_sql_pagerank_unrolled(5, weighted=True), headline=True)
+def q_pagerank_weighted(spark, sf):
+    # weighted PageRank (extension): push fraction w/Σw with a
+    # deterministic weight on BOTH endpoints ((src+2*dst)%7)+1 — a
+    # src-only weight would cancel back to the uniform 1/deg split
+    # and test nothing
+    from neo4j_graph_algorithms_spark.graph import Graph
+    from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
+
+    edges = (
+        _doc_link_rows(spark, sf).select("src", "dst").withColumn(
+            "weight",
+            (F.pmod(F.col("src") + 2 * F.col("dst"), F.lit(7)) + 1).cast("double"),
+        )
+    )
+    nodes = _read(spark, sf, "documents").select(F.col("doc_id").alias("id"))
+    g = Graph.from_edges(edges, nodes=nodes, weight="weight", dedup=True).cache()
+    ranks, _ = pagerank(g, damping=0.85, max_iterations=5, weighted=True)
+    return ranks.select("id", F.round("rank", ROUND).alias("rank"))
+
+
+@query(_sql_pagerank_unrolled(5), headline=True)
+def q_pagerank_warm(spark, sf):
+    # warm-start / incremental PageRank (extension): restart from a
+    # 3-iteration estimate; the residual pass applies exactly the
+    # cold delta_4 and one loop superstep applies delta_5, so the
+    # result is bit-for-float-bit the cold 5-iteration chain — the
+    # same unrolled SQL oracle as `pagerank`
+    from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
+
+    g = _doc_graph(spark, sf).cache()
+    r3, _ = pagerank(g, damping=0.85, max_iterations=3)
+    ranks, _ = pagerank(g, damping=0.85, max_iterations=1, init_ranks=r3)
+    return ranks.select("id", F.round("rank", ROUND).alias("rank"))
+
+
+@query(_sql_pagerank_unrolled(5, article=True), headline=True)
+def q_article_rank(spark, sf):
+    # ArticleRank (extension, ships in later Neo4j releases): the
+    # push denominator is outDegree + avgOutDegree (E/V), damping
+    # low-out-degree citers; same delta-push kernel otherwise
+    from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
+
+    g = _doc_graph(spark, sf).cache()
+    ranks, _ = pagerank(g, damping=0.85, max_iterations=5, article=True)
+    return ranks.select("id", F.round("rank", ROUND).alias("rank"))
+
+
+@query(_sql_wcc_unrolled(14), headline=True)
+def q_wcc(spark, sf):
+    from neo4j_graph_algorithms_spark.graph import Graph
+    from neo4j_graph_algorithms_spark.operators.wcc import wcc
+
+    li = _read(spark, sf, "lineitem")
+    edges = li.select(
+        F.col("l_partkey").alias("src"),
+        (F.col("l_suppkey") + 1000000).alias("dst"),
+        F.col("l_quantity").alias("weight"),
+    )
+    g = Graph.from_edges(edges, weight="weight", dedup=True).cache()
+    # edges are strictly partkey -> suppkey+1e6 (one direction, no
+    # reciprocal pairs) and already deduped upstream, so the
+    # symmetric union inside wcc cannot contain duplicates — skip
+    # its O(E) distinct() shuffle
+    comp, _ = wcc(g, threshold=48.0, assume_deduped=True)
+    return comp
+
+
+@query("WITH base AS (" + _sql_wcc_unrolled(14).replace("ORDER BY id", "") + ")\n"
+       "SELECT component, count(*) AS n_nodes FROM base GROUP BY component")
+def q_wcc_sizes(spark, sf):
+    from neo4j_graph_algorithms_spark.operators.wcc import component_stats
+
+    comp = q_wcc(spark, sf)
+    _, sizes = component_stats(comp)
+    return sizes.select("component", F.col("size").alias("n_nodes"))
+
+
+@query(_SQL_EDGES_CTE + ",\n" + _SQL_TRIANGLES.strip().rstrip(",")
+       + f"\nSELECT id, triangles, ROUND(coefficient, {ROUND}) AS coefficient FROM pernode",
+       headline=True)
+def q_triangles(spark, sf):
+    from neo4j_graph_algorithms_spark.operators.triangles import triangle_count
+
+    g = _doc_graph(spark, sf).cache()
+    per_node, _ = triangle_count(g)
+    return per_node.select(
+        "id", "triangles", F.round("coefficient", ROUND).alias("coefficient")
+    )
+
+
+@query(_SQL_EDGES_CTE + ",\n" + _SQL_TRIANGLES.strip().rstrip(",")
+       + f"""
 SELECT (SELECT count(*) FROM tri) AS triangle_count,
-       ROUND((SELECT avg(coefficient) FROM pernode), {ROUND}) AS avg_coefficient"""
-        ),
-        "label_propagation": _sql_lpa_unrolled(2),
-        "exact_dup_groups": """
+       ROUND((SELECT avg(coefficient) FROM pernode), {ROUND}) AS avg_coefficient""")
+def q_triangle_stats(spark, sf):
+    from neo4j_graph_algorithms_spark.operators.triangles import triangle_count
+
+    g = _doc_graph(spark, sf).cache()
+    per_node, stats = triangle_count(g)
+    return spark.createDataFrame(
+        [(int(stats["triangleCount"]),
+          round(float(stats["averageClusteringCoefficient"]), ROUND))],
+        "triangle_count long, avg_coefficient double",
+    )
+
+
+@query(_SQL_EDGES_CTE + ",\n" + _SQL_TRIANGLES.strip().rstrip(",")
+       + "\nSELECT a, b, c FROM tri ORDER BY a, b, c")
+def q_triangle_triples(spark, sf):
+    # `algo.triangle.stream` — the raw (a, b, c) triple surface
+    # (impl/TriangleStream.java:95-160); each unordered triangle
+    # once, corners ascending, so the id-oriented SQL `tri` CTE is
+    # its exact twin
+    from neo4j_graph_algorithms_spark.operators.triangles import triangle_stream
+
+    g = _doc_graph(spark, sf).cache()
+    return triangle_stream(g)
+
+
+@query(_sql_lpa_unrolled(2), headline=True)
+def q_label_propagation(spark, sf):
+    from neo4j_graph_algorithms_spark.operators.label_propagation import label_propagation
+
+    g = _doc_graph(spark, sf).cache()
+    labels, _ = label_propagation(g, iterations=2, seed_col=None)
+    return labels
+
+
+@query("""
 SELECT sha256(text) AS text_sha256, count(*) AS n_docs
-FROM documents GROUP BY sha256(text)""",
-        "token_counts": r"""
+FROM documents GROUP BY sha256(text)""")
+def q_exact_dup_groups(spark, sf):
+    docs = _read(spark, sf, "documents")
+    return docs.groupBy(F.sha2("text", 256).alias("text_sha256")).agg(
+        F.count("*").alias("n_docs")
+    )
+
+
+@query(r"""
 SELECT doc_id, CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tokens
-FROM documents""",
-        "quality_scores": f"""
+FROM documents""")
+def q_token_counts(spark, sf):
+    docs = _read(spark, sf, "documents")
+    return docs.select(
+        "doc_id",
+        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
+    )
+
+
+@query(f"""
 SELECT doc_id,
        CAST(len(text) AS INT) AS n_chars,
        ROUND(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0 / len(text), {ROUND}) AS alpha_ratio,
        ROUND(len(regexp_replace(text, '[^0-9]', '', 'g')) * 1.0 / len(text), {ROUND}) AS digit_ratio,
        ROUND(len(regexp_replace(text, '[^ ]', '', 'g')) * 1.0 / len(text), {ROUND}) AS space_ratio
-FROM documents""",
-        "lang_id": _langid_sql(),
-        "doc_fingerprint": """
+FROM documents""")
+def q_quality_scores(spark, sf):
+    docs = _read(spark, sf, "documents")
+    t = F.col("text")
+    ln = F.length(t)
+    return docs.select(
+        "doc_id",
+        ln.alias("n_chars"),
+        F.round(F.length(F.regexp_replace(t, "[^a-zA-Z]", "")) / ln, ROUND).alias("alpha_ratio"),
+        F.round(F.length(F.regexp_replace(t, "[^0-9]", "")) / ln, ROUND).alias("digit_ratio"),
+        F.round(F.length(F.regexp_replace(t, "[^ ]", "")) / ln, ROUND).alias("space_ratio"),
+    )
+
+
+@query(_langid_sql())
+def q_lang_id(spark, sf):
+    return _langid_spark(_read(spark, sf, "documents"))
+
+
+@query("""
 WITH heads AS (SELECT doc_id, substr(text, 1, 256) AS h FROM documents),
 idx AS (SELECT i FROM generate_series(1, 256) t(i)),
 sh AS (SELECT doc_id, md5(substr(h, CAST(i AS INT), 8)) AS m
        FROM heads JOIN idx ON i <= greatest(len(h) - 7, 1))
-SELECT doc_id, min(m) AS fingerprint FROM sh GROUP BY doc_id""",
-        "embedding_topk": """
+SELECT doc_id, min(m) AS fingerprint FROM sh GROUP BY doc_id""", headline=True)
+def q_doc_fingerprint(spark, sf):
+    docs = _read(spark, sf, "documents")
+    head = F.substring(F.col("text"), 1, 256)
+    shingles = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(head) - 7, F.lit(1))),
+        lambda i: F.md5(head.substr(i, F.lit(8))),
+    )
+    return docs.select("doc_id", F.array_min(shingles).alias("fingerprint"))
+
+
+@query("""
 WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 5),
 pairs AS (
@@ -1740,10 +1084,35 @@ pairs AS (
   FROM q CROSS JOIN emb e WHERE e.vec_id >= 5)
 SELECT query_id, neighbor_id, ROUND(sim, 4) AS sim, CAST(rank AS INT) AS rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM pairs) WHERE rank <= 3""",
-        "ngram_dup_clusters": _sql_ngram_clusters_unrolled(8),
-        "filter_corpus": _sql_filter_corpus(),
-        "ngram_dedup_pairs": f"""
+  FROM pairs) WHERE rank <= 3""", headline=True)
+def q_embedding_topk(spark, sf):
+    emb = _read(spark, sf, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    pairs = q.crossJoin(emb.filter(F.col("vec_id") >= 5))
+    dot = F.aggregate(
+        F.zip_with("qv", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
+    )
+    nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda acc, x: acc + x * x))
+    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
+    sims = pairs.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"),
+        (dot / (nq * nv)).alias("sim"),
+    )
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        sims.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 3)
+        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
+    )
+
+
+@query(f"""
 WITH idx AS (SELECT i FROM generate_series(1, 1024) t(i)),
 sh AS MATERIALIZED (
   SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INT), 3) AS s
@@ -1753,58 +1122,226 @@ inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS n
           FROM sh a JOIN sh b ON a.s = b.s AND a.id < b.id GROUP BY a.id, b.id),
 j AS (SELECT id_a, id_b, n * 1.0 / (sa.sz + sb.sz - n) AS jac
       FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
-SELECT id_a, id_b, ROUND(jac, {ROUND}) AS jaccard FROM j WHERE jac >= 0.85""",
-        "sssp_hops12": _sql_sssp_unrolled(12),
-        "apsp_hops4": _sql_apsp_unrolled(4),
-        "neighborhood_exact": _sql_neighborhood_unrolled(4),
-        "kcore45": _sql_kcore_unrolled(12),
-        "node_jaccard": (
-            "WITH " + _SQL_DOC_EDGES.strip().rstrip(",") + ",\n"
-            "sizes AS (SELECT src, count(*) AS sz FROM e GROUP BY src),\n"
-            "common AS (SELECT a.src AS id_a, b.src AS id_b, count(*) AS c\n"
-            "           FROM e a JOIN e b ON a.dst = b.dst AND a.src < b.src\n"
-            "           GROUP BY a.src, b.src)\n"
-            "SELECT id_a, id_b,\n"
-            f"       ROUND(c * 1.0 / (sa.sz + sb.sz - c), {ROUND}) AS similarity\n"
-            "FROM common JOIN sizes sa ON sa.src = id_a\n"
-            "     JOIN sizes sb ON sb.src = id_b\n"
-            "WHERE c * 1.0 / (sa.sz + sb.sz - c) >= 0.15 ORDER BY id_a, id_b"
-        ),
-        "graph_summary": (
-            "WITH " + _SQL_DOC_EDGES.strip().rstrip(",") + ",\n"
-            "nn2 AS (SELECT count(*) AS n FROM documents),\n"
-            "deg AS (SELECT src, count(*) AS d FROM e GROUP BY src),\n"
-            "agg AS (SELECT min(d) AS mn, max(d) AS mx, sum(d) AS m, count(*) AS w FROM deg),\n"
-            "sym AS MATERIALIZED (SELECT src, dst FROM e UNION SELECT dst, src FROM e),\n"
-            "sdeg AS (SELECT src, count(*) AS d FROM sym GROUP BY src),\n"
-            "ar AS (SELECT corr(a.d * 1.0, b.d * 1.0) AS r FROM sym s\n"
-            "       JOIN sdeg a ON s.src = a.src JOIN sdeg b ON s.dst = b.src)\n"
-            "SELECT nn2.n AS n_nodes, CAST(agg.m AS BIGINT) AS n_edges,\n"
-            "       ROUND(agg.m * 1.0 / (nn2.n * (nn2.n - 1)), 9) AS density,\n"
-            "       CAST(agg.mn AS BIGINT) AS min_out, CAST(agg.mx AS BIGINT) AS max_out,\n"
-            f"       ROUND(agg.m * 1.0 / agg.w, {ROUND}) AS avg_out,\n"
-            "       CAST(nn2.n - agg.w AS BIGINT) AS dangling,\n"
-            f"       ROUND(ar.r, {ROUND}) AS assortativity\n"
-            "FROM nn2, agg, ar"
-        ),
-        "node_overlap": (
-            "WITH " + _SQL_DOC_EDGES.strip().rstrip(",") + ",\n"
-            "sizes AS (SELECT src, count(*) AS sz FROM e GROUP BY src),\n"
-            "common AS (SELECT a.src AS id_a, b.src AS id_b, count(*) AS c\n"
-            "           FROM e a JOIN e b ON a.dst = b.dst AND a.src < b.src\n"
-            "           GROUP BY a.src, b.src)\n"
-            "SELECT id_a, id_b,\n"
-            f"       ROUND(c * 1.0 / least(sa.sz, sb.sz), {ROUND}) AS similarity\n"
-            "FROM common JOIN sizes sa ON sa.src = id_a\n"
-            "     JOIN sizes sb ON sb.src = id_b\n"
-            "WHERE c * 1.0 / least(sa.sz, sb.sz) >= 0.34 ORDER BY id_a, id_b"
-        ),
-        "doc_sample_10pct": (
-            "SELECT doc_id FROM documents "
-            "WHERE (doc_id % 1000000007) * 2654435761 % 1000000007 "
-            f"< {int(0.1 * 1_000_000_007)} ORDER BY doc_id"
-        ),
-        "doc_sample_stratified": """
+SELECT id_a, id_b, ROUND(jac, {ROUND}) AS jaccard FROM j WHERE jac >= 0.85""")
+def q_ngram_dedup_pairs(spark, sf):
+    from neo4j_graph_algorithms_spark.pipeline.dedup import ngram_jaccard_pairs
+
+    docs = _read(spark, sf, "documents")
+    pairs = ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.85)
+    return pairs.select("id_a", "id_b", F.round("jaccard", ROUND).alias("jaccard"))
+
+
+@query(_sql_ngram_clusters_unrolled(8), headline=True)
+def q_ngram_dup_clusters(spark, sf):
+    # pair list -> transitive clusters -> canonical survivor: the
+    # step a production dedup pipeline runs after pair generation
+    # (WCC min-label fixpoint over the pair graph, then one corpus
+    # left join). int-cast the flag for engine-neutral hashing.
+    # k=20 shingles: the synthetic corpus has a tiny 3-gram
+    # vocabulary (~400 distinct shingles across 5k docs), so k=3
+    # fans the shingle self-join out quadratically at sf0.1; 20-char
+    # shingles are near-unique (df~1) and keep the join linear while
+    # still catching the near-identical dup pairs the corpus plants.
+    from neo4j_graph_algorithms_spark.pipeline.dedup import (
+        dup_clusters,
+        ngram_jaccard_pairs,
+    )
+
+    docs = _read(spark, sf, "documents")
+    pairs = ngram_jaccard_pairs(docs, shingle_k=20, threshold=0.85)
+    out = dup_clusters(docs, pairs)
+    return out.select(
+        "id", "cluster_id", F.col("is_canonical").cast("int").alias("is_canonical")
+    )
+
+
+@query(_sql_filter_corpus(), headline=True)
+def q_filter_corpus(spark, sf):
+    # composite pre-train quality gate — one projection over the
+    # scan; the oracle SQL is GENERATED from the same constants
+    from neo4j_graph_algorithms_spark.pipeline.text import filter_corpus
+
+    docs = _read(spark, sf, "documents")
+    out = filter_corpus(docs, **_FILTER_THRESH)
+    return out.select(
+        "id", "n_chars", "n_tokens",
+        F.round("alpha_ratio", ROUND).alias("alpha_ratio"),
+        F.round("digit_ratio", ROUND).alias("digit_ratio"),
+        F.round("punct_ratio", ROUND).alias("punct_ratio"),
+        F.round("stopword_density", ROUND).alias("stopword_density"),
+        "lang_pred", "reject_reason",
+        F.col("keep").cast("int").alias("keep"),
+    )
+
+
+@query(_sql_sssp_unrolled(12), headline=True)
+def q_sssp_hops12(spark, sf):
+    # 12-hop-bounded weighted SSSP from doc 0 (frontier Bellman-Ford
+    # after k rounds == min cost over paths of <= k edges, so a
+    # k-round unrolled SQL relaxation is the exact oracle);
+    # deterministic edge weight (src % 7) + 1 on the deduped graph
+    from neo4j_graph_algorithms_spark.graph import Graph
+    from neo4j_graph_algorithms_spark.operators.shortest_path import (
+        INF,
+        shortest_paths,
+    )
+
+    edges = (
+        _doc_link_rows(spark, sf).select("src", "dst").distinct()
+        .withColumn("weight", (F.pmod("src", F.lit(7)) + 1).cast("double"))
+    )
+    nodes = _read(spark, sf, "documents").select(F.col("doc_id").alias("id"))
+    g = Graph.from_edges(edges, nodes=nodes, weight="weight")
+    dist, _ = shortest_paths(g, source=0, max_iterations=12)
+    return dist.filter(F.col("distance") < INF).select(
+        "id", F.round("distance", ROUND).alias("distance")
+    )
+
+
+@query(_sql_apsp_unrolled(4), headline=True)
+def q_apsp_hops4(spark, sf):
+    # depth-4-bounded unweighted all-pairs over the doc graph — the
+    # MS-BFS engine's oracle row (depth >= 1 pairs only, like the
+    # reference stream)
+    from neo4j_graph_algorithms_spark.operators.msbfs import all_shortest_paths
+
+    g = _doc_graph(spark, sf)
+    return all_shortest_paths(g, direction="out", max_depth=4)
+
+
+@query(_sql_neighborhood_unrolled(4), headline=True)
+def q_neighborhood_exact(spark, sf):
+    # exact neighborhood function N(t) (EXTENSION, HyperANF family):
+    # cumulative reachable ordered pairs per depth via the MS-BFS
+    # (node, depth, n_sources) aggregate — never materializes pairs
+    from neo4j_graph_algorithms_spark.operators.neighborhood import (
+        neighborhood_exact,
+    )
+
+    g = _doc_graph(spark, sf)
+    return neighborhood_exact(g, max_depth=4, direction="out")
+
+
+@query(_sql_kcore_unrolled(12), headline=True)
+def q_kcore45(spark, sf):
+    # core decomposition (EXTENSION): iterative h-index fixpoint on
+    # the quantity≥45 part–supplier bipartite graph (cores 1..6 at
+    # sf0.01 — heterogeneous, unlike the near-regular doc graph);
+    # oracle = the same recurrence unrolled past convergence depth
+    from neo4j_graph_algorithms_spark.graph import Graph
+
+    from neo4j_graph_algorithms_spark.operators.kcore import (
+        core_decomposition,
+    )
+
+    li = _read(spark, sf, "lineitem")
+    edges = li.filter(F.col("l_quantity") >= 45.0).select(
+        F.col("l_partkey").alias("src"),
+        (F.col("l_suppkey") + 1000000).alias("dst"),
+    )
+    g = Graph.from_edges(edges, dedup=True).cache()
+    cores, _ = core_decomposition(g)
+    return cores
+
+
+@query(_SQL_EDGES_CTE + ",\n"
+       "sizes AS (SELECT src, count(*) AS sz FROM e GROUP BY src),\n"
+       "common AS (SELECT a.src AS id_a, b.src AS id_b, count(*) AS c\n"
+       "           FROM e a JOIN e b ON a.dst = b.dst AND a.src < b.src\n"
+       "           GROUP BY a.src, b.src)\n"
+       "SELECT id_a, id_b,\n"
+       f"       ROUND(c * 1.0 / (sa.sz + sb.sz - c), {ROUND}) AS similarity\n"
+       "FROM common JOIN sizes sa ON sa.src = id_a\n"
+       "     JOIN sizes sb ON sb.src = id_b\n"
+       "WHERE c * 1.0 / (sa.sz + sb.sz - c) >= 0.15 ORDER BY id_a, id_b", headline=True)
+def q_node_jaccard(spark, sf):
+    # neighborhood-Jaccard node similarity (extension; the era's
+    # companion library ships algo.similarity.jaccard): same
+    # shared-neighbor join algebra as the exact n-gram dedup plan
+    from neo4j_graph_algorithms_spark.operators.node_similarity import (
+        node_similarity,
+    )
+
+    g = _doc_graph(spark, sf)
+    out = node_similarity(g, threshold=0.15, direction="out")
+    return out.select(
+        "id_a", "id_b", F.round("similarity", ROUND).alias("similarity")
+    )
+
+
+@query(_SQL_EDGES_CTE + ",\n"
+       "sizes AS (SELECT src, count(*) AS sz FROM e GROUP BY src),\n"
+       "common AS (SELECT a.src AS id_a, b.src AS id_b, count(*) AS c\n"
+       "           FROM e a JOIN e b ON a.dst = b.dst AND a.src < b.src\n"
+       "           GROUP BY a.src, b.src)\n"
+       "SELECT id_a, id_b,\n"
+       f"       ROUND(c * 1.0 / least(sa.sz, sb.sz), {ROUND}) AS similarity\n"
+       "FROM common JOIN sizes sa ON sa.src = id_a\n"
+       "     JOIN sizes sb ON sb.src = id_b\n"
+       "WHERE c * 1.0 / least(sa.sz, sb.sz) >= 0.34 ORDER BY id_a, id_b", headline=True)
+def q_node_overlap(spark, sf):
+    # overlap-coefficient variant (|A∩B| / min|A|,|B|) of the same
+    # shared-neighbor plan — subset-affinity detection
+    from neo4j_graph_algorithms_spark.operators.node_similarity import (
+        node_similarity,
+    )
+
+    g = _doc_graph(spark, sf)
+    out = node_similarity(g, threshold=0.34, direction="out", metric="overlap")
+    return out.select(
+        "id_a", "id_b", F.round("similarity", ROUND).alias("similarity")
+    )
+
+
+@query(_SQL_EDGES_CTE + ",\n"
+       "nn2 AS (SELECT count(*) AS n FROM documents),\n"
+       "deg AS (SELECT src, count(*) AS d FROM e GROUP BY src),\n"
+       "agg AS (SELECT min(d) AS mn, max(d) AS mx, sum(d) AS m, count(*) AS w FROM deg),\n"
+       "sym AS MATERIALIZED (SELECT src, dst FROM e UNION SELECT dst, src FROM e),\n"
+       "sdeg AS (SELECT src, count(*) AS d FROM sym GROUP BY src),\n"
+       "ar AS (SELECT corr(a.d * 1.0, b.d * 1.0) AS r FROM sym s\n"
+       "       JOIN sdeg a ON s.src = a.src JOIN sdeg b ON s.dst = b.src)\n"
+       "SELECT nn2.n AS n_nodes, CAST(agg.m AS BIGINT) AS n_edges,\n"
+       "       ROUND(agg.m * 1.0 / (nn2.n * (nn2.n - 1)), 9) AS density,\n"
+       "       CAST(agg.mn AS BIGINT) AS min_out, CAST(agg.mx AS BIGINT) AS max_out,\n"
+       f"       ROUND(agg.m * 1.0 / agg.w, {ROUND}) AS avg_out,\n"
+       "       CAST(nn2.n - agg.w AS BIGINT) AS dangling,\n"
+       f"       ROUND(ar.r, {ROUND}) AS assortativity\n"
+       "FROM nn2, agg, ar")
+def q_graph_summary(spark, sf):
+    # whole-graph profile (extension): one-row summary + degree
+    # assortativity over the doc link graph — pure aggregates
+    from neo4j_graph_algorithms_spark.operators.graph_stats import (
+        degree_assortativity,
+        graph_summary,
+    )
+
+    g = _doc_graph(spark, sf)
+    r = degree_assortativity(g)
+    return graph_summary(g).select(
+        "n_nodes", "n_edges",
+        F.round("density", 9).alias("density"),
+        "min_out", "max_out",
+        F.round("avg_out", ROUND).alias("avg_out"),
+        "dangling",
+        F.round(F.lit(r).cast("double"), ROUND).alias("assortativity"),
+    )
+
+
+@query("SELECT doc_id FROM documents "
+       "WHERE (doc_id % 1000000007) * 2654435761 % 1000000007 "
+       f"< {int(0.1 * 1_000_000_007)} ORDER BY doc_id")
+def q_doc_sample_10pct(spark, sf):
+    # deterministic Bernoulli-style sample: a pure filter on the
+    # Knuth multiplicative hash order — identical formula in the
+    # oracle, so the kept set matches row-for-row
+    from neo4j_graph_algorithms_spark.pipeline.sampling import hash_sample
+
+    docs = _read(spark, sf, "documents")
+    return hash_sample(docs, 0.1).select("doc_id")
+
+
+@query("""
 WITH tok AS (SELECT doc_id,
              len(regexp_split_to_array(trim(text), '\\s+')) AS n_tokens
              FROM documents),
@@ -1815,9 +1352,33 @@ b AS (SELECT doc_id,
                ORDER BY (doc_id % 1000000007) * 2654435761 % 1000000007, doc_id
              ) AS rn
       FROM tok)
-SELECT doc_id, bucket FROM b WHERE rn <= 5 ORDER BY doc_id""",
-        "louvain": _sql_louvain_unrolled(1),
-        "tfidf_top3": f"""
+SELECT doc_id, bucket FROM b WHERE rn <= 5 ORDER BY doc_id""", headline=True)
+def q_doc_sample_stratified(spark, sf):
+    # 5 docs per token-count bucket (width 50), hash-ordered with
+    # id tie-break — exactly min(5, |bucket|) rows per stratum
+    from neo4j_graph_algorithms_spark.pipeline.sampling import (
+        stratified_sample,
+    )
+    from neo4j_graph_algorithms_spark.pipeline.text import token_counts
+
+    docs = _read(spark, sf, "documents")
+    toks = token_counts(docs)
+    bucketed = toks.select(
+        "doc_id", F.floor(F.col("n_tokens") / 50).cast("int").alias("bucket")
+    )
+    return stratified_sample(bucketed, ["bucket"], 5)
+
+
+@query(_sql_louvain_unrolled(1), headline=True)
+def q_louvain(spark, sf):
+    from neo4j_graph_algorithms_spark.operators.louvain import louvain
+
+    g = _doc_graph(spark, sf)
+    comm, _ = louvain(g, iterations=1)
+    return comm
+
+
+@query(f"""
 WITH nn3 AS (SELECT count(*) AS n FROM documents),
 tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
         FROM documents),
@@ -1831,16 +1392,40 @@ rk AS (SELECT *, row_number() OVER (
          PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank FROM sc)
 SELECT doc_id, CAST(rank AS INT) AS rank, term, tf, df,
        ROUND(score, {ROUND}) AS score
-FROM rk WHERE rank <= 3""",
-        "repeated_ngrams": """
+FROM rk WHERE rank <= 3""", headline=True)
+def q_tfidf_top3(spark, sf):
+    # top-3 tf-idf keywords per document — the rational
+    # tf·(N+1)/(df+1) scoring contract is engine-exact (two IEEE
+    # double ops, no libm), so rank order matches the oracle
+    # bit-for-bit (see pipeline/text.tfidf_keywords)
+    from neo4j_graph_algorithms_spark.pipeline.text import tfidf_keywords
+
+    docs = _read(spark, sf, "documents")
+    out = tfidf_keywords(docs, k=3)
+    return out.select(
+        "doc_id", "rank", "term", "tf", "df", F.round("score", ROUND).alias("score")
+    )
+
+
+@query("""
 WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
            FROM documents),
 idx AS (SELECT unnest(generate_series(1, (SELECT max(len(w)) FROM t))) AS i),
 g AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS ngram
       FROM t JOIN idx ON i <= len(w) - 2),
 d AS (SELECT ngram, count(*) AS df FROM g GROUP BY ngram)
-SELECT ngram, df FROM d WHERE df >= 5""",
-        "user_sessions": f"""
+SELECT ngram, df FROM d WHERE df >= 5""", headline=True)
+def q_repeated_ngrams(spark, sf):
+    # corpus-repeated word 3-grams (boilerplate/template audit):
+    # df = distinct docs containing the gram, df >= 5 — linear
+    # column algebra (tokenize → slide → distinct → one agg)
+    from neo4j_graph_algorithms_spark.pipeline.text import repeated_ngrams
+
+    docs = _read(spark, sf, "documents")
+    return repeated_ngrams(docs, n=3, min_df=5)
+
+
+@query(f"""
 WITH o AS (SELECT user_id, event_id, ts, value, epoch_us(ts) AS e FROM events),
 f AS (SELECT user_id, event_id, ts, value, e,
              CASE WHEN lag(e) OVER w IS NULL
@@ -1854,47 +1439,496 @@ s AS (SELECT user_id, ts, value,
 SELECT user_id, session_id, count(*) AS n_events,
        min(ts) AS first_ts, max(ts) AS last_ts,
        ROUND(sum(value), {ROUND}) AS sum_value
-FROM s GROUP BY user_id, session_id""",
-        # invariant oracles for the six rows-only operators: the Spark
-        # side computes the invariant, the SQL side states the expected
-        # constants from the base tables (see the q_*_check docstrings)
-        "random_walks_check": """
+FROM s GROUP BY user_id, session_id""", headline=True)
+def q_user_sessions(spark, sf):
+    # gap-based sessionization of the event stream (480-min gap ≈
+    # the corpus median inter-event gap, so the split is non-
+    # trivial): deterministic (ts, event_id) ordering, exact
+    # integer-microsecond gap test
+    from neo4j_graph_algorithms_spark.pipeline.sessionize import sessionize
+
+    ev = _read(spark, sf, "events")
+    out = sessionize(ev, gap_minutes=480)
+    return out.select(
+        "user_id", "session_id", "n_events", "first_ts", "last_ts",
+        F.round("sum_value", ROUND).alias("sum_value"),
+    )
+
+
+# -- invariant-check twins of the rows-only queries ---------------------
+# (VERDICT r4 next-round #3). Exact value oracles are impossible for
+# seeded-hash / contraction-hierarchy operators, but each has
+# SQL-VERIFIABLE invariants: the *_check query computes them Spark-side
+# and the oracle states the expected constants from the base tables — a
+# hash mismatch means the invariant broke.
+
+@query("""
 WITH c AS (SELECT count(*) AS n FROM documents WHERE doc_id < 64)
 SELECT n * 2 AS step0_rows, n * 2 * 5 AS n_rows,
-       CAST(0 AS BIGINT) AS bad_transitions FROM c""",
-        "louvain_multilevel_check": """
+       CAST(0 AS BIGINT) AS bad_transitions FROM c""")
+def q_random_walks_check(spark, sf):
+    # random_walks64 invariants: (a) step-0 rows = sources×reps;
+    # (b) NO walker terminates early on the doc graph (every doc
+    # has out-degree ≥ 2), so total rows = sources×reps×(len+1);
+    # (c) every consecutive (t → t+1) transition is a real edge.
+    from neo4j_graph_algorithms_spark.operators.random_walk import (
+        random_walks,
+    )
+
+    g = _doc_graph(spark, sf)
+    srcs = (
+        _read(spark, sf, "documents")
+        .select(F.col("doc_id").alias("id"))
+        .filter(F.col("id") < 64)
+    )
+    out, _ = random_walks(g, walk_length=4, walks_per_node=2, sources=srcs)
+    out = out.localCheckpoint(eager=True)
+    edges = g.edges.select("src", "dst").distinct()
+    hop_a = out.select(
+        "source", "rep", F.col("step").alias("t"), F.col("node").alias("src")
+    )
+    hop_b = out.select(
+        "source", "rep", (F.col("step") - 1).alias("t"), F.col("node").alias("dst")
+    )
+    trans = hop_a.join(hop_b, ["source", "rep", "t"]).select("src", "dst")
+    bad = trans.join(edges, ["src", "dst"], "left_anti").agg(
+        F.count("*").alias("bad_transitions")
+    )
+    counts = out.agg(
+        F.sum((F.col("step") == 0).cast("long")).alias("step0_rows"),
+        F.count("*").alias("n_rows"),
+    )
+    return counts.crossJoin(bad)
+
+
+@query("""
 WITH c AS (SELECT count(*) AS n FROM documents)
 SELECT n AS n_assigned, n AS n_ids,
        CAST(0 AS BIGINT) AS split_communities,
-       CAST(0 AS BIGINT) AS bad_labels FROM c""",
-        "neighborhood_hll_check": """
+       CAST(0 AS BIGINT) AS bad_labels FROM c""")
+def q_louvain_multilevel_check(spark, sf):
+    # louvain_multilevel invariants: every node assigned exactly
+    # once; final labels ⊆ node ids; the hierarchy is a
+    # REFINEMENT-CONSISTENT coarsening of the (deterministic)
+    # level-0 partition — no level-0 community is split across
+    # final communities.
+    from neo4j_graph_algorithms_spark.operators.louvain import (
+        louvain,
+        louvain_multilevel,
+    )
+
+    g = _doc_graph(spark, sf)
+    assign, _ = louvain_multilevel(g, levels=3, iterations=2)
+    level0, _ = louvain(g, iterations=2)
+    j = assign.join(level0.select("id", F.col("community").alias("c0")), "id")
+    split = (
+        j.groupBy("c0")
+        .agg(F.count_distinct("community").alias("k"))
+        .filter(F.col("k") > 1)
+        .agg(F.count("*").alias("split_communities"))
+    )
+    ids = _read(spark, sf, "documents").select(F.col("doc_id").alias("community"))
+    bad = assign.join(ids, "community", "left_anti").agg(
+        F.count("*").alias("bad_labels")
+    )
+    counts = assign.agg(
+        F.count("*").alias("n_assigned"),
+        F.count_distinct("id").alias("n_ids"),
+    )
+    return counts.crossJoin(split).crossJoin(bad)
+
+
+@query("""
 SELECT CAST(i AS INT) AS depth, 1 AS within_tol, 1 AS monotone
-FROM generate_series(1, 4) t(i) ORDER BY depth""",
-        "minhash_check": """
+FROM generate_series(1, 4) t(i) ORDER BY depth""")
+def q_neighborhood_hll_check(spark, sf):
+    # neighborhood_hll invariants vs its exact twin at the same
+    # depths: the estimate is MONOTONE in depth and within ±10% of
+    # exact N(t) (p=10 → 1024 registers, theoretical σ ≈ 3.25%;
+    # the hash is fixed, so the estimate is deterministic).
+    from pyspark.sql.window import Window
+
+    from neo4j_graph_algorithms_spark.operators.neighborhood import (
+        neighborhood_exact,
+        neighborhood_function,
+    )
+
+    g = _doc_graph(spark, sf)
+    nf, _ = neighborhood_function(g, max_depth=4, p=10, direction="out")
+    ex = neighborhood_exact(g, max_depth=4, direction="out")
+    j = nf.join(ex, "depth")
+    w = Window.orderBy("depth")
+    return j.select(
+        "depth",
+        (
+            F.abs(F.col("n_pairs_est") - F.col("n_pairs"))
+            <= 0.10 * F.col("n_pairs")
+        ).cast("int").alias("within_tol"),
+        (
+            F.col("n_pairs_est")
+            >= F.lag("n_pairs_est", 1, 0.0).over(w)
+        ).cast("int").alias("monotone"),
+    )
+
+
+def _planted_corpus(spark, sf, n_plant: int):
+    """documents ∪ exact copies of doc_id < n_plant at id+10M —
+    the planted-duplicate recall fixture (identical text ⇒ the
+    seeded signatures collide deterministically)."""
+    docs = _read(spark, sf, "documents").select("doc_id", "text")
+    base = docs.filter(F.col("doc_id") < n_plant)
+    planted = base.select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
+    )
+    return docs.unionByName(planted), base
+
+
+@query("""
 WITH c AS (SELECT count(*) AS n FROM documents WHERE doc_id < 200)
-SELECT n AS planted, n AS found, CAST(0 AS BIGINT) AS order_violations FROM c""",
-        "simhash_check": """
+SELECT n AS planted, n AS found, CAST(0 AS BIGINT) AS order_violations FROM c""")
+def q_minhash_check(spark, sf):
+    # minhash_dedup_pairs invariants: planted exact copies are
+    # ALWAYS recovered (identical signature ⇒ same bucket in every
+    # band ⇒ candidate with est 1.0 ≥ threshold), and pair
+    # ordering id_a < id_b holds.
+    from neo4j_graph_algorithms_spark.pipeline.dedup import minhash_lsh_pairs
+
+    corpus, base = _planted_corpus(spark, sf, 200)
+    pairs = minhash_lsh_pairs(corpus, threshold=0.8, num_hashes=64, bands=16)
+    expect = base.select(
+        F.col("doc_id").alias("id_a"),
+        (F.col("doc_id") + 10_000_000).alias("id_b"),
+    )
+    found = pairs.join(expect, ["id_a", "id_b"], "left_semi").agg(
+        F.count("*").alias("found")
+    )
+    planted = base.agg(F.count("*").alias("planted"))
+    violations = pairs.filter(F.col("id_a") >= F.col("id_b")).agg(
+        F.count("*").alias("order_violations")
+    )
+    return planted.crossJoin(found).crossJoin(violations)
+
+
+@query("""
 WITH c AS (SELECT count(*) AS n FROM documents WHERE doc_id < 200)
-SELECT n AS planted, n AS found, CAST(0 AS BIGINT) AS order_violations FROM c""",
-        "ann_lsh_check": """
+SELECT n AS planted, n AS found, CAST(0 AS BIGINT) AS order_violations FROM c""")
+def q_simhash_check(spark, sf):
+    # simhash_pairs invariants: planted exact copies sit at Hamming
+    # distance 0 ≤ max_distance and share every pigeonhole chunk —
+    # recall of the planted set is exactly 100%.
+    from neo4j_graph_algorithms_spark.pipeline.dedup import simhash_near_pairs
+
+    corpus, base = _planted_corpus(spark, sf, 200)
+    pairs = simhash_near_pairs(corpus, max_distance=3)
+    expect = base.select(
+        F.col("doc_id").alias("id_a"),
+        (F.col("doc_id") + 10_000_000).alias("id_b"),
+    )
+    found = pairs.join(expect, ["id_a", "id_b"], "left_semi").agg(
+        F.count("*").alias("found")
+    )
+    planted = base.agg(F.count("*").alias("planted"))
+    violations = pairs.filter(F.col("id_a") >= F.col("id_b")).agg(
+        F.count("*").alias("order_violations")
+    )
+    return planted.crossJoin(found).crossJoin(violations)
+
+
+@query("""
 WITH c AS (SELECT count(*) AS n FROM embeddings WHERE vec_id < 5)
-SELECT n AS n_queries, n AS found FROM c""",
-        "closeness_hops4": _sql_closeness_unrolled(4),
-        "harmonic_hops4": _sql_harmonic_unrolled(4),
-        "betweenness_hops4": _sql_betweenness_unrolled(4),
-        "delta_sssp64": _sql_delta_sssp_unrolled(64),
-        "scc64": _sql_scc64(),
-        "mst64": _sql_mst64(),
-        "embedding_dup_pairs": """
+SELECT n AS n_queries, n AS found FROM c""")
+def q_ann_lsh_check(spark, sf):
+    # ann_lsh_topk invariant: an exact copy of each query vector
+    # planted into the corpus hashes into the query's bucket in
+    # EVERY table (identical hyperplane signs) and re-ranks at
+    # sim 1.0 — so it must appear in the query's top-k.
+    from neo4j_graph_algorithms_spark.pipeline.similarity import lsh_cosine_topk
+
+    emb = _read(spark, sf, "embeddings").select("vec_id", "embedding")
+    q = emb.filter(F.col("vec_id") < 5)
+    planted = q.select(
+        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
+    )
+    c = emb.filter(F.col("vec_id") >= 5).unionByName(planted)
+    out = lsh_cosine_topk(q, c, k=3, n_tables=8, n_bits=8)
+    found = out.filter(
+        F.col("neighbor_id") == F.col("query_id") + 10_000_000
+    ).agg(F.count("*").alias("found"))
+    nq = q.agg(F.count("*").alias("n_queries"))
+    return nq.crossJoin(found)
+
+
+@query(_sql_closeness_unrolled(4), headline=True)
+def q_closeness_hops4(spark, sf):
+    # radius-bounded closeness (depths <= 4, OUT direction): the
+    # MS-BFS farness aggregation with the reference's (n-1)/farness
+    # formula (MSClosenessCentrality.java:43-95), SQL-verifiable
+    # because the bounded pair set is exactly apsp_hops4's
+    from neo4j_graph_algorithms_spark.operators.msbfs import ms_bfs_depths
+
+    g = _doc_graph(spark, sf)
+    n = g.node_count()
+    depths = ms_bfs_depths(g, direction="out", max_depth=4)
+    farness = depths.groupBy(F.col("node").alias("id")).agg(
+        F.sum(F.col("depth") * F.col("n_sources")).alias("farness")
+    )
+    return g.nodes.select("id").join(farness, "id", "left").select(
+        "id",
+        F.round(
+            F.when(
+                F.coalesce(F.col("farness"), F.lit(0)) > 0,
+                F.lit(float(n - 1)) / F.col("farness"),
+            ).otherwise(F.lit(0.0)),
+            ROUND,
+        ).alias("centrality"),
+    )
+
+
+@query(_sql_harmonic_unrolled(4), headline=True)
+def q_harmonic_hops4(spark, sf):
+    # radius-bounded harmonic centrality (MSHarmonicCentrality.java:55-79)
+    from neo4j_graph_algorithms_spark.operators.msbfs import ms_bfs_depths
+
+    g = _doc_graph(spark, sf)
+    n = g.node_count()
+    depths = ms_bfs_depths(g, direction="out", max_depth=4)
+    inv = depths.groupBy(F.col("node").alias("id")).agg(
+        F.sum(F.col("n_sources") / F.col("depth")).alias("inv_sum")
+    )
+    return g.nodes.select("id").join(inv, "id", "left").select(
+        "id",
+        F.round(
+            F.coalesce(F.col("inv_sum"), F.lit(0.0)) / F.lit(float(max(n - 1, 1))),
+            ROUND,
+        ).alias("centrality"),
+    )
+
+
+@query(_sql_betweenness_unrolled(4), headline=True)
+def q_betweenness_hops4(spark, sf):
+    # depth-4-bounded exact Brandes betweenness (OUT direction) —
+    # the `algo.betweenness` maxDepth surface
+    # (MaxDepthBetweennessCentrality.java:125-145), oracle-checked
+    # against the fully-unrolled forward/backward recurrence in SQL
+    from neo4j_graph_algorithms_spark.operators.betweenness import betweenness
+
+    g = _doc_graph(spark, sf)
+    bc, _ = betweenness(g, direction="out", max_depth=4)
+    # 3 decimals: δ sums are order-dependent float accumulations —
+    # see _sql_betweenness_unrolled
+    return bc.select("id", F.round("centrality", 3).alias("centrality"))
+
+
+@query(_sql_delta_sssp_unrolled(64), headline=True)
+def q_delta_sssp64(spark, sf):
+    # delta-stepping run to CONVERGENCE (no hop bound) on the doc
+    # subgraph with ids < 64 — small enough that the SQL oracle's
+    # 63-round Bellman-Ford is provably converged, so this checks
+    # the bucketed scheduler end-to-end, not a truncation of it
+    from neo4j_graph_algorithms_spark.graph import Graph
+    from neo4j_graph_algorithms_spark.operators.shortest_path import (
+        INF,
+        delta_stepping,
+    )
+
+    edges = (
+        _doc_link_rows(spark, sf).select("src", "dst").distinct()
+        .filter((F.col("src") < 64) & (F.col("dst") < 64))
+        .withColumn("weight", (F.pmod("src", F.lit(7)) + 1).cast("double"))
+    )
+    nodes = (
+        _read(spark, sf, "documents")
+        .select(F.col("doc_id").alias("id"))
+        .filter(F.col("id") < 64)
+    )
+    g = Graph.from_edges(edges, nodes=nodes, weight="weight")
+    dist, _ = delta_stepping(g, source=0, delta=3.0)
+    return dist.filter(F.col("distance") < INF).select(
+        "id", F.round("distance", ROUND).alias("distance")
+    )
+
+
+@query(_sql_scc64(), headline=True)
+def q_scc64(spark, sf):
+    # `algo.scc.*` end-to-end on the bounded doc subgraph with
+    # deterministic back-edges (reverse every edge whose src % 3
+    # == 0) so genuine multi-node SCCs exist; oracle = 6-round
+    # path-doubling reachability closure + mutual-reach min in SQL
+    from neo4j_graph_algorithms_spark.graph import Graph
+    from neo4j_graph_algorithms_spark.operators.scc import scc
+
+    base = (
+        _doc_link_rows(spark, sf).select("src", "dst").distinct()
+        .filter((F.col("src") < 64) & (F.col("dst") < 64))
+    )
+    back = base.filter(F.pmod("src", F.lit(3)) == 0).select(
+        F.col("dst").alias("src"), F.col("src").alias("dst")
+    )
+    edges = base.unionByName(back).distinct().withColumn("weight", F.lit(1.0))
+    nodes = (
+        _read(spark, sf, "documents")
+        .select(F.col("doc_id").alias("id"))
+        .filter(F.col("id") < 64)
+    )
+    g = Graph.from_edges(edges, nodes=nodes, weight="weight")
+    assignments, _ = scc(g)
+    return assignments.orderBy("id")
+
+
+@query(_sql_mst64(), headline=True)
+def q_mst64(spark, sf):
+    # `algo.mst` (Borůvka rebuild) on the bounded undirected doc
+    # subgraph with distinct deterministic weights -> unique MST;
+    # oracle = minimax-path characterization via min-max doubling
+    from neo4j_graph_algorithms_spark.graph import Graph
+    from neo4j_graph_algorithms_spark.operators.mst import mst
+
+    base = (
+        _doc_link_rows(spark, sf).select("src", "dst").distinct()
+        .filter((F.col("src") < 64) & (F.col("dst") < 64))
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+        )
+        .distinct()
+        .withColumn(
+            "weight", (F.col("src") * 64 + F.col("dst")).cast("double")
+        )
+    )
+    nodes = (
+        _read(spark, sf, "documents")
+        .select(F.col("doc_id").alias("id"))
+        .filter(F.col("id") < 64)
+    )
+    g = Graph.from_edges(base, nodes=nodes, weight="weight")
+    tree, _ = mst(g)
+    return tree.orderBy("src", "dst")
+
+
+@query("""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 p AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          list_dot_product(a.v, b.v) /
          (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS s
   FROM e a JOIN e b ON a.vec_id < b.vec_id)
-SELECT id_a, id_b, ROUND(s, 4) AS sim FROM p WHERE s >= 0.45 ORDER BY id_a, id_b""",
-        "events_hourly": f"""
+SELECT id_a, id_b, ROUND(s, 4) AS sim FROM p WHERE s >= 0.45 ORDER BY id_a, id_b""")
+def q_embedding_dup_pairs(spark, sf):
+    # embedding-cosine near-dup pairs, exact method (the
+    # verification baseline; the LSH scale path is differential-
+    # tested against it in tests/test_round3.py)
+    from neo4j_graph_algorithms_spark.pipeline.similarity import (
+        embedding_near_pairs,
+    )
+
+    emb = _read(spark, sf, "embeddings")
+    out = embedding_near_pairs(emb, threshold=0.45, method="exact")
+    return out.select("id_a", "id_b", F.round("sim", 4).alias("sim"))
+
+
+@query(f"""
 SELECT date_trunc('hour', ts) AS hour, event_type,
        count(*) AS n_events, ROUND(sum(value), {ROUND}) AS sum_value
-FROM events GROUP BY 1, 2""",
-    }
+FROM events GROUP BY 1, 2""")
+def q_events_hourly(spark, sf):
+    # date_trunc returns a session-zone timestamp even for the
+    # zone-less `ts` column; cast back so `hour` keeps the input's
+    # wall-clock (NTZ) type, as the oracle's TIMESTAMP does
+    ev = _read(spark, sf, "events")
+    return ev.groupBy(
+        F.date_trunc("hour", F.col("ts")).cast("timestamp_ntz").alias("hour"),
+        "event_type",
+    ).agg(
+        F.count("*").alias("n_events"),
+        F.round(F.sum("value"), ROUND).alias("sum_value"),
+    )
+
+
+# -- rows-only queries: each rides seeded hashing or an argmax-contraction
+# hierarchy that plain SQL can't replay; its `check` twin above is the
+# oracle-backed stand-in, and queries() lists these last.
+
+@query(check=q_minhash_check)
+def q_minhash_dedup_pairs(spark, sf):
+    # rows-only check (seeded MinHash permutations aren't SQL-expressible);
+    # the estimator itself is differential-tested against exact Jaccard
+    # in tests/test_pipeline.py
+    from neo4j_graph_algorithms_spark.pipeline.dedup import minhash_lsh_pairs
+
+    docs = _read(spark, sf, "documents")
+    return minhash_lsh_pairs(docs, threshold=0.8, num_hashes=64, bands=16).select(
+        "id_a", "id_b", F.round("jaccard_est", ROUND).alias("jaccard_est")
+    )
+
+
+@query(check=q_simhash_check)
+def q_simhash_pairs(spark, sf):
+    # rows-only: xxhash64-seeded SimHash not SQL-expressible
+    from neo4j_graph_algorithms_spark.pipeline.dedup import simhash_near_pairs
+
+    docs = _read(spark, sf, "documents")
+    return simhash_near_pairs(docs, max_distance=3)
+
+
+@query(check=q_ann_lsh_check)
+def q_ann_lsh_topk(spark, sf):
+    # rows-only: hyperplane-LSH candidates re-ranked exactly; recall
+    # vs the exact `embedding_topk` oracle is asserted in tests
+    from neo4j_graph_algorithms_spark.pipeline.similarity import lsh_cosine_topk
+
+    emb = _read(spark, sf, "embeddings")
+    q = emb.filter(F.col("vec_id") < 5)
+    c = emb.filter(F.col("vec_id") >= 5)
+    out = lsh_cosine_topk(q, c, k=3, n_tables=8, n_bits=8)
+    return out.select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
+
+
+@query(check=q_neighborhood_hll_check, headline=True)
+def q_neighborhood_hll(spark, sf):
+    # rows-only: the HyperANF estimate rides xxhash64-seeded HLL
+    # registers (not SQL-expressible); its accuracy vs the exact
+    # N(t) is differential-tested in tests/test_round4.py
+    from neo4j_graph_algorithms_spark.operators.neighborhood import (
+        neighborhood_function,
+    )
+
+    g = _doc_graph(spark, sf)
+    nf, _ = neighborhood_function(g, max_depth=4, p=10, direction="out")
+    return nf.select("depth", F.round("n_pairs_est", 2).alias("n_pairs_est"))
+
+
+@query(check=q_random_walks_check, headline=True)
+def q_random_walks64(spark, sf):
+    # rows-only: the walk's neighbor choice is xxhash64-seeded (not
+    # SQL-expressible); forced-path / edge-validity / determinism /
+    # spread properties are tested in tests/test_round4.py. 64
+    # sources × 2 reps × 4 steps over the doc graph — deterministic
+    # given (graph, seed), so rows are stable across runs.
+    from neo4j_graph_algorithms_spark.operators.random_walk import (
+        random_walks,
+    )
+
+    g = _doc_graph(spark, sf)
+    srcs = (
+        _read(spark, sf, "documents")
+        .select(F.col("doc_id").alias("id"))
+        .filter(F.col("id") < 64)
+    )
+    out, _ = random_walks(g, walk_length=4, walks_per_node=2, sources=srcs)
+    return out
+
+
+@query(check=q_louvain_multilevel_check)
+def q_louvain_multilevel(spark, sf):
+    # hierarchical Louvain (local moves + community contraction) —
+    # EXTENSION beyond the single-level reference (SURVEY §2.c 16b).
+    # Deterministic (parity half-steps + ascending-community argmax
+    # tie-break at every level) but not SQL-expressible: the driver
+    # records the rows-only check; the two-level collapse semantics
+    # are pinned by tests/test_round4.py's clique fixture.
+    from neo4j_graph_algorithms_spark.operators.louvain import louvain_multilevel
+
+    g = _doc_graph(spark, sf)
+    assign, _ = louvain_multilevel(g, levels=3, iterations=2)
+    return assign.select("id", "community")

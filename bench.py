@@ -14,10 +14,13 @@ same protocol the scaling harness uses:
 - per query we report the FLOOR (noise on this VM is strictly additive
   — there is no mechanism that makes a run faster than the code allows)
   and the MEDIAN, and grade on the floor;
-- a per-query regression verdict against ``BENCH_r01.json`` (itself a
-  single-run record, noted as such) is embedded in the output.
+- a per-query regression verdict against the most recent prior round
+  (``BENCH_r0*.json``) that recorded the query at the same scale factor
+  is embedded in the detail record, naming its source file (the r1/r2
+  records are single runs).
 
-Runs the headline queries from ``__spark_entry__`` at
+Runs the headline queries (the ``headline=True`` entries of
+``__spark_entry__.QUERIES``) at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` plus a PageRank superstep-throughput
 measurement on a deterministic synthetic link graph sized to the scale
@@ -45,8 +48,9 @@ from __future__ import annotations
 import json
 import os
 import statistics
-import sys
 import time
+
+import __spark_entry__ as entry
 
 
 def _force(df) -> int:
@@ -90,60 +94,12 @@ def pagerank_throughput(spark, n_files: int, supersteps: int = 12) -> dict:
     }
 
 
-HEADLINE = [
-    "link_edges",
-    "out_degree",
-    "pagerank",
-    "wcc",
-    "triangles",
-    "label_propagation",
-    "doc_fingerprint",
-    "embedding_topk",
-    # round-2/3 kernels, floor-tracked since r4 so a perf regression in
-    # any kernel family is visible round-over-round (the driver queries
-    # are depth/size-bounded, so the added cost per rep is small)
-    "betweenness_hops4",
-    "scc64",
-    "mst64",
-    "delta_sssp64",
-    "apsp_hops4",
-    # round-4 pipeline additions: the composite corpus gate (scan-speed
-    # projection) and the transitive dup-cluster resolution (pair
-    # generation + WCC over paired docs) — first floors this round
-    "filter_corpus",
-    "ngram_dup_clusters",
-    # round-4 kernel extensions: weighted PageRank, h-index k-core,
-    # exact neighborhood function (MS-BFS aggregate), deterministic
-    # random walks — first floors this round
-    "pagerank_weighted",
-    "kcore45",
-    "neighborhood_exact",
-    "random_walks64",
-    # late round-4 extensions: warm-start/incremental PageRank,
-    # ArticleRank, node-similarity pairs (jaccard + overlap), and the
-    # stratified sampler — first floors this round
-    "pagerank_warm",
-    "article_rank",
-    "node_jaccard",
-    "node_overlap",
-    "doc_sample_stratified",
-    # round-5 widening: the remaining kernel families not yet floor-
-    # tracked (MS-BFS centralities, bounded SSSP, Louvain, HyperANF) —
-    # first floors this round
-    "sssp_hops12",
-    "closeness_hops4",
-    "harmonic_hops4",
-    "louvain",
-    "neighborhood_hll",
-    # round-5 pipeline additions: tf-idf keyword extraction, repeated
-    # n-gram boilerplate audit, gap-based sessionization
-    "tfidf_top3",
-    "repeated_ngrams",
-    "user_sessions",
-]
+# a floor-tracked query per kernel family and pipeline plane, so a perf
+# regression anywhere is visible round over round
+HEADLINE = [q.name for q in entry.QUERIES if q.headline]
 
-# floor-vs-r1 ratio above which we call a regression; r1 is a single
-# noisy run, so the band is deliberately wide
+# floor-vs-prior-round ratio above which we call a regression; the r1/r2
+# records are single noisy runs, so the band is deliberately wide
 REGRESSION_RATIO = 1.25
 
 
@@ -170,9 +126,6 @@ def main() -> None:
     spark = build_session(app_name="nga-bench", master=f"local[{cpus}]")
 
     here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, here)
-    import __spark_entry__ as entry
-
     qs = entry.queries()
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for rep in range(reps):

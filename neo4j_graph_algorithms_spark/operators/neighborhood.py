@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, undirect
-from ..plans.checkpointing import SuperstepDriver
+from ..plans.checkpointing import SuperstepDriver, _release
 
 
 def _edges_pull(graph: Graph, direction: str) -> DataFrame:
@@ -216,15 +216,16 @@ def neighborhood_function(
     def restore(state: DataFrame, meta: dict):
         state = state.localCheckpoint(eager=True)
         return (
-            state.select("id", "sketch"),
+            state,
             state.filter(F.col("_changed")).select("id", "sketch"),
             float(meta["prev_n"]),
             list(meta["series"]),
         )
 
     # loop state (sketches, frontier, prev_n, series): the per-node
-    # sketches, those that changed last depth, the last raw Σ estimate,
-    # and the N(t) series so far (depth t at index t-1)
+    # sketches (the eager localCheckpoint of the last depth, released
+    # once the next depth's exists), those that changed last depth, the
+    # last raw Σ estimate, and the N(t) series so far (depth t at index t-1)
     def superstep(depth: int, st):
         sketches, frontier, prev_n, series = st
         msgs = edges.join(
@@ -261,6 +262,7 @@ def neighborhood_function(
             )
             .localCheckpoint(eager=True)
         )
+        _release(sketches)
         n_est = total(nxt)
         frontier = nxt.filter("_changed").select("id", "sketch")
         changed = frontier.count()
@@ -274,12 +276,13 @@ def neighborhood_function(
             loop.cache.step(nxt, depth, metrics={"series": series, "prev_n": n_est})
         stop = changed == 0 or (tolerance > 0 and growth < tolerance)
         return (
-            (nxt.select("id", "sketch"), frontier, n_est, series),
+            (nxt, frontier, n_est, series),
             {"n_pairs_est": series[-1], "changed": changed},
             stop,
         )
 
-    *_, nf = loop.run(max_depth, init, restore, superstep, resume)
+    sketches, *_, nf = loop.run(max_depth, init, restore, superstep, resume)
+    _release(sketches)  # the result is built from the driver-side series
     # stopped with a still-moving frontier = the tolerance cut, not convergence
     converged = loop.stopped and loop.history[-1]["changed"] == 0
 

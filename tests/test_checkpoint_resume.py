@@ -65,11 +65,15 @@ def test_resume_matches_uninterrupted_run(spark, tmp_path):
         assert abs(got[k] - v) < 1e-12, (k, got[k], v)
 
 
-def _cached_rdds(spark) -> int:
+def _cached_rdd_ids(spark) -> set[int]:
     sc = spark.sparkContext._jsc.sc()
     # storage info comes from the status store, fed by the async listener bus
     sc.listenerBus().waitUntilEmpty()
-    return len(sc.getRDDStorageInfo())
+    return {info.id() for info in sc.getRDDStorageInfo()}
+
+
+def _cached_rdds(spark) -> int:
+    return len(_cached_rdd_ids(spark))
 
 
 def test_iteration_cache_releases_previous_state(spark):
@@ -84,6 +88,31 @@ def test_iteration_cache_releases_previous_state(spark):
         state = cache.step(state.select("id", (F.col("v") + 1).alias("v")), step)
         assert _cached_rdds(spark) - before <= 1, step
     assert state.agg(F.sum("v")).collect()[0][0] == sum(range(n)) + 6 * n
+
+
+def test_kernels_release_per_step_checkpoints(spark):
+    """PageRank's fold re-roots each pending delta frame, and HyperANF
+    each depth's sketches, with an eager localCheckpoint; both release
+    them once consumed, so neither leaves more cached RDDs behind than
+    a WCC run on the same graph (its returned state)."""
+    g = Graph.from_edge_list(
+        spark, [(i, (i + 1) % 300) for i in range(300)] + [(i, 0) for i in range(1, 300, 7)],
+        n_nodes=300,
+    )
+    g.node_count(), g.id_type()  # memoized graph facts, outside the counts
+
+    def added(run):
+        """(run's result, cached RDDs it left that were not there before);
+        the result is kept alive, so its own state counts."""
+        before = _cached_rdd_ids(spark)
+        out = run()
+        return out, len(_cached_rdd_ids(spark) - before)
+
+    _wcc_out, bound = added(lambda: wcc(g))
+    pr_out, n_pagerank = added(lambda: pagerank(g, max_iterations=10, fuse=5))
+    _anf_out, n_anf = added(lambda: neighborhood_function(g, max_depth=6, p=6))
+    assert pr_out[1]["iterations"] == 10
+    assert n_pagerank <= bound and n_anf <= bound, (n_pagerank, n_anf, bound)
 
 
 def test_resume_refuses_snapshot_with_missing_part(spark, tmp_path):
