@@ -30,9 +30,11 @@ Deliberate divergences (documented in SURVEY.md §4):
   gather-scatter measured over 2x slower than this hash join on the
   same 1.2M-edge graph, so the plain join is the only plan.
 
-One physical plan: pure joins + two-phase hash aggregation; the
-shuffle-per-superstep is `edges ⨝ active_deltas` then
-`groupBy(dst).sum`, with Catalyst's map-side partial aggregation.
+One Spark job per superstep, one per fold (the reference's superstep
+ends at one thread-pool barrier, `impl/PageRank.java:344-374`): the
+push is `edges ⨝ delta` as a co-partitioned shuffled hash join, then
+`groupBy(dst).sum` with map-side partial aggregation; the pushed frame
+is local-checkpointed by the same job that computes its max delta.
 
 Skew: optional salting (``salt_buckets``) forces an explicit two-phase
 aggregation `groupBy(salt, dst) → groupBy(dst)` for power-law in-degree
@@ -41,17 +43,24 @@ hubs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import SuperstepDriver, _release
+from ..plans.checkpointing import SuperstepDriver, _release, adaptive_disabled
+
+
+def _join_active(edges_inv: DataFrame, active: DataFrame) -> DataFrame:
+    """edges ⨝ active on src, hash-built on `active`: a broadcast of a
+    small frontier would cost a job of its own every superstep, and
+    both sides already arrive hash-partitioned by the key."""
+    return edges_inv.join(active.hint("shuffle_hash"), "src")
 
 
 def _messages_dataframe(edges_inv: DataFrame, active: DataFrame, damping: float) -> DataFrame:
-    """msgs(dst, recv): one shuffle join + hash agg per superstep."""
+    """msgs(dst, recv): one join + hash agg per superstep."""
     return (
-        edges_inv.join(active, "src")
+        _join_active(edges_inv, active)
         .select("dst", (F.col("delta") * F.col("inv_deg")).alias("m"))
         .groupBy("dst")
         .agg((F.lit(damping) * F.sum("m")).alias("recv"))
@@ -65,7 +74,7 @@ def _messages_salted(
     salt derived from src so a hub dst's incoming mass is combined in
     `salt_buckets` independent reducers before the final (small) agg."""
     partial = (
-        edges_inv.join(active, "src")
+        _join_active(edges_inv, active)
         .select(
             "dst",
             F.pmod(F.col("src"), F.lit(salt_buckets)).alias("_salt"),
@@ -75,6 +84,33 @@ def _messages_salted(
         .agg(F.sum("m").alias("pm"))
     )
     return partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("recv"))
+
+
+def _edge_table(graph: Graph, id_t: str, n_parts: int, weighted: bool, article: bool) -> DataFrame:
+    """edges_inv(src, dst, inv_deg): each edge with the fraction of its
+    source's delta it carries, hash-partitioned by src. The window
+    reuses that partitioning (one shuffle, no degree join), and so
+    does every superstep's join once the table is cached
+    (InMemoryRelation preserves outputPartitioning): the edge table
+    never moves again, so per-superstep shuffle volume is O(V)."""
+    edges = graph.edges
+    cols = [F.col("src").cast(id_t).alias("src"), F.col("dst").cast(id_t).alias("dst")]
+    by_src = Window.partitionBy("src")
+    if weighted:
+        # per-edge push fraction w/Σw replaces 1/deg; everything
+        # downstream (messages, salting, folds) is weight-agnostic
+        edges = edges.filter(F.col("weight") > 0)
+        cols.append("weight")
+        inv_deg = F.col("weight") / F.sum("weight").over(by_src)
+    elif article:
+        avg_deg = graph.edges.count() / max(graph.node_count(), 1)
+        inv_deg = F.lit(1.0) / (F.count("*").over(by_src) + F.lit(float(avg_deg)))
+    else:
+        inv_deg = F.lit(1.0) / F.count("*").over(by_src)
+    return (
+        edges.select(*cols).repartition(n_parts, "src")
+        .select("src", "dst", inv_deg.alias("inv_deg"))
+    )
 
 
 def pagerank(
@@ -152,61 +188,30 @@ def pagerank(
     Σ deltas received, `impl/PageRank.java:505-517`, lets the loop
     iterate on the 2-column *delta* frame alone):
 
-    - per superstep: ``edges ⨝ delta`` (edge table cached + hash-
-      partitioned once, only the delta frame shuffles) → two-phase
-      sum by dst → materialize. No rank state is touched.
-    - every ``fuse`` supersteps the materialized delta frames fold
-      into the running rank accumulator with one union+sum job.
+    - set-up, one job: the edge table is hash-partitioned by ``src``
+      and its per-edge push fraction ``inv_deg`` computed by a window
+      over ``src``, then cached. It never moves again.
+    - per superstep, one job: ``edges ⨝ delta`` (shuffled hash join;
+      the delta frame is already hash-partitioned by id, except right
+      after a fold) → two-phase sum by dst → local checkpoint of the
+      new delta frame, written while the same job computes its max
+      delta. No rank state is touched.
+    - every ``fuse`` supersteps, one job: the checkpointed delta frames
+      fold into the running rank accumulator with one union and one
+      aggregation, which also carries the last frame's delta.
 
-    This keeps per-superstep shuffle volume at O(active) and the
-    stage count at 2, which is what the N→4N scaling criterion needs
-    — fixed scheduling overhead is the enemy of scaling efficiency.
+    This keeps per-superstep shuffle volume at O(active) and the job
+    count at one per superstep, which is what the N→4N scaling
+    criterion needs — fixed scheduling overhead is the enemy of
+    scaling efficiency.
     """
-    spark = graph.edges.sparkSession
-    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
-
-    # int-id compression (shared Heavy-vs-Huge analogue; bound scan
-    # cached per snapshot via graph.id_type). inv_deg and messages stay
-    # float64: a float32 reciprocal costs ~3e-8 per hop (measured) —
-    # too close to the 1e-6 parity bar.
-    id_t = graph.id_type()
-
     if weighted and article:
         raise ValueError("weighted and article are mutually exclusive")
-    if weighted:
-        # per-edge push fraction w/Σw replaces 1/deg; everything
-        # downstream (messages, salting, folds) is weight-agnostic
-        e_w = graph.edges.filter(F.col("weight") > 0).select(
-            F.col("src").cast(id_t).alias("src"),
-            F.col("dst").cast(id_t).alias("dst"),
-            F.col("weight"),
-        )
-        w_sum = e_w.groupBy("src").agg(F.sum("weight").alias("_wsum"))
-        edges_with_inv = e_w.join(w_sum, "src").select(
-            "src", "dst", (F.col("weight") / F.col("_wsum")).alias("inv_deg")
-        )
-    else:
-        out_deg = graph.out_degrees().select(
-            F.col("id").cast(id_t).alias("src"), F.col("degree")
-        )
-        denom = F.col("degree")
-        if article:
-            avg_deg = graph.edges.count() / max(graph.node_count(), 1)
-            denom = F.col("degree") + F.lit(float(avg_deg))
-        edges_with_inv = graph.edges.select(
-            F.col("src").cast(id_t).alias("src"), F.col("dst").cast(id_t).alias("dst")
-        ).join(out_deg, "src").select(
-            "src", "dst", (F.lit(1.0) / denom).alias("inv_deg")
-        )
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    # hash-partition the edge table by src ONCE and cache: every
-    # superstep's `edges ⨝ active` then reuses the cached partitioning
-    # (InMemoryRelation preserves outputPartitioning), so only the small
-    # delta frame shuffles — the edge table never moves again. This is
-    # the property that keeps per-superstep shuffle volume O(V) instead
-    # of O(E) at 100 TB scale.
-    edges_inv = edges_with_inv.repartition(n_parts, "src").persist()
-    edges_inv.count()
+    if init_ranks is not None and source_nodes is not None:
+        raise ValueError("init_ranks and source_nodes are mutually exclusive")
+
+    spark = graph.edges.sparkSession
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
 
     alpha = 1.0 - damping
 
@@ -220,21 +225,14 @@ def pagerank(
             msgs = _messages_dataframe(edges_inv, active, damping)
         return msgs.select(F.col("dst").alias("id"), F.col("recv").alias("delta"))
 
-    signed = init_ranks is not None
-    if signed and source_nodes is not None:
-        raise ValueError("init_ranks and source_nodes are mutually exclusive")
-
-    # warm starts propagate SIGNED residuals; cold deltas are >= 0 and
-    # the != 0 form would be equivalent, but > 0 keeps the cold plan
-    # byte-identical to previous rounds' recorded plans
-    active_pred = (
-        (F.col("delta") != 0.0) if signed else (F.col("delta") > 0)
-    )
+    # warm starts propagate SIGNED residuals; cold deltas are never
+    # negative, so this filter (and the max |delta| test) fit every variant
+    active_pred = F.col("delta") != 0.0
 
     def split(state: DataFrame):
         """(id, rank, delta) state → loop state (rank accumulator,
-        active delta frontier, pending unfolded delta frames)."""
-        return state.select("id", "rank"), state.select("id", "delta").filter(active_pred), []
+        active delta frontier)."""
+        return state.select("id", "rank"), state.select("id", "delta").filter(active_pred)
 
     def init():
         if init_ranks is not None:
@@ -293,77 +291,73 @@ def pagerank(
         """
         return send(cur.select(F.col("id").alias("src"), "delta"))
 
-    fold = max(1, fuse)
+    # checkpointed delta frames pushed since the last fold (kept here,
+    # not in the loop state, so a cancelled run can still release them)
+    pending: list[DataFrame] = []
 
-    def fold_state(acc: DataFrame, frames: list[DataFrame]) -> DataFrame:
-        """acc + Σ frames' deltas → (id, rank, delta=last frame's delta).
-
-        The caller re-roots each pending frame as a plain RDD scan
-        (localCheckpoint reads straight from its cache) before the
-        union: union branches over multi-level cached JOIN chains defeat
-        Catalyst's cache substitution above the broadcast threshold and
-        silently RE-EXECUTE the whole chain (measured 49s vs 1.2s for an
-        11-frame fold at 2M nodes)."""
-        allp = acc.select("id", F.col("rank").alias("v"))
-        last = frames[-1]
-        for p in frames:
-            allp = allp.unionByName(p.select("id", F.col("delta").alias("v")))
-        folded = allp.groupBy("id").agg(F.sum("v").alias("rank"))
-        return folded.join(last, "id", "left").select(
-            "id", "rank", F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta")
-        )
+    def fold_state(acc: DataFrame) -> DataFrame:
+        """acc + Σ pending deltas → (id, rank, delta=last frame's delta),
+        as one union and one aggregation. Each pending frame is a local
+        checkpoint, so the union reads its blocks and recomputes no
+        push."""
+        zero = F.lit(0.0)
+        parts = acc.select("id", F.col("rank").alias("v"), zero.alias("d"))
+        for i, p in enumerate(pending):
+            last = F.col("delta") if i == len(pending) - 1 else zero
+            parts = parts.unionByName(
+                p.select("id", F.col("delta").alias("v"), last.alias("d"))
+            )
+        return parts.groupBy("id").agg(F.sum("v").alias("rank"), F.sum("d").alias("delta"))
 
     def superstep(it: int, st):
-        acc, cur, pending = st
-        # persist() (not localCheckpoint) keeps the hash(dst) output
-        # partitioning visible to Catalyst, so the next superstep's
-        # edge join needs NO exchange; the InMemoryRelation chain
-        # stays ≤ fuse deep because every fold below re-roots it
-        cur = push(cur).persist()
-        cur.count()
+        acc, cur = st
+        # a lazy localCheckpoint keeps the frame's hash(id) partitioning,
+        # so the next push joins it without an exchange; the max-delta
+        # job below is the one job that computes and checkpoints it
+        cur = push(cur).localCheckpoint(eager=False)
         pending.append(cur)
-        max_delta = None
-        if tolerance is not None:
-            max_delta = (
-                cur.agg(F.max(F.abs(F.col("delta")))).collect()[0][0]
-                if signed
-                else cur.agg(F.max("delta")).collect()[0][0]
-            ) or 0.0
-        converged = max_delta is not None and max_delta < tolerance
+        top = cur.agg(F.max(F.abs("delta"))).collect()[0][0] or 0.0
+        converged = tolerance is not None and top < tolerance
         folded = (
-            len(pending) >= fold or converged or it == max_iterations
+            len(pending) >= max(1, fuse) or converged or it == max_iterations
             or loop.cache.durable(it)
         )
         if folded:
-            # the fold doubles as lineage truncation: the folded
-            # state materializes through IterationCache (durable
-            # parquet or eager localCheckpoint), and the frontier is
-            # RE-ROOTED at that materialized state so every
-            # per-block chain hangs off exactly one truncated root —
-            # unions mixing several localCheckpoint roots defeat
-            # Catalyst's cache lookup and recompute the chains
-            # (measured: 11-frame mixed-root fold 49s vs 1.2s)
-            frames = [p.localCheckpoint(eager=True) for p in pending]
-            state = loop.cache.step(fold_state(acc, frames), it, value_col="delta")
+            state = loop.cache.step(fold_state(acc), it, value_col="delta")
             for p in pending:
-                p.unpersist()
-            for f in frames:
-                _release(f)
-            acc, cur, pending = split(state)
-        return (acc, cur, pending), {"max_delta": max_delta, "folded": folded}, converged
+                _release(p)
+            pending.clear()
+            acc, cur = split(state)
+        max_delta = None if tolerance is None else top
+        return (acc, cur), {"max_delta": max_delta, "folded": folded}, converged
 
-    acc, _, _ = loop.run(
-        max_iterations, init, lambda df, _meta: split(df), superstep, resume
-    )
+    # AQE would run every query stage as a job of its own
+    with adaptive_disabled(spark):
+        # int-id compression (shared Heavy-vs-Huge analogue; bound scan
+        # cached per snapshot via graph.id_type). inv_deg and messages stay
+        # float64: a float32 reciprocal costs ~3e-8 per hop (measured) —
+        # too close to the 1e-6 parity bar.
+        id_t = graph.id_type()
+        n_parts = num_partitions or spark.sparkContext.defaultParallelism
+        edges_inv = _edge_table(graph, id_t, n_parts, weighted, article).persist()
+        try:
+            edges_inv.count()
+            acc, _ = loop.run(
+                max_iterations, init, lambda df, _meta: split(df), superstep, resume
+            )
+        finally:  # a cancelled run must not leave its O(E) edge table cached
+            for p in pending:
+                _release(p)
+            edges_inv.unpersist()
+        n_nodes = graph.node_count()
 
     result = acc.select(F.col("id").cast("long").alias("id"), "rank")
     stats = {
-        "nodes": graph.node_count(),
+        "nodes": n_nodes,
         "iterations": loop.ran,
         "didConverge": loop.stopped,
         "damping": damping,
         "computeMillis": loop.millis(),
         "history": loop.history,
     }
-    edges_inv.unpersist()
     return result, stats

@@ -45,6 +45,7 @@ except ImportError:  # pragma: no cover
 
 
 _SEVER_WARNED = False
+_RELEASE_QUIET = False  # the unpersist warning's logger is at ERROR
 
 
 class TerminatedError(RuntimeError):
@@ -164,13 +165,25 @@ def _sever(ck: DataFrame) -> DataFrame:
 
 
 def _release(ck: DataFrame) -> None:
-    """Drop the blocks of an eager localCheckpoint. `DataFrame.unpersist`
+    """Drop the blocks of a localCheckpoint. `DataFrame.unpersist`
     is a no-op on it: the checkpointed RDD behind the frame's LogicalRDD
     was never registered with the CacheManager, so without this its
     blocks stay until driver GC. Blocking, so the memory is free before
-    the next superstep."""
+    the next superstep.
+
+    Spark warns on every such call that the RDD "cannot be recomputed
+    after unpersisting", which is the point here; the first call raises
+    the logger that warning comes from (and only that one) to ERROR."""
+    global _RELEASE_QUIET
     try:
-        ck._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        rdd = ck._jdf.queryExecution().analyzed().rdd()
+        if not _RELEASE_QUIET:
+            log4j = ck._sc._jvm.org.apache.logging.log4j
+            log4j.core.config.Configurator.setLevel(
+                "org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR
+            )
+            _RELEASE_QUIET = True
+        rdd.unpersist(True)
     except (AttributeError, TypeError, Py4JError):  # non-classic session
         ck.unpersist()
 

@@ -72,6 +72,10 @@ def _cached_rdd_ids(spark) -> set[int]:
     return {info.id() for info in sc.getRDDStorageInfo()}
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _cached_rdds(spark) -> int:
     return len(_cached_rdd_ids(spark))
 
@@ -91,10 +95,10 @@ def test_iteration_cache_releases_previous_state(spark):
 
 
 def test_kernels_release_per_step_checkpoints(spark):
-    """PageRank's fold re-roots each pending delta frame, and HyperANF
-    each depth's sketches, with an eager localCheckpoint; both release
-    them once consumed, so neither leaves more cached RDDs behind than
-    a WCC run on the same graph (its returned state)."""
+    """PageRank local-checkpoints each pushed delta frame, and HyperANF
+    each depth's sketches; both release them once consumed, so neither
+    leaves more cached RDDs behind than a WCC run on the same graph
+    (its returned state)."""
     g = Graph.from_edge_list(
         spark, [(i, (i + 1) % 300) for i in range(300)] + [(i, 0) for i in range(1, 300, 7)],
         n_nodes=300,
@@ -216,7 +220,8 @@ def test_kill_and_resume(spark, tmp_path, kernel):
     """A run stopped through its termination callable after k supersteps
     under a durable cadence, then resumed, equals an uninterrupted run;
     the resumed history starts right after the last snapshot, and the
-    callable ran once per superstep."""
+    callable ran once per superstep. A killed PageRank run leaves no
+    RDD persisted."""
     edges, n_nodes, run, k, every, rel = KILL_RESUME[kernel]
     g = Graph.from_edge_list(spark, edges, n_nodes=n_nodes)
     want, full = run(g)
@@ -224,9 +229,12 @@ def test_kill_and_resume(spark, tmp_path, kernel):
 
     ckpt = str(tmp_path / kernel)
     killed = _Checks(stop_after=k)
+    before = _persistent_rdd_ids(spark)
     with pytest.raises(TerminatedError):
         run(g, checkpoint_dir=ckpt, checkpoint_every=every, termination=killed)
     assert killed.calls == k + 1
+    if kernel == "pagerank":
+        assert _persistent_rdd_ids(spark) <= before
 
     checks = _Checks()
     got, stats = run(
