@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, degrees
-from ..plans.checkpointing import adaptive_disabled, check_termination, truncate_plan
+from ..plans.checkpointing import adaptive_disabled, check_termination, releasing, truncate_plan
 
 
 def _select_sources(
@@ -236,34 +236,34 @@ def betweenness(
         .repartition(n_parts, "src").persist()
     )
     rev.count()
+    with releasing(spark, [edges, rev]):
+        n = graph.node_count()
+        sources, scale, n_sources = _select_sources(graph, direction, sample, strategy, seed)
+        sources = sources.select(F.col("id").cast(id_t).alias("id"))
+        if wave_size is None:
+            wave_size = max(64, min(max(n_sources, 1), state_budget_rows // max(n, 1)))
+        n_waves = max(1, -(-n_sources // wave_size))
+        if n_waves > 1:
+            sources = sources.withColumn("_wave", F.pmod(F.xxhash64("id"), F.lit(n_waves)))
 
-    n = graph.node_count()
-    sources, scale, n_sources = _select_sources(graph, direction, sample, strategy, seed)
-    sources = sources.select(F.col("id").cast(id_t).alias("id"))
-    if wave_size is None:
-        wave_size = max(64, min(max(n_sources, 1), state_budget_rows // max(n, 1)))
-    n_waves = max(1, -(-n_sources // wave_size))
-    if n_waves > 1:
-        sources = sources.withColumn("_wave", F.pmod(F.xxhash64("id"), F.lit(n_waves)))
-
-    acc: DataFrame | None = None
-    deepest = 0
-    with adaptive_disabled(spark):
-        for w in range(n_waves):
-            wave_src = (
-                sources.filter(F.col("_wave") == w).select("id")
-                if n_waves > 1 else sources.select("id")
-            )
-            wave_contrib, d = _brandes_wave(spark, edges, rev, wave_src, max_depth, termination)
-            deepest = max(deepest, d)
-            if acc is None:
-                acc = truncate_plan(wave_contrib)
-            else:
-                acc = truncate_plan(
-                    acc.unionByName(wave_contrib)
-                    .groupBy("node")
-                    .agg(F.sum("dep").alias("dep"))
+        acc: DataFrame | None = None
+        deepest = 0
+        with adaptive_disabled(spark):
+            for w in range(n_waves):
+                wave_src = (
+                    sources.filter(F.col("_wave") == w).select("id")
+                    if n_waves > 1 else sources.select("id")
                 )
+                wave_contrib, d = _brandes_wave(spark, edges, rev, wave_src, max_depth, termination)
+                deepest = max(deepest, d)
+                if acc is None:
+                    acc = truncate_plan(wave_contrib)
+                else:
+                    acc = truncate_plan(
+                        acc.unionByName(wave_contrib)
+                        .groupBy("node")
+                        .agg(F.sum("dep").alias("dep"))
+                    )
     result = acc.select(
         F.col("node").cast("long").alias("id"),
         (F.col("dep") * F.lit(scale)).alias("centrality"),
@@ -271,8 +271,6 @@ def betweenness(
     result = graph.nodes.select("id").join(result, "id", "left").select(
         "id", F.coalesce("centrality", F.lit(0.0)).alias("centrality")
     )
-    edges.unpersist()
-    rev.unpersist()
     stats = {
         "nodes": n,
         "sources": n_sources,

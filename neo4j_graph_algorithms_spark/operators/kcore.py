@@ -88,8 +88,8 @@ def core_decomposition(
     # frames — the O(E) sides never re-shuffle. 2× edge-cache memory is
     # the standard price for structural (not optimizer-dependent)
     # frontier pruning.
-    sym = sym.repartition(n_parts, "nbr").persist()
-    sym_by_node = sym.repartition(n_parts, "node").persist()
+    sym = loop.persist(sym.repartition(n_parts, "nbr"))
+    sym_by_node = loop.persist(sym.repartition(n_parts, "node"))
     sym.count()
     sym_by_node.count()
 
@@ -187,8 +187,6 @@ def core_decomposition(
         "history": loop.history,
         "computeMillis": loop.millis(),
     }
-    sym.unpersist()
-    sym_by_node.unpersist()
     return result, stats
 
 

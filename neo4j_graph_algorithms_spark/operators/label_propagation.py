@@ -114,7 +114,7 @@ def label_propagation(
     # not the O(E) edge table — 2 half-steps per iteration makes this
     # the dominant per-superstep volume saving
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    e = e.repartition(n_parts, "nbr").persist()
+    e = loop.persist(e.repartition(n_parts, "nbr"))
     e.count()
 
     if node_weight_col is not None and node_weight_col in nodes.columns:
@@ -124,7 +124,7 @@ def label_propagation(
         )
     else:
         nw = nodes.select(F.col("id").cast(id_t).alias("id"), F.lit(1.0).alias("nw"))
-    nw = nw.persist()
+    nw = loop.persist(nw)
 
     w = Window.partitionBy("node").orderBy(F.desc("vote"), F.asc("nbr_label"))
 
@@ -181,8 +181,6 @@ def label_propagation(
         "computeMillis": loop.millis(),
         "history": loop.history,
     }
-    e.unpersist()
-    nw.unpersist()
     labels = labels.select(
         F.col("id").cast("long").alias("id"), F.col("label").cast("long").alias("label")
     )

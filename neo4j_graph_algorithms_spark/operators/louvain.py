@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph, undirect
-from ..plans.checkpointing import adaptive_disabled, check_termination, truncate_plan
+from ..plans.checkpointing import SuperstepDriver
 
 
 def louvain(
@@ -45,7 +45,7 @@ def louvain(
     Graphs without self-loops are bit-for-bit unaffected.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = SuperstepDriver(spark, termination=termination)
     n_parts = spark.sparkContext.defaultParallelism
     # undirected weighted adjacency (reference loads BOTH and treats the
     # graph as undirected for modularity)
@@ -53,7 +53,7 @@ def louvain(
     # join uses (stationary-edges property: only the O(V) community
     # frame moves per round; src-partitioning here was the wrong key
     # and re-shuffled O(E) twice per iteration)
-    sym = undirect(graph.edges, dedup=True).repartition(n_parts, "dst").persist()
+    sym = loop.persist(undirect(graph.edges, dedup=True).repartition(n_parts, "dst"))
     selfw = (
         graph.edges.filter(F.col("src") == F.col("dst"))
         .groupBy(F.col("src").alias("id"))
@@ -66,17 +66,12 @@ def louvain(
     # sym holds both orientations, so weighted degree grouped by dst ==
     # grouped by src — and the dst grouping reuses the cached
     # partitioning (no exchange)
-    k = (
+    k = loop.persist(
         sym.groupBy(F.col("dst").alias("id")).agg(F.sum("weight").alias("k"))
         .join(selfw, "id", "left")
         .select("id", (F.col("k") + F.coalesce(F.col("sw"), F.lit(0.0))).alias("k"))
-        .persist()
     )
     k.count()
-
-    comm = graph.nodes.select("id", F.col("id").alias("community"))
-    ran = 0
-    converged = False
 
     w = Window.partitionBy("id").orderBy(F.desc("gain"), F.asc("community"))
 
@@ -123,35 +118,29 @@ def louvain(
             .drop("new_c")
         )
 
-    with adaptive_disabled(spark):
-        comm = truncate_plan(comm)
-        for it in range(1, iterations + 1):
-            check_termination(spark, termination, it)
-            # truncate_plan: each half-round references comm four times
-            # (votes, totals, own-community, final coalesce) — the
-            # widest diamond of any kernel; a plain localCheckpoint's
-            # origin chain would grow ~4^iterations
-            # (plans/checkpointing.truncate_plan)
-            # `prev` rides along both half-rounds, so changes are
-            # counted off the materialized frame, not by a join
-            # against the previous state
-            stepped = truncate_plan(
-                half_round(half_round(comm.withColumn("prev", F.col("community")), 0), 1)
-            )
-            changed = stepped.filter(F.col("community") != F.col("prev")).count()
-            comm = stepped.select("id", "community")
-            ran = it
-            if changed == 0:
-                converged = True
-                break
-    sym.unpersist()
-    k.unpersist()
+    def superstep(it: int, comm: DataFrame):
+        # origin-severed (the cache's truncate_plan): each half-round
+        # references comm four times (votes, totals, own-community,
+        # final coalesce) — the widest diamond of any kernel; a plain
+        # localCheckpoint's origin chain would grow ~4^iterations.
+        # `prev` rides along both half-rounds, so changes are counted
+        # off the materialized frame, not by a join against the
+        # previous state, which the cache has released by then
+        stepped = loop.cache.step(
+            half_round(half_round(comm.withColumn("prev", F.col("community")), 0), 1), it
+        )
+        changed = stepped.filter(F.col("community") != F.col("prev")).count()
+        return stepped.select("id", "community"), {"changed": changed}, changed == 0
+
+    init = graph.nodes.select("id", F.col("id").alias("community"))
+    comm = loop.run(iterations, lambda: loop.cache.step(init, 0), None, superstep)
     n_comm = comm.select("community").distinct().count()
     stats = {
-        "ranIterations": ran,
-        "didConverge": converged,
+        "ranIterations": loop.ran,
+        "didConverge": loop.stopped,
         "communityCount": n_comm,
-        "computeMillis": int((time.time() - t0) * 1000),
+        "computeMillis": loop.millis(),
+        "history": loop.history,
     }
     return comm, stats
 

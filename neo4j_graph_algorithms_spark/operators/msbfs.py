@@ -50,12 +50,13 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, distributed_rank, undirect
-from ..plans.checkpointing import adaptive_disabled, check_termination, truncate_plan
+from ..plans.checkpointing import adaptive_disabled, check_termination, releasing, truncate_plan
 
 # fold the pending lazy result frames into one checkpoint once the list
 # grows past this many entries: keeps the final union plan flat/bounded
@@ -163,84 +164,78 @@ def _run_wave_bfs(
     n_parts = spark.sparkContext.defaultParallelism
     edges = edges.repartition(n_parts, "src").persist()
     edges.count()
+    with releasing(spark, [edges]):
+        src_nodes = sources if sources is not None else graph.nodes.select("id")
+        if id_t == "int":
+            src_nodes = src_nodes.select(F.col("id").cast("int").alias("id"))
+        numbered = _number_sources(src_nodes).localCheckpoint(eager=True)
+        if wave_size == "auto":
+            wave_size = _auto_wave_size(graph.node_count(), numbered.count())
+        waves = _wave_ranges(numbered, wave_size)
 
-    src_nodes = sources if sources is not None else graph.nodes.select("id")
-    if id_t == "int":
-        src_nodes = src_nodes.select(F.col("id").cast("int").alias("id"))
-    numbered = _number_sources(src_nodes).localCheckpoint(eager=True)
-    if wave_size == "auto":
-        wave_size = _auto_wave_size(graph.node_count(), numbered.count())
-    waves = _wave_ranges(numbered, wave_size)
+        frames: list[DataFrame] = []
 
-    frames: list[DataFrame] = []
+        def fold_if_wide() -> None:
+            # bound the pending-union plan width on very deep graphs; the
+            # amortized rewrite is O(state · depth/_FOLD_EVERY), a 128×
+            # improvement over the per-depth rewrite this replaced
+            if len(frames) >= _FOLD_EVERY:
+                acc = reduce(DataFrame.unionByName, frames)
+                frames.clear()
+                frames.append(truncate_plan(acc))
 
-    def fold_if_wide() -> None:
-        # bound the pending-union plan width on very deep graphs; the
-        # amortized rewrite is O(state · depth/_FOLD_EVERY), a 128×
-        # improvement over the per-depth rewrite this replaced
-        if len(frames) >= _FOLD_EVERY:
-            acc = frames[0]
-            for f in frames[1:]:
-                acc = acc.unionByName(f)
-            frames.clear()
-            frames.append(truncate_plan(acc))
-
-    with adaptive_disabled(spark):
-        for lo, hi in waves:
-            wave_numbered = (
-                numbered if len(waves) == 1
-                else numbered.filter(
-                    (F.col("batch") >= lo) & (F.col("batch") < hi)
+        with adaptive_disabled(spark):
+            for lo, hi in waves:
+                wave_numbered = (
+                    numbered if len(waves) == 1
+                    else numbered.filter(
+                        (F.col("batch") >= lo) & (F.col("batch") < hi)
+                    ).localCheckpoint(eager=True)
+                )
+                frontier = wave_numbered.select(
+                    "batch", F.col("id").alias("node"),
+                    F.expr("shiftleft(1L, bit)").alias("mask"),
                 ).localCheckpoint(eager=True)
-            )
-            frontier = wave_numbered.select(
-                "batch", F.col("id").alias("node"),
-                F.expr("shiftleft(1L, bit)").alias("mask"),
-            ).localCheckpoint(eager=True)
-            visited = frontier.withColumnRenamed("mask", "seen")
-            depth = 0
-            while True:
-                check_termination(spark, termination, depth)
-                depth += 1
-                if max_depth is not None and depth > max_depth:
-                    break
-                # expand: every frontier bit flows along the edges;
-                # drop bits already seen. The two per-depth state frames
-                # go through truncate_plan (NOT plain localCheckpoint):
-                # nxt references visited and visited references nxt — a
-                # diamond whose checkpoint-origin chain otherwise doubles
-                # per depth and hangs the driver in stats estimation
-                # beyond ~depth 20 (see plans/checkpointing.truncate_plan)
-                nxt = truncate_plan(
-                    edges.join(frontier.withColumnRenamed("node", "src"), "src")
-                    .groupBy("batch", F.col("dst").alias("node"))
-                    .agg(F.bit_or("mask").alias("mask"))
-                    .join(visited, ["batch", "node"], "left")
-                    .select(
-                        "batch", "node",
-                        F.col("mask").bitwiseAND(F.bitwise_not(F.coalesce(F.col("seen"), F.lit(0).cast("long")))).alias("mask"),
+                visited = frontier.withColumnRenamed("mask", "seen")
+                depth = 0
+                while True:
+                    check_termination(spark, termination, depth)
+                    depth += 1
+                    if max_depth is not None and depth > max_depth:
+                        break
+                    # expand: every frontier bit flows along the edges;
+                    # drop bits already seen. The two per-depth state frames
+                    # go through truncate_plan (NOT plain localCheckpoint):
+                    # nxt references visited and visited references nxt — a
+                    # diamond whose checkpoint-origin chain otherwise doubles
+                    # per depth and hangs the driver in stats estimation
+                    # beyond ~depth 20 (see plans/checkpointing.truncate_plan)
+                    nxt = truncate_plan(
+                        edges.join(frontier.withColumnRenamed("node", "src"), "src")
+                        .groupBy("batch", F.col("dst").alias("node"))
+                        .agg(F.bit_or("mask").alias("mask"))
+                        .join(visited, ["batch", "node"], "left")
+                        .select(
+                            "batch", "node",
+                            F.col("mask").bitwiseAND(F.bitwise_not(F.coalesce(F.col("seen"), F.lit(0).cast("long")))).alias("mask"),
+                        )
+                        .filter(F.col("mask") != 0)
                     )
-                    .filter(F.col("mask") != 0)
-                )
-                if nxt.isEmpty():
-                    break
-                frames.append(emit(nxt, depth, wave_numbered))
-                fold_if_wide()
-                visited = truncate_plan(
-                    visited.join(nxt.withColumnRenamed("mask", "new"), ["batch", "node"], "full")
-                    .select(
-                        "batch", "node",
-                        F.coalesce(F.col("seen"), F.lit(0).cast("long")).bitwiseOR(F.coalesce(F.col("new"), F.lit(0).cast("long"))).alias("seen"),
+                    if nxt.isEmpty():
+                        break
+                    frames.append(emit(nxt, depth, wave_numbered))
+                    fold_if_wide()
+                    visited = truncate_plan(
+                        visited.join(nxt.withColumnRenamed("mask", "new"), ["batch", "node"], "full")
+                        .select(
+                            "batch", "node",
+                            F.coalesce(F.col("seen"), F.lit(0).cast("long")).bitwiseOR(F.coalesce(F.col("new"), F.lit(0).cast("long"))).alias("seen"),
+                        )
                     )
-                )
-                frontier = nxt
-    edges.unpersist()
+                    frontier = nxt
     if not frames:
         return spark.createDataFrame([], out_schema)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return reduce(DataFrame.unionByName, frames)
 
 
 def ms_bfs_depths(

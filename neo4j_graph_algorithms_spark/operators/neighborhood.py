@@ -184,7 +184,7 @@ def neighborhood_function(
         F.col("src").cast(id_t).alias("src"), F.col("dst").cast(id_t).alias("dst")
     )
     n_parts = spark.sparkContext.defaultParallelism
-    edges = edges.repartition(n_parts, "dst").persist()
+    edges = loop.persist(edges.repartition(n_parts, "dst"))
     edges.count()
 
     if salt_buckets == "auto":
@@ -313,7 +313,6 @@ def neighborhood_function(
         "history": loop.history,
         "computeMillis": loop.millis(),
     }
-    edges.unpersist()
     return out, stats
 
 

@@ -339,16 +339,15 @@ def pagerank(
         # too close to the 1e-6 parity bar.
         id_t = graph.id_type()
         n_parts = num_partitions or spark.sparkContext.defaultParallelism
-        edges_inv = _edge_table(graph, id_t, n_parts, weighted, article).persist()
+        edges_inv = loop.persist(_edge_table(graph, id_t, n_parts, weighted, article))
+        edges_inv.count()
         try:
-            edges_inv.count()
             acc, _ = loop.run(
                 max_iterations, init, lambda df, _meta: split(df), superstep, resume
             )
-        finally:  # a cancelled run must not leave its O(E) edge table cached
+        finally:  # a cancelled run must not leave its pushed frames cached
             for p in pending:
                 _release(p)
-            edges_inv.unpersist()
         n_nodes = graph.node_count()
 
     result = acc.select(F.col("id").cast("long").alias("id"), "rank")

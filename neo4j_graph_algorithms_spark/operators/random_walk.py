@@ -88,13 +88,12 @@ def random_walks(
     # would not satisfy the (src, rn) equi-join and the O(E) adjacency
     # would re-shuffle every step — this way only the O(walkers)
     # frontier moves
-    adj = adj.repartition(n_parts, "src", "rn").persist()
+    adj = loop.persist(adj.repartition(n_parts, "src", "rn"))
     # (node, deg) — renamed so the frontier join is a name-based using-
     # join (deg shares lineage with adj; attribute refs would trip the
     # ambiguous-self-join analyzer when the step joins adj again)
-    deg = (
-        adj.groupBy("src").agg(F.count("*").alias("deg"))
-        .withColumnRenamed("src", "node").persist()
+    deg = loop.persist(
+        adj.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed("src", "node")
     )
     adj.count()
 
@@ -160,6 +159,4 @@ def random_walks(
         "history": loop.history,
         "computeMillis": loop.millis(),
     }
-    adj.unpersist()
-    deg.unpersist()
     return out, stats

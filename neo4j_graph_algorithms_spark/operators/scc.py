@@ -31,12 +31,13 @@ tests compare partitions.
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import adaptive_disabled, check_termination, truncate_plan
+from ..plans.checkpointing import adaptive_disabled, check_termination, releasing, truncate_plan
 
 
 def scc(
@@ -76,12 +77,8 @@ def scc(
     # round (O(rounds × V) copies on a deep condensation chain)
     assigned_frames: list[DataFrame] = []
     outer = 0
-
-    def assign(df: DataFrame) -> None:
-        assigned_frames.append(df)
-
     converged = False
-    with adaptive_disabled(spark):
+    with releasing(spark, [edges_all]), adaptive_disabled(spark):
         # per-round state frames go through truncate_plan (not plain
         # localCheckpoint): active/color/reached all sit in diamond-
         # shaped update loops whose checkpoint-origin chains otherwise
@@ -120,7 +117,7 @@ def scc(
                 n_trimmed = trimmed.count()
                 if n_trimmed == 0:
                     break
-                assign(trimmed.select("id", F.col("id").alias("component")))
+                assigned_frames.append(trimmed.select("id", F.col("id").alias("component")))
                 active = keep
                 sub = (
                     sub.join(active.withColumnRenamed("id", "src"), "src", "left_semi")
@@ -183,14 +180,13 @@ def scc(
                 frontier = step
             # SCC id = min node id of the reached set per color
             mins = reached.groupBy("color").agg(F.min("id").alias("component"))
-            assign(reached.join(mins, "color").select("id", "component"))
+            assigned_frames.append(reached.join(mins, "color").select("id", "component"))
             active = truncate_plan(
                 active.join(reached.select("id"), "id", "left_anti")
             )
 
     if not converged:
         converged = active.isEmpty()
-    edges_all.unpersist()
     if not converged:
         n_left = active.count()
         raise RuntimeError(
@@ -199,10 +195,7 @@ def scc(
             "cap (a chain-shaped SCC condensation needs one round per link)"
         )
     if assigned_frames:
-        acc = assigned_frames[0]
-        for f in assigned_frames[1:]:
-            acc = acc.unionByName(f)
-        result = acc.select(
+        result = reduce(DataFrame.unionByName, assigned_frames).select(
             F.col("id").cast("long").alias("id"),
             F.col("component").cast("long").alias("component"),
         )

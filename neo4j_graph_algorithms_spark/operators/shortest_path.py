@@ -25,13 +25,14 @@ Reference surface:
 
 from __future__ import annotations
 
-import time
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import adaptive_disabled, check_termination, truncate_plan
+from ..plans.checkpointing import (
+    SuperstepDriver, adaptive_disabled, check_termination, releasing, truncate_plan)
 
 INF = float("inf")
 
@@ -67,64 +68,54 @@ def shortest_paths(
     """Single-source distances: (id, distance[, pred]); unreachable
     nodes carry +inf (ref streams Infinity for them)."""
     spark = graph.edges.sparkSession
-    t0 = time.time()
-    edges = _prep_edges(graph, direction)
+    loop = SuperstepDriver(spark, termination=termination)
     n_parts = spark.sparkContext.defaultParallelism
-    edges = edges.repartition(n_parts, "src").persist()
+    edges = loop.persist(_prep_edges(graph, direction).repartition(n_parts, "src"))
     edges.count()
-
     id_t = graph.id_type()
-    dist = graph.nodes.select(
-        F.col("id").cast(id_t).alias("id"),
-        F.when(F.col("id") == source, 0.0).otherwise(F.lit(INF)).alias("distance"),
-        *( [F.lit(None).cast(id_t).alias("pred")] if with_predecessor else [] ),
-    )
-    frontier = dist.filter(F.col("distance") < INF)
-    ran = 0
-    with adaptive_disabled(spark):
-        dist = dist.localCheckpoint(eager=True)
-        frontier = frontier.localCheckpoint(eager=True)
-        for it in range(1, max_iterations + 1):
-            check_termination(spark, termination, it)
-            cand = (
-                edges.join(
-                    frontier.select(F.col("id").alias("src"), F.col("distance").alias("ds")),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(
-                    F.min(F.struct((F.col("ds") + F.col("weight")).alias("d"), F.col("src").alias("p"))).alias("best")
-                )
-                .select("id", F.col("best.d").alias("nd"), F.col("best.p").alias("np"))
+
+    def init():
+        dist = loop.cache.step(graph.nodes.select(
+            F.col("id").cast(id_t).alias("id"),
+            F.when(F.col("id") == source, 0.0).otherwise(F.lit(INF)).alias("distance"),
+            *( [F.lit(None).cast(id_t).alias("pred")] if with_predecessor else [] ),
+        ), 0)
+        return dist, dist.filter(F.col("distance") < INF)
+
+    # loop state (dist, frontier): the frontier is the rows improved
+    # last round, a filter over the same materialized frame as dist
+    def superstep(it: int, st):
+        dist, frontier = st
+        cand = (
+            edges.join(
+                frontier.select(F.col("id").alias("src"), F.col("distance").alias("ds")),
+                "src",
             )
-            merged = dist.join(cand, "id", "left")
-            if with_predecessor:
-                improved_cols = [
-                    "id",
-                    F.when(F.col("nd") < F.col("distance"), F.col("nd")).otherwise(F.col("distance")).alias("distance"),
-                    F.when(F.col("nd") < F.col("distance"), F.col("np")).otherwise(F.col("pred")).alias("pred"),
-                    (F.coalesce(F.col("nd"), F.lit(INF)) < F.col("distance")).alias("_imp"),
-                ]
-            else:
-                improved_cols = [
-                    "id",
-                    F.least(F.col("distance"), F.coalesce(F.col("nd"), F.lit(INF))).alias("distance"),
-                    (F.coalesce(F.col("nd"), F.lit(INF)) < F.col("distance")).alias("_imp"),
-                ]
-            # truncate_plan, not plain localCheckpoint: dist and frontier
-            # both derive from `merged`, which references the previous
-            # dist AND frontier — the diamond whose checkpoint-origin
-            # chain otherwise grows exponentially with relaxation rounds
-            # (a >20-hop weighted path would hang the driver in stats
-            # estimation; see plans/checkpointing.truncate_plan)
-            nxt = truncate_plan(merged.select(*improved_cols))
-            frontier = nxt.filter(F.col("_imp")).drop("_imp")
-            dist = nxt.drop("_imp")
-            ran = it
-            if frontier.isEmpty():
-                break
-    edges.unpersist()
-    stats = {"iterations": ran, "computeMillis": int((time.time() - t0) * 1000)}
+            .groupBy(F.col("dst").alias("id"))
+            .agg(
+                F.min(F.struct((F.col("ds") + F.col("weight")).alias("d"), F.col("src").alias("p"))).alias("best")
+            )
+            .select("id", F.col("best.d").alias("nd"), F.col("best.p").alias("np"))
+        )
+        merged = dist.join(cand, "id", "left")
+        nd = F.coalesce(F.col("nd"), F.lit(INF))
+        imp = nd < F.col("distance")
+        improved_cols = ["id", F.when(imp, nd).otherwise(F.col("distance")).alias("distance")]
+        if with_predecessor:
+            improved_cols.append(F.when(imp, F.col("np")).otherwise(F.col("pred")).alias("pred"))
+        improved_cols.append(imp.alias("_imp"))
+        # origin-severed (the cache's truncate_plan): dist and frontier
+        # both derive from `merged`, which references the previous
+        # dist AND frontier — the diamond whose checkpoint-origin
+        # chain otherwise grows exponentially with relaxation rounds
+        # (a >20-hop weighted path would hang the driver in stats
+        # estimation; see plans/checkpointing.truncate_plan)
+        nxt = loop.cache.step(merged.select(*improved_cols), it)
+        frontier = nxt.filter(F.col("_imp")).drop("_imp")
+        return (nxt.drop("_imp"), frontier), {}, frontier.isEmpty()
+
+    dist, _ = loop.run(max_iterations, init, None, superstep)
+    stats = {"iterations": loop.ran, "computeMillis": loop.millis(), "history": loop.history}
     out_cols = [F.col("id").cast("long").alias("id"), F.col("distance")]
     if with_predecessor:
         out_cols.append(F.col("pred").cast("long").alias("pred"))
@@ -161,10 +152,9 @@ def delta_stepping(
     if delta is not None and delta <= 0:
         raise ValueError(f"delta must be > 0, got {delta}")
     spark = graph.edges.sparkSession
-    t0 = time.time()
-    edges = _prep_edges(graph, direction)
+    loop = SuperstepDriver(spark, termination=termination)
     n_parts = spark.sparkContext.defaultParallelism
-    edges = edges.repartition(n_parts, "src").persist()
+    edges = loop.persist(_prep_edges(graph, direction).repartition(n_parts, "src"))
     if delta is None:
         w = edges.agg(
             F.avg("weight").alias("mean_w"),
@@ -175,17 +165,10 @@ def delta_stepping(
             float(w.mean_w or 1.0) * float(w.avg_deg or 1.0),
             float(w.max_w or 1.0) / 128.0,
         )
-    light = edges.filter(F.col("weight") <= delta).persist()
-    heavy = edges.filter(F.col("weight") > delta).persist()
+    light = loop.persist(edges.filter(F.col("weight") <= delta))
+    heavy = loop.persist(edges.filter(F.col("weight") > delta))
     light.count()
     has_heavy = heavy.count() > 0
-
-    dist = graph.nodes.select(
-        F.col("id").cast(graph.id_type()).alias("id"),
-        F.when(F.col("id") == source, 0.0).otherwise(F.lit(INF)).alias("distance"),
-    )
-    rounds = 0
-    buckets_processed = 0
 
     def relax(dist: DataFrame, frontier: DataFrame, edge_set: DataFrame, hi: float) -> DataFrame:
         """One relaxation sweep; `_band` marks rows IMPROVED into the
@@ -205,57 +188,61 @@ def delta_stepping(
             ((nd < F.col("distance")) & (nd < hi)).alias("_band"),
         )
 
-    with adaptive_disabled(spark):
-        # truncate_plan on the distance state: each relax references
-        # dist AND the band (itself from the previous relax) — the
-        # diamond whose checkpoint-origin chain otherwise grows
-        # exponentially with relax rounds (plans/checkpointing.
-        # truncate_plan)
-        dist = truncate_plan(dist)
-        bucket = 0  # the source sits at distance 0, so bucket 0 is
-        # non-empty by construction; every later bucket index comes
-        # from an actual minimum, so empty-bucket probing never happens
+    def init():
+        dist = graph.nodes.select(
+            F.col("id").cast(graph.id_type()).alias("id"),
+            F.when(F.col("id") == source, 0.0).otherwise(F.lit(INF)).alias("distance"),
+        )
+        # the source sits at distance 0, so bucket 0 is non-empty by
+        # construction; every later bucket index comes from an actual
+        # minimum, so empty-bucket probing never happens
+        return loop.cache.step(dist, 0), 0
+
+    # one superstep per bucket. Every materialization goes through the
+    # cache (origin-severed: each relax references dist AND the band,
+    # itself from the previous relax — the diamond of plans/
+    # checkpointing.truncate_plan); there is one dist chain and each
+    # relax reads only the latest state and filters of it, so releasing
+    # the previous state is safe
+    def superstep(n: int, st):
+        dist, bucket = st
+        lo, hi = bucket * delta, (bucket + 1) * delta
+        band = dist.filter((F.col("distance") >= lo) & (F.col("distance") < hi))
+        rounds = 0
+        # settle the band over light edges
         while True:
-            check_termination(spark, termination, bucket)
-            buckets_processed += 1
-            lo, hi = bucket * delta, (bucket + 1) * delta
-            # band needs no checkpoint of its own: it is a filter over
-            # the already-severed `dist` (and, inside the loop, over the
-            # severed `merged`), so the relax diamond only ever
-            # references one shallow LogicalRDD twice
-            band = dist.filter((F.col("distance") >= lo) & (F.col("distance") < hi))
-            # settle the band over light edges
-            while True:
-                rounds += 1
-                merged = truncate_plan(relax(dist, band, light, hi))
-                new_band = merged.filter(F.col("_band")).select("id", "distance")
-                dist = merged.drop("_band")
-                if new_band.isEmpty():
-                    break
-                band = new_band
-            # heavy edges once for the settled band (skipped outright
-            # when no edge exceeds delta — e.g. unit-weight graphs —
-            # saving a full materialization per bucket)
-            if has_heavy:
-                settled = dist.filter((F.col("distance") >= lo) & (F.col("distance") < hi))
-                rounds += 1
-                dist = truncate_plan(relax(dist, settled, heavy, hi).drop("_band"))
-            # jump straight to the next non-empty bucket (one agg job),
-            # or stop — replaces the old probe-every-bucket loop that
-            # paid a checkpoint + isEmpty + agg per EMPTY bucket
-            nxt = dist.filter((F.col("distance") >= hi) & (F.col("distance") < INF)).agg(
-                F.min("distance")
-            ).collect()[0][0]
-            if nxt is None:
+            rounds += 1
+            merged = loop.cache.step(relax(dist, band, light, hi), n)
+            band = merged.filter(F.col("_band")).select("id", "distance")
+            dist = merged.drop("_band")
+            if band.isEmpty():
                 break
-            bucket = int(nxt // delta)
-    for df in (edges, light, heavy):
-        df.unpersist()
+        # heavy edges once for the settled band (skipped outright
+        # when no edge exceeds delta — e.g. unit-weight graphs —
+        # saving a full materialization per bucket)
+        if has_heavy:
+            settled = dist.filter((F.col("distance") >= lo) & (F.col("distance") < hi))
+            rounds += 1
+            dist = loop.cache.step(relax(dist, settled, heavy, hi).drop("_band"), n)
+        # jump straight to the next non-empty bucket (one agg job),
+        # or stop — replaces the old probe-every-bucket loop that
+        # paid a checkpoint + isEmpty + agg per EMPTY bucket
+        nxt = dist.filter((F.col("distance") >= hi) & (F.col("distance") < INF)).agg(
+            F.min("distance")
+        ).collect()[0][0]
+        fields = {"bucket": bucket, "relaxRounds": rounds}
+        if nxt is None:
+            return (dist, bucket), fields, True
+        return (dist, int(nxt // delta)), fields, False
+
+    # every processed bucket settles at least one node
+    dist, _ = loop.run(max(1, graph.node_count()), init, None, superstep)
     stats = {
-        "relaxRounds": rounds,
-        "buckets": buckets_processed,
+        "relaxRounds": sum(h["relaxRounds"] for h in loop.history),
+        "buckets": loop.ran,
         "delta": delta,
-        "computeMillis": int((time.time() - t0) * 1000),
+        "computeMillis": loop.millis(),
+        "history": loop.history,
     }
     return dist.select(F.col("id").cast("long").alias("id"), "distance"), stats
 
@@ -301,7 +288,7 @@ def all_shortest_paths_weighted(
     # final (checkpointed) distance frame — collected in a list and
     # unioned once, never re-materializing the O(V²) accumulator per wave
     result_frames: list[DataFrame] = []
-    with adaptive_disabled(spark):
+    with releasing(spark, [edges]), adaptive_disabled(spark):
         for wv in range(n_waves):
             wave_src = (
                 nodes.filter(F.col("_wave") == wv).select("id")
@@ -352,13 +339,9 @@ def all_shortest_paths_weighted(
                     "distance",
                 )
             )
-    edges.unpersist()
     if not result_frames:
         return spark.createDataFrame([], "source long, target long, distance double")
-    out = result_frames[0]
-    for f in result_frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return reduce(DataFrame.unionByName, result_frames)
 
 
 def shortest_path(

@@ -75,9 +75,30 @@ def wcc(
     still moving at round 20) — the jump join adds ~30-40% to a
     superstep but buys O(log) total rounds, a clear win.
     """
-    spark = graph.edges.sparkSession
-    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
+    loop = SuperstepDriver(
+        graph.edges.sparkSession, checkpoint_dir, checkpoint_every, termination
+    )
+    comp = _min_labels(
+        loop, graph, threshold, max_iterations, assume_deduped, resume, num_partitions
+    )
+    stats = {
+        "iterations": loop.ran,
+        "didConverge": loop.stopped,
+        "computeMillis": loop.millis(),
+        "history": loop.history,
+    }
+    return comp, stats
 
+
+def _min_labels(
+    loop: SuperstepDriver, graph: Graph, threshold: float | None = None, max_iterations: int = 100,
+    assume_deduped: bool = False, resume: bool = False, num_partitions: int | None = None,
+) -> DataFrame:
+    """`wcc`'s components(id, component), run by the caller's `loop`:
+    its cache holds the returned state, so a caller that consumes the
+    labels inside its own superstep (MST's contraction) can release
+    them with `loop.cache.release()`."""
+    spark = loop.spark
     edges = graph.edges
     if threshold is not None:
         # ref GraphUnionFind.java:82-99 — union only above-threshold edges
@@ -107,7 +128,7 @@ def wcc(
     # property; previously `distinct()` left sym partitioned by
     # (src, dst), which the per-round join on `src` re-shuffled in full)
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    sym = sym.repartition(n_parts, "src").persist()
+    sym = loop.persist(sym.repartition(n_parts, "src"))
     sym.count()
 
     def init():
@@ -181,19 +202,10 @@ def wcc(
         )
 
     comp, _ = loop.run(max_iterations, init, restore, superstep, resume)
-
-    stats = {
-        "iterations": loop.ran,
-        "didConverge": loop.stopped,
-        "computeMillis": loop.millis(),
-        "history": loop.history,
-    }
-    sym.unpersist()
-    comp = comp.select(
+    return comp.select(
         F.col("id").cast("long").alias("id"),
         F.col("component").cast("long").alias("component"),
     )
-    return comp, stats
 
 
 def component_stats(components: DataFrame) -> tuple[int, DataFrame]:

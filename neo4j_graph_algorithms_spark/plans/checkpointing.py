@@ -20,8 +20,13 @@ solves both:
   number, kernel metrics, and *per-partition* lineage metrics (rows +
   partition-local convergence); a resume re-counts the re-read state
   and refuses a snapshot whose row count does not match.
-- `SuperstepDriver` — the loop of every resumable kernel (PageRank,
-  WCC, label propagation, k-core, HyperANF, random walks), written once.
+- `SuperstepDriver` — the loop of every driver kernel (PageRank, WCC,
+  label propagation, k-core, HyperANF and random walks, which resume;
+  Louvain, shortest paths, delta-stepping and MST, which do not),
+  written once. Its `persist` registers a kernel's stationary tables
+  (the cached edge frames), which `run` unpersists on every exit path;
+  a cancelled run also releases its local checkpoints (`releasing`,
+  which the loops outside the driver use too).
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ import warnings
 from contextlib import contextmanager
 from typing import Any, Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -168,24 +174,47 @@ def _release(ck: DataFrame) -> None:
     """Drop the blocks of a localCheckpoint. `DataFrame.unpersist`
     is a no-op on it: the checkpointed RDD behind the frame's LogicalRDD
     was never registered with the CacheManager, so without this its
-    blocks stay until driver GC. Blocking, so the memory is free before
-    the next superstep.
-
-    Spark warns on every such call that the RDD "cannot be recomputed
-    after unpersisting", which is the point here; the first call raises
-    the logger that warning comes from (and only that one) to ERROR."""
-    global _RELEASE_QUIET
+    blocks stay until driver GC."""
     try:
-        rdd = ck._jdf.queryExecution().analyzed().rdd()
-        if not _RELEASE_QUIET:
-            log4j = ck._sc._jvm.org.apache.logging.log4j
-            log4j.core.config.Configurator.setLevel(
-                "org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR
-            )
-            _RELEASE_QUIET = True
-        rdd.unpersist(True)
+        _drop(ck._jdf.queryExecution().analyzed().rdd())
     except (AttributeError, TypeError, Py4JError):  # non-classic session
         ck.unpersist()
+
+
+def _drop(rdd) -> None:
+    """Unpersist a JVM RDD, blocking, so the memory is free before the
+    next superstep. Spark warns on each such call on a local checkpoint
+    that it "cannot be recomputed after unpersisting", the point here:
+    the first call raises that warning's logger (only it) to ERROR."""
+    global _RELEASE_QUIET
+    if not _RELEASE_QUIET:
+        log4j = SparkContext._jvm.org.apache.logging.log4j
+        log4j.core.config.Configurator.setLevel(
+            "org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR
+        )
+        _RELEASE_QUIET = True
+    rdd.unpersist(True)
+
+
+@contextmanager
+def releasing(spark: SparkSession, tables: list[DataFrame]):
+    """Unpersist `tables` (a loop's cached edge frames) when the block
+    exits. When it raises (a cancelled run), also release every local
+    checkpoint made inside it: no result reads the per-round states of
+    a loop that did not finish. Like `adaptive_disabled`, this assumes
+    one loop runs in a session at a time."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        yield
+    except BaseException:
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in before and rdd.rdd().isLocallyCheckpointed():
+                _drop(rdd)
+        raise
+    finally:
+        for df in tables:
+            df.unpersist()
 
 
 @contextmanager
@@ -275,10 +304,16 @@ class IterationCache:
             # cost degrades 0.5s → tens of seconds within 8 iterations)
             held = df.localCheckpoint(eager=True)
             out = _sever(held)
-        if self._held is not None:
-            _release(self._held)
+        self.release()
         self._held = held
         return out
+
+    def release(self) -> None:
+        """Drop the blocks of the live in-memory state; the frame the
+        last `step` returned must not be read again."""
+        if self._held is not None:
+            _release(self._held)
+            self._held = None
 
     def latest(self) -> tuple[int, DataFrame, dict] | None:
         """Most recent complete durable checkpoint, or None. Raises
@@ -317,16 +352,19 @@ class IterationCache:
 
 
 class SuperstepDriver:
-    """The superstep loop of a resumable kernel.
+    """The superstep loop of every driver kernel.
 
     Create it when the kernel starts (it also times the whole call,
-    `millis`), then hand `run` the kernel's own parts: init state,
+    `millis`), register the kernel's stationary tables with `persist`,
+    then hand `run` the kernel's own parts: init state,
     restore-from-snapshot, and step body with its convergence test.
     The driver owns the `IterationCache` (`cache`, which the step body
     materializes through), resume from the latest snapshot, AQE off,
     one `check_termination` per superstep (the reference checks one
-    `TerminationFlag` in every kernel loop), wall timing, and the
-    per-superstep record appended to `history`::
+    `TerminationFlag` in every kernel loop), wall timing, the release
+    of the registered tables when `run` exits (`releasing`: also the
+    loop's local checkpoints when it raises, `TerminatedError`
+    included), and the per-superstep record appended to `history`::
 
         {"superstep": n, "secs": wall seconds, "durable": wrote a snapshot,
          **the fields the step body returned}
@@ -348,13 +386,22 @@ class SuperstepDriver:
         self.history: list[dict] = []
         self.ran = 0
         self.stopped = False
+        self._tables: list[DataFrame] = []
         self._t0 = time.time()
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """`df.persist()`, unpersisted when `run` exits: for the tables
+        every superstep reads (edge frames), which the kernel must not
+        read after `run` returns."""
+        df = df.persist()
+        self._tables.append(df)
+        return df
 
     def run(
         self,
         last: int,
         init: Callable[[], Any],
-        restore: Callable[[DataFrame, dict], Any],
+        restore: Callable[[DataFrame, dict], Any] | None,
         step: Callable[[int, Any], tuple[Any, dict, bool]],
         resume: bool = False,
     ) -> Any:
@@ -369,29 +416,30 @@ class SuperstepDriver:
           ``fields`` join its history record, a truthy ``stop`` ends the
           loop.
         """
-        latest = self.cache.latest() if resume else None
-        if latest is None:
-            first, state = 1, init()
-        else:
-            done, df, meta = latest
-            first, state = done + 1, restore(df, meta)
-        self.ran = first - 1
-        with adaptive_disabled(self.spark):
-            for n in range(first, last + 1):
-                check_termination(self.spark, self.termination, n)
-                t = time.time()
-                state, fields, stop = step(n, state)
-                self.history.append({
-                    "superstep": n,
-                    "secs": round(time.time() - t, 2),
-                    "durable": self.cache.last_durable == n,
-                    **fields,
-                })
-                self.ran = n
-                if stop:
-                    self.stopped = True
-                    break
-        return state
+        with releasing(self.spark, self._tables):
+            latest = self.cache.latest() if resume else None
+            if latest is None:
+                first, state = 1, init()
+            else:
+                done, df, meta = latest
+                first, state = done + 1, restore(df, meta)
+            self.ran = first - 1
+            with adaptive_disabled(self.spark):
+                for n in range(first, last + 1):
+                    check_termination(self.spark, self.termination, n)
+                    t = time.time()
+                    state, fields, stop = step(n, state)
+                    self.history.append({
+                        "superstep": n,
+                        "secs": round(time.time() - t, 2),
+                        "durable": self.cache.last_durable == n,
+                        **fields,
+                    })
+                    self.ran = n
+                    if stop:
+                        self.stopped = True
+                        break
+            return state
 
     def millis(self) -> int:
         """Milliseconds since the driver was created."""

@@ -1,7 +1,7 @@
 """Durable superstep checkpoints: per-partition lineage metrics in
 meta.json, bit-identical resume from the latest snapshot, refusal of a
-damaged snapshot, release of in-memory states, and kill-and-resume of
-every kernel the superstep driver runs."""
+damaged snapshot, release of in-memory states, kill-and-resume of every
+resumable kernel, and cancellation of the kernels that do not resume."""
 
 import json
 import os
@@ -10,15 +10,31 @@ import pytest
 from pyspark.sql import functions as F
 
 from neo4j_graph_algorithms_spark.graph import Graph
+from neo4j_graph_algorithms_spark.operators.betweenness import betweenness
 from neo4j_graph_algorithms_spark.operators.kcore import core_decomposition
 from neo4j_graph_algorithms_spark.operators.label_propagation import label_propagation
+from neo4j_graph_algorithms_spark.operators.louvain import louvain
+from neo4j_graph_algorithms_spark.operators.msbfs import ms_bfs_depths
+from neo4j_graph_algorithms_spark.operators.mst import mst
 from neo4j_graph_algorithms_spark.operators.neighborhood import neighborhood_function
 from neo4j_graph_algorithms_spark.operators.pagerank import pagerank
 from neo4j_graph_algorithms_spark.operators.random_walk import random_walks
+from neo4j_graph_algorithms_spark.operators.scc import scc
+from neo4j_graph_algorithms_spark.operators.shortest_path import (
+    all_shortest_paths_weighted, delta_stepping, shortest_paths)
 from neo4j_graph_algorithms_spark.operators.wcc import wcc
 from neo4j_graph_algorithms_spark.plans.checkpointing import IterationCache, TerminatedError
 
 EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (1, 3)]
+# 300-cycle with chords into node 0: Louvain does not settle within 5
+# iterations on it, and shortest paths from 0 take 299 relaxations
+CYCLE = [(i, (i + 1) % 300) for i in range(300)] + [(i, 0) for i in range(1, 300, 7)]
+# 64-node path, edge (i, i+1) weighted by its level 1 + ctz(i+1) (the
+# lowest set bit's length): Borůvka merges pairs, then pairs of pairs,
+# ... — 6 rounds, and a 7th that finds no cross edge
+LEVEL_PATH = [(i, i + 1, float(((i + 1) & -(i + 1)).bit_length())) for i in range(63)]
+# delta-stepping with delta=10 settles one node per bucket
+TEN_PATH = [(i, i + 1, 10.0) for i in range(7)]
 
 
 def _ranks_dict(df):
@@ -95,15 +111,15 @@ def test_iteration_cache_releases_previous_state(spark):
 
 
 def test_kernels_release_per_step_checkpoints(spark):
-    """PageRank local-checkpoints each pushed delta frame, and HyperANF
-    each depth's sketches; both release them once consumed, so neither
+    """PageRank local-checkpoints each pushed delta frame, HyperANF each
+    depth's sketches, and Louvain, shortest paths, delta-stepping and
+    MST each superstep's state; all release them once consumed, so none
     leaves more cached RDDs behind than a WCC run on the same graph
-    (its returned state)."""
-    g = Graph.from_edge_list(
-        spark, [(i, (i + 1) % 300) for i in range(300)] + [(i, 0) for i in range(1, 300, 7)],
-        n_nodes=300,
-    )
-    g.node_count(), g.id_type()  # memoized graph facts, outside the counts
+    (its returned state), over at least 5 supersteps each."""
+    g = Graph.from_edge_list(spark, CYCLE, n_nodes=300)
+    level, ten = Graph.from_edge_list(spark, LEVEL_PATH), Graph.from_edge_list(spark, TEN_PATH)
+    for graph in (g, level, ten):
+        graph.node_count(), graph.id_type()  # memoized graph facts, outside the counts
 
     def added(run):
         """(run's result, cached RDDs it left that were not there before);
@@ -117,6 +133,16 @@ def test_kernels_release_per_step_checkpoints(spark):
     _anf_out, n_anf = added(lambda: neighborhood_function(g, max_depth=6, p=6))
     assert pr_out[1]["iterations"] == 10
     assert n_pagerank <= bound and n_anf <= bound, (n_pagerank, n_anf, bound)
+    driver_runs = {
+        "louvain": (lambda: louvain(g, iterations=5), "ranIterations"),
+        "shortest_paths": (lambda: shortest_paths(g, 0, max_iterations=6), "iterations"),
+        "delta_stepping": (lambda: delta_stepping(ten, 0, delta=10.0), "buckets"),
+        "mst": (lambda: mst(level), "rounds"),
+    }
+    for name, (run, key) in driver_runs.items():
+        (_out, stats), n = added(run)
+        assert stats[key] >= 5, (name, stats[key])
+        assert n <= bound, (name, n, bound)
 
 
 def test_resume_refuses_snapshot_with_missing_part(spark, tmp_path):
@@ -220,8 +246,8 @@ def test_kill_and_resume(spark, tmp_path, kernel):
     """A run stopped through its termination callable after k supersteps
     under a durable cadence, then resumed, equals an uninterrupted run;
     the resumed history starts right after the last snapshot, and the
-    callable ran once per superstep. A killed PageRank run leaves no
-    RDD persisted."""
+    callable ran once per superstep. A killed run leaves no RDD
+    persisted."""
     edges, n_nodes, run, k, every, rel = KILL_RESUME[kernel]
     g = Graph.from_edge_list(spark, edges, n_nodes=n_nodes)
     want, full = run(g)
@@ -233,8 +259,7 @@ def test_kill_and_resume(spark, tmp_path, kernel):
     with pytest.raises(TerminatedError):
         run(g, checkpoint_dir=ckpt, checkpoint_every=every, termination=killed)
     assert killed.calls == k + 1
-    if kernel == "pagerank":
-        assert _persistent_rdd_ids(spark) <= before
+    assert _persistent_rdd_ids(spark) <= before
 
     checks = _Checks()
     got, stats = run(
@@ -246,3 +271,84 @@ def test_kill_and_resume(spark, tmp_path, kernel):
     for key in ("iterations", "ranIterations", "rounds", "depths_run", "steps_run",
                 "didConverge"):
         assert stats.get(key) == full.get(key), key
+
+
+# cancellation of the kernels that do not resume: kernel -> (edges,
+# run(graph, termination), supersteps before the stop, the stats key
+# counting supersteps for the four that run on the superstep driver)
+def _louvain(g, t):
+    return louvain(g, iterations=5, termination=t)
+
+
+def _sssp(g, t):
+    return shortest_paths(g, 0, max_iterations=6, termination=t)
+
+
+def _delta(g, t):
+    return delta_stepping(g, 0, delta=10.0, termination=t)
+
+
+def _mst(g, t):
+    return mst(g, termination=t)
+
+
+def _scc(g, t):
+    return scc(g, termination=t)
+
+
+def _msbfs(g, t):
+    return ms_bfs_depths(g, termination=t).collect(), {}
+
+
+def _betweenness(g, t):
+    return betweenness(g, termination=t)
+
+
+def _apsp(g, t):
+    return all_shortest_paths_weighted(g, termination=t).collect(), {}
+
+
+_PATH = [(i, i + 1, 1.0) for i in range(12)]
+CANCEL = {
+    "louvain": (CYCLE, _louvain, 2, "ranIterations"),
+    "shortest_paths": (CYCLE, _sssp, 2, "iterations"),
+    "delta_stepping": (TEN_PATH, _delta, 2, "buckets"),
+    "mst": (LEVEL_PATH, _mst, 2, "rounds"),
+    # a chain of four 3-cycles: one outer round per condensation link
+    "scc": (
+        [(3 * c + i, 3 * c + (i + 1) % 3) for c in range(4) for i in range(3)]
+        + [(3 * c + 2, 3 * c + 3) for c in range(3)],
+        _scc, 1, None,
+    ),
+    "ms_bfs": (_PATH, _msbfs, 2, None),
+    "betweenness": (_PATH, _betweenness, 2, None),
+    "all_shortest_paths_weighted": (_PATH, _apsp, 2, None),
+}
+
+
+@pytest.mark.parametrize("kernel", list(CANCEL))
+def test_cancelled_run_leaves_nothing_persisted(spark, kernel):
+    """A kernel stopped through its termination callable raises
+    `TerminatedError` and leaves no RDD persisted: neither its edge
+    tables nor its per-round checkpoints. On the superstep driver the
+    callable runs once per superstep (k + 1 times for a stop after k),
+    and an uninterrupted run records one history entry per superstep,
+    numbered from 1."""
+    edges, run, k, steps_key = CANCEL[kernel]
+    g = Graph.from_edge_list(spark, edges)
+    g.node_count(), g.id_type()  # memoized graph facts, outside the counts
+    if steps_key is not None:
+        checks = _Checks()
+        _out, stats = run(g, checks)
+        n = stats[steps_key]
+        assert n > k and checks.calls == n
+        assert [h["superstep"] for h in stats["history"]] == list(range(1, n + 1))
+        assert all({"superstep", "secs", "durable"} <= set(h) for h in stats["history"])
+
+    killed = _Checks(stop_after=k)
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(TerminatedError):
+        run(g, killed)
+    assert _persistent_rdd_ids(spark) <= before
+    if steps_key is not None:
+        assert killed.calls == k + 1
