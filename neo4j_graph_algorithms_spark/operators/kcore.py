@@ -90,8 +90,6 @@ def core_decomposition(
     # frontier pruning.
     sym = loop.persist(sym.repartition(n_parts, "nbr"))
     sym_by_node = loop.persist(sym.repartition(n_parts, "node"))
-    sym.count()
-    sym_by_node.count()
 
     def init():
         deg = sym.groupBy("node").agg(F.count("*").alias("core"))

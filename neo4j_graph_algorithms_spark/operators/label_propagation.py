@@ -115,7 +115,6 @@ def label_propagation(
     # the dominant per-superstep volume saving
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
     e = loop.persist(e.repartition(n_parts, "nbr"))
-    e.count()
 
     if node_weight_col is not None and node_weight_col in nodes.columns:
         nw = nodes.select(
@@ -124,7 +123,7 @@ def label_propagation(
         )
     else:
         nw = nodes.select(F.col("id").cast(id_t).alias("id"), F.lit(1.0).alias("nw"))
-    nw = loop.persist(nw)
+    nw = loop.persist(nw, count=False)
 
     w = Window.partitionBy("node").orderBy(F.desc("vote"), F.asc("nbr_label"))
 

@@ -53,7 +53,9 @@ def louvain(
     # join uses (stationary-edges property: only the O(V) community
     # frame moves per round; src-partitioning here was the wrong key
     # and re-shuffled O(E) twice per iteration)
-    sym = loop.persist(undirect(graph.edges, dedup=True).repartition(n_parts, "dst"))
+    sym = loop.persist(
+        undirect(graph.edges, dedup=True).repartition(n_parts, "dst"), count=False
+    )
     selfw = (
         graph.edges.filter(F.col("src") == F.col("dst"))
         .groupBy(F.col("src").alias("id"))
@@ -71,7 +73,6 @@ def louvain(
         .join(selfw, "id", "left")
         .select("id", (F.col("k") + F.coalesce(F.col("sw"), F.lit(0.0))).alias("k"))
     )
-    k.count()
 
     w = Window.partitionBy("id").orderBy(F.desc("gain"), F.asc("community"))
 

@@ -9,8 +9,8 @@ Prim's frontier heap is inherently sequential, so the rebuild uses
 **Borůvka** — the textbook distributed MST, same tree for distinct edge
 weights: each round every component picks its minimum outgoing edge
 (one `groupBy(component).min(struct(weight, …))`), the picked edges
-merge components (contracted by WCC's min-label loop over the picked
-component pairs), repeat until no cross-component edge remains —
+merge components (contracted by pointer jumping over the components'
+picks), repeat until no cross-component edge remains —
 O(log V) rounds, each one superstep of a `SuperstepDriver`. Ties break on
 (weight, src, dst) so the result is deterministic even with duplicate
 weights (a valid MST either way). Matching the reference's start-node
@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import SuperstepDriver, _release
-from .wcc import _min_labels
+from ..plans.checkpointing import IterationCache, SuperstepDriver, _release
 
 
 def mst(
@@ -54,8 +53,6 @@ def mst(
         # already-joined O(E) frame and must shuffle either way)
         .repartition(spark.sparkContext.defaultParallelism, "src")
     )
-    pairs.count()
-    id_t = graph.id_type()
 
     def init() -> DataFrame:
         ids = pairs.select(F.col("src").alias("id")).unionByName(
@@ -65,10 +62,11 @@ def mst(
             ids.distinct().select("id", F.col("id").alias("component")), 0
         )
 
-    # picked tree edges, one checkpointed frame per round: a chosen edge
-    # merges its endpoints' components, so it is never re-picked, and
-    # same-round double-picks collapse in the distinct() on `picks`
+    # per-component picks, one checkpointed frame per round (a chosen
+    # edge merges its endpoints' components, so it is never re-picked),
+    # and the contraction's label maps, released once `comp` is relabelled
     chosen: list[DataFrame] = []
+    merge = IterationCache(spark)
 
     def superstep(n: int, comp: DataFrame):
         cs = comp.select(F.col("id").alias("src"), F.col("component").alias("c_src"))
@@ -84,45 +82,47 @@ def mst(
         views = labeled.select(F.col("c_src").alias("component"), *edge).unionByName(
             labeled.select(F.col("c_dst").alias("component"), *edge)
         )
-        picks = (
-            views.groupBy("component")
-            .agg(F.min(F.struct(*edge)).alias("b"))
-            .select("b.*")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if picks.isEmpty():
+        # a lazy checkpoint: the count is the one job that computes it
+        picks = views.groupBy("component").agg(F.min(F.struct(*edge)).alias("b")).select(
+            "component", "b.*"
+        ).localCheckpoint(eager=False)
+        if picks.count() == 0:
             _release(picks)
             return comp, {}, True
         chosen.append(picks)
-        # contract: WCC over the picked (c_src, c_dst) pairs. Its labels
-        # are min original ids, as the components' are, so relabelling
-        # through them keeps every label a component's min node id. It
-        # runs under a driver of its own (no termination: the callable
-        # is checked once per Borůvka round), released once relabelled.
-        labels = picks.select(F.col("c_src").alias("id")).unionByName(
-            picks.select(F.col("c_dst").alias("id"))
-        ).distinct()
-        contract = SuperstepDriver(spark)
-        merged = _min_labels(contract, Graph(
-            nodes=labels,
-            edges=picks.select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst")),
-            _id_type=id_t,
-        ))
-        nc = merged.select(F.col("id").alias("component"), F.col("component").alias("_nc"))
+        # contract: each component points at the other end of its pick.
+        # Pick weights fall strictly along the pointers, so the only
+        # cycles are mutual picks, whose smaller end becomes the root;
+        # pointer jumping (label := label(label)) then reaches it, with
+        # `prev` riding along for the no-change test
+        c = F.col("component")
+        other = F.when(F.col("c_src") == c, F.col("c_dst")).otherwise(F.col("c_src"))
+        ptr = picks.select("component", other.alias("label"))
+        back = ptr.select(F.col("component").alias("label"), F.col("label").alias("back"))
+        root = (F.col("back") == c) & (c < F.col("label"))
+        m = ptr.join(back, "label").select(
+            "component", F.when(root, c).otherwise(F.col("label")).alias("label")
+        )
+        while True:
+            up = m.select(F.col("component").alias("label"), F.col("label").alias("up"))
+            jump = m.join(up, "label").select("component", F.col("label").alias("prev"), "up")
+            m = merge.step(jump.withColumnRenamed("up", "label"), n)
+            if m.filter(F.col("label") != F.col("prev")).isEmpty():
+                break
+        nc = m.select("component", F.col("label").alias("_nc"))
         comp = loop.cache.step(
             comp.join(nc, "component", "left")
             .select("id", F.coalesce("_nc", "component").alias("component")),
             n,
         )
-        contract.cache.release()
+        merge.release()
         return comp, {}, False
 
     comp = loop.run(max_rounds, init, None, superstep)
 
     edge_cols = ["src", "dst", "weight"]
-    if chosen:
-        tree = reduce(DataFrame.unionByName, [p.select(*edge_cols) for p in chosen])
+    if chosen:  # a mutual pick's two rows collapse in the distinct()
+        tree = reduce(DataFrame.unionByName, [p.select(*edge_cols) for p in chosen]).distinct()
     else:
         tree = spark.createDataFrame([], "src long, dst long, weight double")
     n_components = 1

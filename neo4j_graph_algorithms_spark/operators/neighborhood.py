@@ -185,7 +185,6 @@ def neighborhood_function(
     )
     n_parts = spark.sparkContext.defaultParallelism
     edges = loop.persist(edges.repartition(n_parts, "dst"))
-    edges.count()
 
     if salt_buckets == "auto":
         # the merge groups on the PULL side's src — group size = that

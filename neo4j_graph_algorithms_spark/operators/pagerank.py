@@ -291,8 +291,9 @@ def pagerank(
         """
         return send(cur.select(F.col("id").alias("src"), "delta"))
 
-    # checkpointed delta frames pushed since the last fold (kept here,
-    # not in the loop state, so a cancelled run can still release them)
+    # checkpointed delta frames pushed since the last fold; the last
+    # superstep always folds, and a cancelled run's are released by the
+    # driver with its other local checkpoints
     pending: list[DataFrame] = []
 
     def fold_state(acc: DataFrame) -> DataFrame:
@@ -340,14 +341,9 @@ def pagerank(
         id_t = graph.id_type()
         n_parts = num_partitions or spark.sparkContext.defaultParallelism
         edges_inv = loop.persist(_edge_table(graph, id_t, n_parts, weighted, article))
-        edges_inv.count()
-        try:
-            acc, _ = loop.run(
-                max_iterations, init, lambda df, _meta: split(df), superstep, resume
-            )
-        finally:  # a cancelled run must not leave its pushed frames cached
-            for p in pending:
-                _release(p)
+        acc, _ = loop.run(
+            max_iterations, init, lambda df, _meta: split(df), superstep, resume
+        )
         n_nodes = graph.node_count()
 
     result = acc.select(F.col("id").cast("long").alias("id"), "rank")

@@ -93,9 +93,9 @@ def random_walks(
     # join (deg shares lineage with adj; attribute refs would trip the
     # ambiguous-self-join analyzer when the step joins adj again)
     deg = loop.persist(
-        adj.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed("src", "node")
+        adj.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed("src", "node"),
+        count=False,
     )
-    adj.count()
 
     def init():
         src_nodes = (sources or graph.nodes.select("id")).select(

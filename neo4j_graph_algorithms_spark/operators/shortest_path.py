@@ -25,6 +25,7 @@ Reference surface:
 
 from __future__ import annotations
 
+import sys
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -71,7 +72,6 @@ def shortest_paths(
     loop = SuperstepDriver(spark, termination=termination)
     n_parts = spark.sparkContext.defaultParallelism
     edges = loop.persist(_prep_edges(graph, direction).repartition(n_parts, "src"))
-    edges.count()
     id_t = graph.id_type()
 
     def init():
@@ -154,7 +154,9 @@ def delta_stepping(
     spark = graph.edges.sparkSession
     loop = SuperstepDriver(spark, termination=termination)
     n_parts = spark.sparkContext.defaultParallelism
-    edges = loop.persist(_prep_edges(graph, direction).repartition(n_parts, "src"))
+    edges = loop.persist(
+        _prep_edges(graph, direction).repartition(n_parts, "src"), count=False
+    )
     if delta is None:
         w = edges.agg(
             F.avg("weight").alias("mean_w"),
@@ -166,8 +168,7 @@ def delta_stepping(
             float(w.max_w or 1.0) / 128.0,
         )
     light = loop.persist(edges.filter(F.col("weight") <= delta))
-    heavy = loop.persist(edges.filter(F.col("weight") > delta))
-    light.count()
+    heavy = loop.persist(edges.filter(F.col("weight") > delta), count=False)
     has_heavy = heavy.count() > 0
 
     def relax(dist: DataFrame, frontier: DataFrame, edge_set: DataFrame, hi: float) -> DataFrame:
@@ -235,8 +236,9 @@ def delta_stepping(
             return (dist, bucket), fields, True
         return (dist, int(nxt // delta)), fields, False
 
-    # every processed bucket settles at least one node
-    dist, _ = loop.run(max(1, graph.node_count()), init, None, superstep)
+    # no bound: every processed bucket settles at least one node, so the
+    # empty-next-bucket stop ends the loop within node_count() buckets
+    dist, _ = loop.run(sys.maxsize, init, None, superstep)
     stats = {
         "relaxRounds": sum(h["relaxRounds"] for h in loop.history),
         "buckets": loop.ran,

@@ -75,30 +75,9 @@ def wcc(
     still moving at round 20) — the jump join adds ~30-40% to a
     superstep but buys O(log) total rounds, a clear win.
     """
-    loop = SuperstepDriver(
-        graph.edges.sparkSession, checkpoint_dir, checkpoint_every, termination
-    )
-    comp = _min_labels(
-        loop, graph, threshold, max_iterations, assume_deduped, resume, num_partitions
-    )
-    stats = {
-        "iterations": loop.ran,
-        "didConverge": loop.stopped,
-        "computeMillis": loop.millis(),
-        "history": loop.history,
-    }
-    return comp, stats
+    spark = graph.edges.sparkSession
+    loop = SuperstepDriver(spark, checkpoint_dir, checkpoint_every, termination)
 
-
-def _min_labels(
-    loop: SuperstepDriver, graph: Graph, threshold: float | None = None, max_iterations: int = 100,
-    assume_deduped: bool = False, resume: bool = False, num_partitions: int | None = None,
-) -> DataFrame:
-    """`wcc`'s components(id, component), run by the caller's `loop`:
-    its cache holds the returned state, so a caller that consumes the
-    labels inside its own superstep (MST's contraction) can release
-    them with `loop.cache.release()`."""
-    spark = loop.spark
     edges = graph.edges
     if threshold is not None:
         # ref GraphUnionFind.java:82-99 — union only above-threshold edges
@@ -129,7 +108,6 @@ def _min_labels(
     # (src, dst), which the per-round join on `src` re-shuffled in full)
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
     sym = loop.persist(sym.repartition(n_parts, "src"))
-    sym.count()
 
     def init():
         comp = graph.nodes.select(
@@ -202,10 +180,18 @@ def _min_labels(
         )
 
     comp, _ = loop.run(max_iterations, init, restore, superstep, resume)
-    return comp.select(
+
+    stats = {
+        "iterations": loop.ran,
+        "didConverge": loop.stopped,
+        "computeMillis": loop.millis(),
+        "history": loop.history,
+    }
+    comp = comp.select(
         F.col("id").cast("long").alias("id"),
         F.col("component").cast("long").alias("component"),
     )
+    return comp, stats
 
 
 def component_stats(components: DataFrame) -> tuple[int, DataFrame]:

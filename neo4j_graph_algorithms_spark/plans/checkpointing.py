@@ -23,8 +23,8 @@ solves both:
 - `SuperstepDriver` — the loop of every driver kernel (PageRank, WCC,
   label propagation, k-core, HyperANF and random walks, which resume;
   Louvain, shortest paths, delta-stepping and MST, which do not),
-  written once. Its `persist` registers a kernel's stationary tables
-  (the cached edge frames), which `run` unpersists on every exit path;
+  written once. Its `persist` caches and counts a kernel's stationary
+  tables (the edge frames), which `run` unpersists on every exit path;
   a cancelled run also releases its local checkpoints (`releasing`,
   which the loops outside the driver use too).
 """
@@ -389,12 +389,21 @@ class SuperstepDriver:
         self._tables: list[DataFrame] = []
         self._t0 = time.time()
 
-    def persist(self, df: DataFrame) -> DataFrame:
-        """`df.persist()`, unpersisted when `run` exits: for the tables
-        every superstep reads (edge frames), which the kernel must not
-        read after `run` returns."""
+    def persist(self, df: DataFrame, count: bool = True) -> DataFrame:
+        """`df.persist()`, materialized by a `count()` unless `count` is
+        false, and unpersisted when `run` exits: for the tables every
+        superstep reads (edge frames), which the kernel must not read
+        after `run` returns. A count that raises unpersists every table
+        registered so far."""
         df = df.persist()
         self._tables.append(df)
+        if count:
+            try:
+                df.count()
+            except BaseException:
+                for t in self._tables:
+                    t.unpersist()
+                raise
         return df
 
     def run(

@@ -1,8 +1,9 @@
 """MST against a pure-Python Kruskal with the same (weight, src, dst)
 tie-break: the tree edge set, the weight aggregates and
 `effectiveNodeCount`, on seeded random graphs with duplicate weights, a
-level-weighted 64-node path (one Borůvka round per level), and a
-3-component forest, whole and from a start node inside each component."""
+level-weighted 64-node path (one Borůvka round per level), a path with
+chords, and a 3-component forest, whole and from a start node inside
+each component."""
 
 import random
 
@@ -50,6 +51,15 @@ def _random_graph(seed, n=30, m=70):
     return [(rng.randrange(n), rng.randrange(n), float(rng.randint(1, 4))) for _ in range(m)]
 
 
+def _path_chords(seed, n=120):
+    """A path plus a chord from every third node, weights 1..50: merged
+    components meet a cheaper label away from their root node, which an
+    in-place relabelling over the picked node pairs leaves split."""
+    rng = random.Random(seed)
+    path = [(i, i + 1, float(rng.randint(1, 50))) for i in range(n - 1)]
+    return path + [(i, (i + rng.randint(2, 40)) % n, float(rng.randint(1, 50))) for i in range(0, n, 3)]
+
+
 LEVEL_PATH = [(i, i + 1, float(((i + 1) & -(i + 1)).bit_length())) for i in range(63)]
 FOREST = [(s + base, d + base, w) for base in (0, 100, 200) for s, d, w in _random_graph(base, 12, 25)]
 
@@ -58,6 +68,7 @@ CASES = {
     "random_s2": (_random_graph(2), None),
     "random_s3": (_random_graph(3), None),
     "level_path": (LEVEL_PATH, None),
+    "path_chords": (_path_chords(7), None),
     "forest": (FOREST, None),
     **{
         f"forest_start_{base}": (FOREST, next(s for s, d, _ in FOREST if s >= base and s != d))
@@ -71,8 +82,9 @@ def test_mst_matches_kruskal(spark, case):
     edges, start = CASES[case]
     want, n_components = _kruskal(edges, start)
     tree, stats = mst(Graph.from_edge_list(spark, edges), start_node=start)
-    got = {(r.src, r.dst): r.weight for r in tree.collect()}
-    assert got == want
+    rows = tree.collect()
+    got = {(r.src, r.dst): r.weight for r in rows}
+    assert got == want and len(rows) == len(want)  # no edge picked twice
     ws = list(want.values())
     assert stats["weightSum"] == pytest.approx(sum(ws))
     assert stats["weightMin"] == min(ws) and stats["weightMax"] == max(ws)
