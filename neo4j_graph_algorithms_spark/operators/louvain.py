@@ -61,9 +61,10 @@ def louvain(
         .groupBy(F.col("src").alias("id"))
         .agg((F.lit(2.0) * F.sum("weight")).alias("sw"))
     )
-    m2 = (sym.agg(F.sum("weight")).collect()[0][0] or 0.0) + (
-        selfw.agg(F.sum("sw")).collect()[0][0] or 0.0
-    )
+    with loop.setup():
+        m2 = (sym.agg(F.sum("weight")).collect()[0][0] or 0.0) + (
+            selfw.agg(F.sum("sw")).collect()[0][0] or 0.0
+        )
     m2 = m2 or 1.0  # == 2m
     # sym holds both orientations, so weighted degree grouped by dst ==
     # grouped by src — and the dst grouping reuses the cached

@@ -184,19 +184,19 @@ def neighborhood_function(
         F.col("src").cast(id_t).alias("src"), F.col("dst").cast(id_t).alias("dst")
     )
     n_parts = spark.sparkContext.defaultParallelism
+    n_nodes = graph.node_count()
     edges = loop.persist(edges.repartition(n_parts, "dst"))
 
     if salt_buckets == "auto":
         # the merge groups on the PULL side's src — group size = that
         # node's out-count in the oriented frame; one cheap agg over
         # the just-cached edges
-        max_in = edges.groupBy("src").agg(F.count("*").alias("d")).agg(
-            F.max("d")
-        ).collect()[0][0] or 0
+        with loop.setup():
+            max_in = edges.groupBy("src").agg(F.count("*").alias("d")).agg(
+                F.max("d")
+            ).collect()[0][0] or 0
         salt_buckets = _auto_salt_buckets(int(max_in), m)
     salt_buckets = int(salt_buckets)
-
-    n_nodes = graph.node_count()
 
     def total(sketches: DataFrame) -> float:
         """Σ per-node estimates: N(t) including the V self-pairs."""

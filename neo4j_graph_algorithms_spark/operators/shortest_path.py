@@ -157,19 +157,20 @@ def delta_stepping(
     edges = loop.persist(
         _prep_edges(graph, direction).repartition(n_parts, "src"), count=False
     )
-    if delta is None:
-        w = edges.agg(
-            F.avg("weight").alias("mean_w"),
-            F.max("weight").alias("max_w"),
-            (F.count("*") / F.count_distinct("src")).alias("avg_deg"),
-        ).collect()[0]
-        delta = max(
-            float(w.mean_w or 1.0) * float(w.avg_deg or 1.0),
-            float(w.max_w or 1.0) / 128.0,
-        )
-    light = loop.persist(edges.filter(F.col("weight") <= delta))
-    heavy = loop.persist(edges.filter(F.col("weight") > delta), count=False)
-    has_heavy = heavy.count() > 0
+    with loop.setup():
+        if delta is None:
+            w = edges.agg(
+                F.avg("weight").alias("mean_w"),
+                F.max("weight").alias("max_w"),
+                (F.count("*") / F.count_distinct("src")).alias("avg_deg"),
+            ).collect()[0]
+            delta = max(
+                float(w.mean_w or 1.0) * float(w.avg_deg or 1.0),
+                float(w.max_w or 1.0) / 128.0,
+            )
+        light = loop.persist(edges.filter(F.col("weight") <= delta))
+        heavy = loop.persist(edges.filter(F.col("weight") > delta), count=False)
+        has_heavy = heavy.count() > 0
 
     def relax(dist: DataFrame, frontier: DataFrame, edge_set: DataFrame, hi: float) -> DataFrame:
         """One relaxation sweep; `_band` marks rows IMPROVED into the

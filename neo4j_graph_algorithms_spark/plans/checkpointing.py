@@ -24,7 +24,8 @@ solves both:
   label propagation, k-core, HyperANF and random walks, which resume;
   Louvain, shortest paths, delta-stepping and MST, which do not),
   written once. Its `persist` caches and counts a kernel's stationary
-  tables (the edge frames), which `run` unpersists on every exit path;
+  tables (the edge frames), which `run` unpersists on every exit path
+  and `setup` unpersists when a set-up job before `run` raises;
   a cancelled run also releases its local checkpoints (`releasing`,
   which the loops outside the driver use too).
 """
@@ -355,9 +356,10 @@ class SuperstepDriver:
     """The superstep loop of every driver kernel.
 
     Create it when the kernel starts (it also times the whole call,
-    `millis`), register the kernel's stationary tables with `persist`,
-    then hand `run` the kernel's own parts: init state,
-    restore-from-snapshot, and step body with its convergence test.
+    `millis`), register the kernel's stationary tables with `persist`
+    (any other set-up job runs under `setup`), then hand `run` the
+    kernel's own parts: init state, restore-from-snapshot, and step
+    body with its convergence test.
     The driver owns the `IterationCache` (`cache`, which the step body
     materializes through), resume from the latest snapshot, AQE off,
     one `check_termination` per superstep (the reference checks one
@@ -393,18 +395,24 @@ class SuperstepDriver:
         """`df.persist()`, materialized by a `count()` unless `count` is
         false, and unpersisted when `run` exits: for the tables every
         superstep reads (edge frames), which the kernel must not read
-        after `run` returns. A count that raises unpersists every table
-        registered so far."""
+        after `run` returns. The count runs under `setup`."""
         df = df.persist()
         self._tables.append(df)
         if count:
-            try:
+            with self.setup():
                 df.count()
-            except BaseException:
-                for t in self._tables:
-                    t.unpersist()
-                raise
         return df
+
+    @contextmanager
+    def setup(self):
+        """Unpersist every table registered so far if the block raises:
+        for a kernel's set-up jobs between `persist` and `run`."""
+        try:
+            yield
+        except BaseException:
+            for t in self._tables:
+                t.unpersist()
+            raise
 
     def run(
         self,

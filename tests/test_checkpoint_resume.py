@@ -352,3 +352,37 @@ def test_cancelled_run_leaves_nothing_persisted(spark, kernel):
     assert _persistent_rdd_ids(spark) <= before
     if steps_key is not None:
         assert killed.calls == k + 1
+
+
+# kernels with a set-up job between their first `loop.persist` and
+# `loop.run`: the first `collect()` of each call is that job
+SETUP_JOB = {
+    "louvain": lambda g: louvain(g, iterations=2),
+    "delta_stepping": lambda g: delta_stepping(g, 0),
+    "neighborhood": lambda g: neighborhood_function(g, max_depth=2, p=6),
+}
+
+
+@pytest.mark.parametrize("kernel", list(SETUP_JOB))
+def test_failed_setup_job_leaves_nothing_persisted(spark, monkeypatch, kernel):
+    """A set-up job that fails after the kernel cached its edge tables
+    (here: the first `collect()` runs, then raises) unpersists them."""
+    g = Graph.from_edge_list(spark, [(s, d) for s, d, _ in TEN_PATH])
+    g.node_count(), g.id_type()
+    cls = type(g.edges)  # the session's concrete DataFrame class
+    real = cls.collect
+    calls = []
+
+    def failing_collect(self):
+        rows = real(self)
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("set-up job failed")
+        return rows
+
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(cls, "collect", failing_collect)
+    with pytest.raises(RuntimeError, match="set-up job failed"):
+        SETUP_JOB[kernel](g)
+    monkeypatch.undo()
+    assert _persistent_rdd_ids(spark) <= before
